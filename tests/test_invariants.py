@@ -316,6 +316,23 @@ class TestMrShim:
             and rows[0].value == str(emits_per_row * n_rows)
         )
 
+    def test_combiner_runs_one_python_stage_per_map_task(self, spark, sf_dir):
+        """The map-side fold runs inside the map's own mapInPandas: the
+        executed plan holds exactly one MapInPandas, below the shuffle
+        exchange, so each map task starts one Python runner."""
+        import re
+
+        from tinymapreduce_spark.operators.mapreduce import run_mapreduce, wc_map, wc_merge
+        from tinymapreduce_spark.sources.loaders import text_documents
+
+        out = run_mapreduce(text_documents(spark, sf_dir), wc_map, merge=wc_merge)
+        out.collect()
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        final = plan.split("== Initial Plan ==")[0]
+        maps = [m.start() for m in re.finditer(r"\bMapInPandas\b", final)]
+        assert len(maps) == 1, final
+        assert final.find("Exchange hashpartitioning") < maps[0], final
+
     def test_reducef_and_merge_are_exclusive(self, spark):
         from tinymapreduce_spark.operators.mapreduce import (
             run_mapreduce,

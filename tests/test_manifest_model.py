@@ -12,6 +12,7 @@ exactly, version history must stay readable, and the stats invariant
 
 from __future__ import annotations
 
+import os
 import random
 
 import pytest
@@ -687,6 +688,66 @@ def test_distributed_bloom_probe_matches_chunked_planner(
             sorted(base[1]),
         )
         monkeypatch.undo()
+
+
+def test_distributed_bloom_probe_string_keys_match_chunked(
+    spark, tmp_path, monkeypatch
+):
+    """String keys in the distributed probe compare in Python (code-point
+    order) where the chunked probe compares in Spark (binary UTF-8
+    order). Multi-byte keys at, just inside and just outside each file's
+    [min, max] must classify files identically on both paths — including
+    a BMP character above the surrogate range (U+FF21) against a 4-byte
+    one (U+1F600), whose order UTF-16 would reverse."""
+    from pyspark.sql import functions as F
+
+    from tinymapreduce_spark.sources import manifest_sink as ms
+
+    stems = ["a", "z", "\u00e9", "\u00ff", "\u0100", "\u4e2d", "\uff21", "\U0001f600"]
+    keys = [f"{s}{i:02d}" for s in stems for i in range(0, 40, 2)]
+    t = ms.ManifestTable(str(tmp_path / "strbloom"))
+    t.publish(
+        spark.createDataFrame([(k, i) for i, k in enumerate(keys)], "k string, v long")
+        .repartitionByRange(6, "k"),
+        snapshot_id="init",
+        stats_cols=["k"],
+        bloom_cols=["k"],
+    )
+    snap = t.snapshot(t.current_version())
+    bounds = [(snap.stats[f]["min"]["k"], snap.stats[f]["max"]["k"]) for f in snap.files]
+    assert len(bounds) == 6
+    # present bounds of every other file; absent keys just outside and
+    # just inside every file's bounds; absent keys deep inside ranges
+    probes = {b for lo_hi in bounds[::2] for b in lo_hi}
+    for lo, hi in bounds:
+        probes |= {lo[:-1], lo[:-1] + "\U0001f600", hi + "\u00e9", hi[:-1] + "1"}
+    probes |= {f"{s}05" for s in stems}
+    keys_df = spark.createDataFrame([(k,) for k in sorted(probes)], "k string")
+    key_lo, key_hi = min(probes), max(probes)
+
+    chunked = ms._split_files_by_key_frame(spark, snap, "k", keys_df, key_lo, key_hi)
+    monkeypatch.setattr(ms, "MERGE_PLAN_CHUNK", 2)
+    real_probe, ran = ms._probe_blooms_distributed, []
+    monkeypatch.setattr(
+        ms,
+        "_probe_blooms_distributed",
+        lambda *a: ran.append(real_probe(*a)) or ran[-1],
+    )
+    dist = ms._split_files_by_key_frame(spark, snap, "k", keys_df, key_lo, key_hi)
+    assert ran and ran[0] is not None, "the distributed probe did not run"
+    assert (sorted(chunked[0]), sorted(chunked[1])) == (sorted(dist[0]), sorted(dist[1]))
+
+    # never a false negative: every file hosting a probed key is a candidate
+    hosting = {
+        r["f"]
+        for r in t.read(spark)
+        .where(F.col("k").isin(sorted(probes)))
+        .select(F.input_file_name().alias("f"))
+        .collect()
+    }
+    cands = set(dist[1])
+    assert all(any(h.endswith(os.path.basename(c)) for c in cands) for h in hosting)
+    assert dist[0], "probe keys prune nothing: the test would not see a divergence"
 
 
 def test_distributed_probe_short_sidecar_degrades_to_keep(

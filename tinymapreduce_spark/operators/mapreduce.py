@@ -4,7 +4,9 @@ is one UDTF (Map) + one UDAF (Reduce) over (key, value) string pairs
 
 ``run_mapreduce`` reproduces that contract on Spark:
 
-  map stage    -> ``mapInPandas``   (Arrow-batched UDTF: 0..n KV pairs out)
+  map stage    -> ``mapInPandas``   (Arrow-batched UDTF: 0..n KV pairs out;
+                  with ``merge`` the same task also folds them to partials,
+                  at most one Arrow batch of pairs per fold)
   shuffle      -> ``repartition(R, "key")``   (D2; Murmur3 replaces FNV-1a —
                   output-equivalent, see functions/hashing.py)
   sort+group   -> ``applyInPandas`` grouped map (D3+D4; Spark sorts/groups
@@ -26,11 +28,14 @@ from __future__ import annotations
 
 import sys
 from collections.abc import Callable, Iterable, Iterator
+from itertools import islice
 
 import pandas as pd
 
 from pyspark import cloudpickle
 from pyspark.sql import DataFrame
+
+from tinymapreduce_spark.pyworker import prime_worker
 
 # UDFs defined here must work even when the executor Python can't import
 # this package (the driver may run us via sys.path, which workers don't
@@ -66,48 +71,60 @@ def run_mapreduce(
     Skew posture: with plain ``reducef`` every value of one key
     materializes in one Arrow batch (the reference has the same shape —
     one reduce call sees all values). When the reduce is an associative
-    fold, pass ``merge`` instead: each map-side Arrow batch pre-folds
-    its keys to ONE partial before the shuffle, so a hot key ships
-    ~one value per map batch rather than one per occurrence, and the
-    final fold sees a bounded list. ``merge`` replaces ``reducef`` at
-    both levels (a combiner must be merge-compatible with itself, which
-    the raw reference signature — e.g. wc's len(values) — is not).
+    fold, pass ``merge`` instead: the map task itself pre-folds what it
+    emits to ONE partial per key before the shuffle, so a hot key ships
+    ~one value per slice rather than one per occurrence, and the final
+    fold sees a bounded list. ``merge`` replaces ``reducef`` at both
+    levels (a combiner must be merge-compatible with itself, which the
+    raw reference signature — e.g. wc's len(values) — is not).
+
+    Batch bound: a map-side fold sees at most one Arrow batch of emitted
+    pairs (``spark.sql.execution.arrow.maxRecordsPerBatch``, read from the
+    session when the job is built); a task whose map output is longer
+    folds it in slices of that many pairs (without ``merge``, the map
+    ships its pairs in batches of the same size). The fold runs inside
+    the map's ``mapInPandas``, so a task starts one Python runner, not
+    one for the map and one for a chained combine.
     """
     if (reducef is None) == (merge is None):
         raise ValueError("exactly one of reducef / merge is required")
 
-    def map_stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    # One Arrow batch of emitted pairs: the most a map-side fold may see
+    # (<= 0 means Spark's Arrow batches are unbounded, and so is a fold).
+    batch_cap = int(df.sparkSession.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    cap = batch_cap if batch_cap > 0 else None
+
+    def emitted(batches: Iterator[pd.DataFrame]) -> Iterator[tuple[str, str]]:
         for pdf in batches:
-            out_k: list[str] = []
-            out_v: list[str] = []
             for k, v in zip(pdf[key_col], pdf[value_col]):
-                for ok, ov in mapf(k, v):
-                    out_k.append(ok)
-                    out_v.append(ov)
-            yield pd.DataFrame({"key": out_k, "value": out_v})
+                yield from mapf(k, v)
 
-    kv = df.select(key_col, value_col).mapInPandas(map_stage, schema=KV_SCHEMA)
+    def map_stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
+        pairs = emitted(batches)
+        while chunk := list(islice(pairs, cap)):
+            yield pd.DataFrame(chunk, columns=["key", "value"])
 
-    if merge is not None:
-        # Map-side combine: fold each batch's keys to one partial each.
-        # Chains in the SAME stage as map_stage (narrow mapInPandas), so
-        # the shuffle input shrinks from one row per emit to one row per
-        # (batch, distinct key) — the partial-aggregation shape Catalyst
-        # gives built-in aggregates, reproduced for arbitrary Python
-        # folds. Memory is bounded by one Arrow batch.
-        def combine_stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if not len(pdf):
-                    yield pdf
-                    continue
-                folded = (
-                    pdf.groupby("key", sort=False)["value"]
-                    .apply(lambda s: merge(s.name, sorted(s.tolist())))
-                    .reset_index()
-                )
-                yield folded
+    def map_combine_stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # One row per (slice, distinct key) reaches the shuffle instead
+        # of one per emit: the partial-aggregation shape Catalyst gives
+        # built-in aggregates, for arbitrary Python folds.
+        prime_worker()
+        pairs = emitted(batches)
+        while True:
+            groups: dict[str, list[str]] = {}
+            for ok, ov in islice(pairs, cap):
+                groups.setdefault(ok, []).append(ov)
+            if not groups:
+                return
+            keys = list(groups)
+            yield pd.DataFrame(
+                {"key": keys, "value": [merge(k, sorted(groups[k])) for k in keys]}
+            )
 
-        kv = kv.mapInPandas(combine_stage, schema=KV_SCHEMA)
+    kv = df.select(key_col, value_col).mapInPandas(
+        map_stage if merge is None else map_combine_stage, schema=KV_SCHEMA
+    )
 
     if num_partitions:
         # Explicit R, mirroring nReduce (/root/reference/src/main/mrcoordinator.go:23).
@@ -117,6 +134,7 @@ def run_mapreduce(
     final = merge if merge is not None else reducef
 
     def reduce_stage(pdf: pd.DataFrame) -> pd.DataFrame:
+        prime_worker()
         key = pdf["key"].iloc[0]
         # Reference sorts the whole partition then scans groups
         # (worker.go:158-183); sorting values here gives reducef the same

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 # (driver may load us via sys.path only) — pickle this module by value.
 cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
+from tinymapreduce_spark.pyworker import prime_worker
 from tinymapreduce_spark.sources.loaders import documents_for_cpu
 
 
@@ -237,6 +238,7 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     payloads = with_payload(docs).select("doc_id", "payload")
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             feats = [fake_features(p) for p in pdf["payload"]]
             yield pd.DataFrame(
@@ -275,6 +277,7 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     payloads = with_payload(docs).select("doc_id", "payload")
 
     def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             resized = [bytes(p)[::RESIZE_STRIDE] for p in pdf["payload"]]
             yield pd.DataFrame(
@@ -322,6 +325,7 @@ def frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     payloads = with_payload(docs).select("doc_id", "payload")
 
     def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             rows = {"doc_id": pdf["doc_id"], "n_frames": [], "n_sampled": [], "sampled_md5": []}
             for p in pdf["payload"]:
@@ -386,6 +390,7 @@ def audio_energy_df(docs: DataFrame) -> DataFrame:
     payloads = with_payload(docs).select("doc_id", "payload")
 
     def energy(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             rows: dict[str, list] = {
                 "doc_id": [],
@@ -517,6 +522,7 @@ def image_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             payloads = []
             for d in pdf["doc_id"]:
@@ -530,6 +536,7 @@ def image_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             rows: dict[str, list] = {
                 "doc_id": [],
@@ -624,6 +631,7 @@ def _ensure_bmp_files(spark: SparkSession, sf_dir: str) -> str:
         )
 
         def write_part(rows) -> None:
+            prime_worker()
             import os as _os
 
             for row in rows:
@@ -670,6 +678,7 @@ def binary_files_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             rows: dict[str, list] = {
                 "doc_id": [],
@@ -728,6 +737,7 @@ def audio_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             payloads = []
             for d in pdf["doc_id"]:
@@ -738,6 +748,7 @@ def audio_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             rows: dict[str, list] = {
                 "doc_id": [],
@@ -834,6 +845,7 @@ def jpeg_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             payloads = []
             for d in pdf["doc_id"]:
@@ -853,6 +865,7 @@ def jpeg_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             rows: dict[str, list] = {
                 "doc_id": [],
@@ -1010,6 +1023,7 @@ def jpeg420_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             payloads = []
             for d in pdf["doc_id"]:
@@ -1031,6 +1045,7 @@ def jpeg420_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             rows: dict[str, list] = {
                 "doc_id": [], "width": [], "height": [],
@@ -1111,6 +1126,7 @@ def jpeg_progressive_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             payloads = []
             for d in pdf["doc_id"]:
@@ -1132,6 +1148,7 @@ def jpeg_progressive_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             rows: dict[str, list] = {
                 "doc_id": [], "width": [], "height": [],
@@ -1333,6 +1350,7 @@ def png_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             payloads = []
             for d in pdf["doc_id"]:
@@ -1381,6 +1399,7 @@ def png_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             rows: dict[str, list] = {
                 "doc_id": [], "width": [], "height": [], "color_type": [],
@@ -1432,6 +1451,7 @@ def png16_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             payloads = []
             for d in pdf["doc_id"]:
@@ -1489,6 +1509,7 @@ def png16_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             rows: dict[str, list] = {
                 "doc_id": [], "width": [], "height": [], "color_type": [],
@@ -1648,6 +1669,7 @@ def gif_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             payloads = []
             for d in pdf["doc_id"]:
@@ -1668,6 +1690,7 @@ def gif_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             rows: dict[str, list] = {
                 "doc_id": [], "width": [], "height": [],
@@ -1741,6 +1764,7 @@ def g711_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             payloads = []
             for d in pdf["doc_id"]:
@@ -1752,6 +1776,7 @@ def g711_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             rows: dict[str, list] = {
                 "doc_id": [], "law": [], "n_samples": [],
@@ -1874,6 +1899,7 @@ def image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             payloads = []
             for d in pdf["doc_id"]:
@@ -1885,6 +1911,7 @@ def image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
     def hash_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             rows: dict[str, list] = {"doc_id": [], "b0": [], "b1": [], "b2": [], "b3": []}
             for d, p in zip(pdf["doc_id"], pdf["payload"]):
@@ -2058,6 +2085,7 @@ def video_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     coef_fns, qt = VID_COEF, JPG_QT
 
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             payloads = []
             for d in pdf["doc_id"]:
@@ -2076,6 +2104,7 @@ def video_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             rows: dict[str, list] = {
                 "doc_id": [], "width": [], "height": [], "n_frames": [],
@@ -2229,6 +2258,7 @@ def video420_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         return out
 
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             payloads = []
             for d in pdf["doc_id"]:
@@ -2254,6 +2284,7 @@ def video420_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             rows: dict[str, list] = {
                 "doc_id": [], "width": [], "height": [], "chroma_w": [],
@@ -2429,6 +2460,7 @@ def audio_spectral_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     sin_t = np.array(_SPEC_SIN, dtype=np.int64)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             rows: dict[str, list] = {
                 "doc_id": [], "n_windows": [], "dominant_bin": [],
@@ -2541,6 +2573,7 @@ def image_augment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             rows: dict[str, list] = {
                 "doc_id": [], "variant": [], "width": [], "height": [],
@@ -2648,6 +2681,7 @@ def tiff_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
     def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             rows: dict[str, list] = {
                 "doc_id": [], "packbits": [], "big_endian": [],
@@ -2723,6 +2757,7 @@ def tiff_lzw_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
     def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             rows: dict[str, list] = {
                 "doc_id": [], "mode": [], "big_endian": [],
@@ -2812,6 +2847,7 @@ def jpeg_lossless_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
     def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             rows: dict[str, list] = {
                 "doc_id": [], "precision": [], "predictor": [], "pt": [],
@@ -2898,6 +2934,7 @@ def png_subbyte_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
     def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             rows: dict[str, list] = {
                 "doc_id": [], "bit_depth": [], "paletted": [],
@@ -3012,6 +3049,7 @@ def jpeg12_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             payloads = []
             for d in pdf["doc_id"]:
@@ -3028,6 +3066,7 @@ def jpeg12_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             rows: dict[str, list] = {
                 "doc_id": [], "width": [], "height": [],
@@ -3151,6 +3190,7 @@ def jpeg_arith_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             payloads = []
             for d in pdf["doc_id"]:
@@ -3164,6 +3204,7 @@ def jpeg_arith_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             rows: dict[str, list] = {
                 "doc_id": [], "kx": [], "width": [], "height": [],
@@ -3280,6 +3321,7 @@ def jpeg_hier_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
     def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             rows: dict[str, list] = {
                 "doc_id": [], "width": [], "height": [], "pixel_sum": [],
@@ -3555,6 +3597,7 @@ def audio_adpcm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             rows: dict[str, list] = {
                 "doc_id": [], "n_blocks": [], "decoded_sum": [],
@@ -3695,6 +3738,7 @@ def columnar_encoding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             rows: dict[str, list] = {
                 "doc_id": [], "n_values": [], "bit_width": [],
@@ -3919,6 +3963,7 @@ def jpeg_hier_dct_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
     def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             rows: dict[str, list] = {
                 "doc_id": [], "progressive": [], "width": [], "height": [],
@@ -4083,6 +4128,7 @@ def jpeg_arith_prog_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             payloads = []
             for d in pdf["doc_id"]:
@@ -4098,6 +4144,7 @@ def jpeg_arith_prog_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             rows: dict[str, list] = {
                 "doc_id": [], "kx": [], "width": [], "height": [],
@@ -4221,6 +4268,7 @@ def _ensure_wav_files(spark: SparkSession, sf_dir: str) -> str:
         )
 
         def write_part(rows) -> None:
+            prime_worker()
             import os as _os
 
             for row in rows:
@@ -4282,6 +4330,7 @@ def stream_adpcm_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         import os as _os
 
         for pdf in batches:

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tinymapreduce_spark.functions.text import tokens
+from tinymapreduce_spark.pyworker import prime_worker
 from tinymapreduce_spark.sources.loaders import documents_for_cpu
 
 # The packer kernel ships to executors by VALUE: when the driver loads
@@ -60,6 +61,7 @@ def _pack_shard(pdf: pd.DataFrame) -> pd.DataFrame:
     longer than PACK_CAP gets a bin of its own (overflow bin) rather
     than being dropped — truncation is the trainer's call, not the
     packer's."""
+    prime_worker()
     pdf = pdf.sort_values("doc_id")
     bins: list[list] = []  # [bin_id, n_docs, bin_tokens, first_doc, last_doc]
     fill = None

@@ -16,6 +16,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tinymapreduce_spark.functions.text import normalized_text, tokens
+from tinymapreduce_spark.pyworker import prime_worker
 from tinymapreduce_spark.sources.loaders import documents_for_cpu, load_table
 
 # html_extract_stats ships an Arrow kernel; executors that can't import
@@ -891,6 +892,7 @@ def compressibility_audit_df(docs: DataFrame) -> DataFrame:
         return inflate(blob)[0] == b and _zlib.decompress(blob, -15) == b
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             enc = pdf["text"].map(lambda t: t.encode("utf-8"))
             raw = enc.map(len)
@@ -940,6 +942,7 @@ def compressibility_df(docs: DataFrame) -> DataFrame:
     from tinymapreduce_spark.functions.inflate import deflate_fixed
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             enc = pdf["text"].map(lambda t: t.encode("utf-8"))
             raw = enc.map(len)
@@ -1130,6 +1133,7 @@ def text_normalize_df(docs: DataFrame) -> DataFrame:
     _CONTROL.update({c: None for c in range(127, 160)})
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
         for pdf in batches:
             out = {
                 "doc_id": pdf["doc_id"],
@@ -1185,6 +1189,7 @@ def arrow_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
     def batches(it):
+        prime_worker()
         import pyarrow as pa
         import pyarrow.compute as pc
 
@@ -1360,6 +1365,7 @@ def grouped_arrow_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("source", "text")
 
     def per_group(tbl):
+        prime_worker()
         import pyarrow as pa
         import pyarrow.compute as pc
 
@@ -1746,6 +1752,7 @@ def html_extract_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     _extract = _extract_html  # bind for by-value closure capture
 
     def extract(batches: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
+        prime_worker()
         import pandas as pd
 
         for pdf in batches:
@@ -1834,6 +1841,7 @@ def mojibake_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = documents_for_cpu(spark, sf_dir).select("doc_id", "text")
 
     def kernel(batches):
+        prime_worker()
         for pdf in batches:
             out = {"doc_id": [], "was_mojibake": [], "repaired_md5": []}
             for d, text in zip(pdf["doc_id"], pdf["text"]):
@@ -1963,6 +1971,7 @@ def robots_url_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     hosts = spark.range(50).select(F.col("id").cast("int").alias("host"))
 
     def parse_kernel(batches):
+        prime_worker()
         for pdf in batches:
             out = {"host": [], "pattern": [], "is_allow": []}
             for h in pdf["host"]:
@@ -2078,6 +2087,7 @@ def crawl_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     _extract = _extract_html
 
     def kernel(batches: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
+        prime_worker()
         import hashlib
 
         for pdf in batches:
@@ -2187,6 +2197,7 @@ def bwt_transform_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = documents_for_cpu(spark, sf_dir).select("doc_id", "text")
 
     def kernel(batches):
+        prime_worker()
         from collections.abc import Iterator  # noqa: F401
 
         import hashlib

@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
+from tinymapreduce_spark.pyworker import prime_worker
+
 # Workers may not be able to import this package (driver loads the repo
 # via sys.path) — serialize by value.
 cloudpickle.register_pickle_by_value(sys.modules[__name__])
@@ -35,6 +37,7 @@ def weighted_mean_price(price: pd.Series, qty: pd.Series) -> float:
     Decimal-free but still cross-engine deterministic: pandas sums run
     over int64-exact quantities and 2-dp prices scaled to integer cents.
     """
+    prime_worker()
     cents = (price * 100).round().astype("int64")
     num = int((cents * qty.astype("int64")).sum())
     den = int(qty.astype("int64").sum())
@@ -88,6 +91,9 @@ def python_udtf_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     @udtf(returnType="word string, pos int")
     class SplitWords:
+        def __init__(self) -> None:
+            prime_worker()
+
         def eval(self, text: str, max_pos: int):
             toks = [w for w in _re.split(r"[^A-Za-z]+", text or "") if w]
             for i, w in enumerate(toks[:max_pos]):
@@ -129,6 +135,7 @@ def python_udtf_table_arg(spark: SparkSession, sf_dir: str) -> DataFrame:
     @udtf(returnType="source string, n_docs bigint, total_chars bigint, first_doc bigint, last_doc bigint")
     class SourceStats:
         def __init__(self) -> None:
+            prime_worker()
             self._src = None
             self._n = 0
             self._chars = 0
@@ -191,6 +198,7 @@ def iterator_udf_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
     @F.pandas_udf(LongType())
     def polarity_sum(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
         # -- once per task: "load the model" --
+        prime_worker()
         token_re = re.compile(r"[A-Za-z]+")
         model = dict(lex_items)
         for texts in batches:
@@ -200,6 +208,7 @@ def iterator_udf_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     @F.pandas_udf(LongType())
     def hit_count(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        prime_worker()
         token_re = re.compile(r"[A-Za-z]+")
         model = dict(lex_items)
         for texts in batches:
@@ -273,6 +282,9 @@ def python_udtf_dynamic_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i in range(k.value):
                 schema = schema.add(f"tok_{i}", StringType())
             return AnalyzeResult(schema=schema)
+
+        def __init__(self) -> None:
+            prime_worker()
 
         def eval(self, text: str, k: int):
             toks = [t for t in _re.split("[^A-Za-z]+", text or "") if t]

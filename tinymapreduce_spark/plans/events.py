@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from tinymapreduce_spark.pyworker import prime_worker
 from tinymapreduce_spark.sources.loaders import load_table
 
 
@@ -312,6 +313,7 @@ def cogrouped_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn("bucket", F.pmod(F.col("uid"), F.lit(ASOF_BUCKETS)))
 
     def merge(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        prime_worker()
         if left.empty:
             return pd.DataFrame(
                 columns=["event_id", "user_id", "ts_us", "value", "signup_ts_us"]

@@ -32,6 +32,7 @@ from pyspark import cloudpickle
 
 from tinymapreduce_spark.functions.inflate import crc32, deflate_fixed, inflate
 from tinymapreduce_spark.functions.snappy import snappy_compress, snappy_decompress
+from tinymapreduce_spark.pyworker import prime_worker
 
 cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
@@ -230,6 +231,7 @@ def avro_ingest_stats(spark, sf_dir: str):
     fields = [("rid", "long"), ("delta", "long"), ("tag", "string")]
 
     def roundtrip(batches):
+        prime_worker()
         for pdf in batches:
             rows: dict[str, list] = {
                 "doc_id": [], "deflated": [], "n_records": [],
@@ -281,6 +283,7 @@ def avro_snappy_ingest(spark, sf_dir: str):
     codecs = ("null", "deflate", "snappy")
 
     def roundtrip(batches):
+        prime_worker()
         for pdf in batches:
             rows: dict[str, list] = {
                 "doc_id": [], "codec_id": [], "n_records": [],

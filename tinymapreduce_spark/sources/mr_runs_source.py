@@ -43,6 +43,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from tinymapreduce_spark.pyworker import prime_worker
+
 
 def _arrow_read_run_file(path: str, fname: str, key_filters: list):
     """Parse one JSON-lines run file natively (pyarrow.json) into a
@@ -218,6 +220,7 @@ class MrRunsReader(DataSourceReader):
         return [InputPartition(f) for f in files]
 
     def read(self, partition):
+        prime_worker()
         fname = partition.value
         batches = _arrow_read_run_file(self.path, fname, self.key_filters)
         if batches is not None:  # vectorized: Arrow record batches
@@ -254,6 +257,7 @@ class MrRunsWriter(DataSourceWriter):
         os.makedirs(self.path, exist_ok=True)
 
     def write(self, rows) -> RunCommit:
+        prime_worker()
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
@@ -312,6 +316,7 @@ class MrRunsStreamWriter(DataSourceStreamArrowWriter):
         os.makedirs(self.path, exist_ok=True)
 
     def write(self, batches) -> RunCommit:
+        prime_worker()
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
@@ -404,6 +409,7 @@ class MrRunsStreamReader(DataSourceStreamReader):
         return [InputPartition(f) for f in files]
 
     def read(self, partition):
+        prime_worker()
         fname = partition.value
         batches = _arrow_read_run_file(self.path, fname, [])
         if batches is not None:  # vectorized: Arrow record batches

@@ -37,6 +37,7 @@ import sys
 from pyspark import cloudpickle
 
 from tinymapreduce_spark.functions.inflate import gunzip, gzip_compress
+from tinymapreduce_spark.pyworker import prime_worker
 
 cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
@@ -213,6 +214,7 @@ def tar_shard_ingest(spark, sf_dir: str):
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
     def encode(batches):
+        prime_worker()
         for pdf in batches:
             payloads = [
                 write_tar(_doc_members(int(d)), gzipped=bool(int(d) % 2))
@@ -221,6 +223,7 @@ def tar_shard_ingest(spark, sf_dir: str):
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
     def parse(batches):
+        prime_worker()
         for pdf in batches:
             rows: dict[str, list] = {
                 "doc_id": [], "gzipped": [], "n_samples": [], "n_members": [],
@@ -313,6 +316,7 @@ def _ensure_tar_files(spark, sf_dir: str) -> str:
         )
 
         def write_part(rows) -> None:
+            prime_worker()
             import os as _os
             from collections import defaultdict
 
@@ -381,6 +385,7 @@ def stream_tar_ingest(spark, sf_dir: str):
     )
 
     def parse(batches):
+        prime_worker()
         for pdf in batches:
             rows: dict[str, list] = {"doc_id": [], "tlen": [], "bsum": []}
             for p in pdf["content"]:
@@ -496,6 +501,7 @@ def wds_image_pipeline(spark, sf_dir: str):
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
     def kernel(batches):
+        prime_worker()
         for pdf in batches:
             rows: dict[str, list] = {
                 "label": [], "pixel_sum": [], "n_pixels": [], "width": [],

@@ -31,6 +31,8 @@ import zlib
 
 from pyspark import cloudpickle
 
+from tinymapreduce_spark.pyworker import prime_worker
+
 cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 CRLF = b"\r\n"
@@ -170,6 +172,7 @@ def warc_ingest_stats(spark, sf_dir: str):
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
     def encode(batches):
+        prime_worker()
         for pdf in batches:
             payloads = [
                 write_warc(_doc_records(int(d)), gzip_members=bool(int(d) % 2))
@@ -178,6 +181,7 @@ def warc_ingest_stats(spark, sf_dir: str):
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
     def parse(batches):
+        prime_worker()
         for pdf in batches:
             rows: dict[str, list] = {
                 "doc_id": [], "gzipped": [], "n_records": [],
@@ -259,6 +263,7 @@ def _ensure_warc_files(spark, sf_dir: str) -> str:
         )
 
         def write_part(rows) -> None:
+            prime_worker()
             import os as _os
             from collections import defaultdict
 
@@ -326,6 +331,7 @@ def stream_warc_ingest(spark, sf_dir: str):
     )
 
     def parse(batches):
+        prime_worker()
         for pdf in batches:
             rows: dict[str, list] = {"doc_id": [], "plen": []}
             for p in pdf["content"]:

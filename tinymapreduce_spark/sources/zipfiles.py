@@ -28,6 +28,7 @@ import sys
 from pyspark import cloudpickle
 
 from tinymapreduce_spark.functions.inflate import crc32, deflate_fixed, inflate
+from tinymapreduce_spark.pyworker import prime_worker
 
 cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
@@ -146,6 +147,7 @@ def zip_shard_ingest(spark, sf_dir: str):
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
     def roundtrip(batches):
+        prime_worker()
         for pdf in batches:
             rows: dict[str, list] = {
                 "doc_id": [], "n_samples": [], "n_members": [],

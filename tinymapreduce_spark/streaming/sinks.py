@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tinymapreduce_spark.operators.multimodal import BINFILE_CAP as _BINFILE_CAP
+from tinymapreduce_spark.pyworker import prime_worker
 from tinymapreduce_spark.sources.loaders import events_stream_source, normalize_event_ts
 from tinymapreduce_spark.sources.manifest_sink import ManifestTable, cdc_change_feed
 from tinymapreduce_spark.sources.textfiles import SCRATCH
@@ -392,6 +393,7 @@ def stream_binary_files_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def decode(batches):
+        prime_worker()
         import pandas as pd
 
         for pdf in batches:

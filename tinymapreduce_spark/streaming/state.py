@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tinymapreduce_spark.operators.packing import PACK_CAP, PACK_SHARDS
+from tinymapreduce_spark.pyworker import prime_worker
 from tinymapreduce_spark.sources.loaders import events_stream_source, normalize_event_ts
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
@@ -50,6 +51,7 @@ def _apply_ops(
     reads as "" — /root/reference/src/kvraft/client.go:28-31); Get is a
     no-op for state. Emits the post-batch value.
     """
+    prime_worker()
     cur = state.get[0] if state.exists else None
     # a large micro-batch reaches the kernel as multiple Arrow chunks in
     # partition order — the seq sort must span ALL of them (put/append
@@ -135,6 +137,7 @@ def _dedup_client(
     ``op_id <= last_op_id`` (reference `src/kvraft/server.go` keeps the
     same last-applied map). Emits only the ops accepted this
     micro-batch."""
+    prime_worker()
     last = int(state.get[0]) if state.exists else -1
     chunks = [pdf for pdf in pdf_iter if len(pdf)]
     out = []
@@ -371,6 +374,7 @@ TOTALS_STATE = StructType(
 def _totals_apply(key, pdf_iter, state):
     """applyInPandasWithState twin of the TWS processor below — same
     per-key fold, same integer-cents determinism."""
+    prime_worker()
     n, cents = state.get if state.exists else (0, 0)
     for pdf in pdf_iter:
         n += len(pdf)
@@ -409,6 +413,7 @@ def stream_tws_counter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         class RunningTotals(StatefulProcessor):
             def init(self, handle: StatefulProcessorHandle) -> None:
+                prime_worker()
                 self._state = handle.getValueState("totals", TOTALS_STATE)
 
             def handleInputRows(self, key, rows, timerValues):
@@ -611,6 +616,7 @@ def _pack_apply(
     """Fold this micro-batch's (doc_id, t) rows into the shard's open
     bin; emit every bin the batch CLOSES. O(1) state per shard — the
     open bin tuple — regardless of stream length."""
+    prime_worker()
     open_bin = list(state.get) if state.exists else None
     closed: list[list[int]] = []
     # A big micro-batch arrives as MULTIPLE Arrow chunks whose relative
