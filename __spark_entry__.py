@@ -81,115 +81,9 @@ def _mr_wordcount_combiner(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # The driver records CORRECTNESS rows for EXACTLY the first 50 queries()
-# entries (r01/r02/r03 each stopped at #50), so registry order =
-# verification priority. _R4_WINDOW pins this round's 50, exactly as
-# ROTATION.md scheduled them after r3: the six r3-new keys first
-# (dsir / k-anonymity / CDC MERGE / the full-pipeline LSH oracle / the
-# semdedup + sketch accuracy rows), then the graph tier, the textstats
-# family, custom sources, format roundtrips, approx/HLL builtins, the
-# remaining maintenance/sql keys, doc-embedding ANN, the sampling
-# allocators, multimodal, and the events/windows/as-of family. ALL
-# oracle-backed, NONE previously driver-checked (cumulative after r3:
-# 149/227; after this window: 199 checked of the final 257
-# oracle-backed). ROTATION.md pins r5 (_R5_WINDOW below, 50 keys) and
-# r6 (the last 10 + rows-only re-checks) so the sweep provably
-# terminates.
-# Round 5 (ROTATION.md "Round 5 — pinned window"): the r5-new keys
-# lead or slot into their family (KV duplicate-request suppression +
-# snapshot/compaction replay — VERDICT r4 #4/#5 — and the baseline-
-# JPEG decode rung — VERDICT r4 #7), then the final-r4 additions and
-# every remaining never-driver-checked oracle-backed key except the
-# eleven keys ROTATION.md moves to the r6 freshness rotation (the
-# eight displaced by the late-r4 tier + copurchase_pairs / trend_slope
-# / mode_median_stats displaced by the r5-new keys). After r5: 249 of
-# 263 oracle-backed keys checked (the three post-window registrations
-# shard_migration / stream_kv_dedup / image_phash_dedup lifted the
-# total from 260).
-_R5_WINDOW = [
-    # round-5 verdict items lead (kvraft duplicate-request suppression +
-    # Raft snapshot/log-compaction replay, VERDICT r4 #4/#5); the two
-    # displaced tail keys (copurchase_pairs, trend_slope) move to r6
-    "kv_replay_dedup",
-    "kv_snapshot_replay",
-    "hybrid_rrf_retrieval",
-    "hybrid_rrf_ndcg",
-    "stream_decontaminate",
-    "perplexity_buckets",
-    "randomized_response_estimate",
-    "stream_quality_filter",
-    "manifest_bloom_skipping",
-    "stream_perplexity_buckets",
-    "pack_nextfit_bins",
-    "length_curriculum",
-    "stream_pack_nextfit",
-    "l_diversity_audit",
-    "stream_ann_ingest",
-    "content_chunk_dedup",
-    "stream_chunk_ingest",
-    "manifest_expire_vacuum",
-    "manifest_merge_on_read",
-    "manifest_schema_evolution",
-    "stream_dv_erasure",
-    "image_decode_stats",
-    "audio_decode_stats",
-    "jpeg_decode_stats",
-    "binary_files_decode",
-    "stream_binary_files_decode",
-    "state_store_read",
-    "manifest_apply_changes",
-    "stream_cdc_apply_changes",
-    "ann_ivf_topk",
-    "ann_pq_topk",
-    "ann_ivfpq_topk",
-    "semdedup_drops",
-    "value_histogram",
-    "funnel_steps",
-    "retention_cohorts",
-    "anomaly_zscore",
-    "time_to_conversion",
-    "event_path_trigrams",
-    "rolling_active_users",
-    "stickiness_ratio",
-    "merge_upsert",
-    "scd2_history",
-    "profile_columns",
-    "dq_checks",
-    "snapshot_diff",
-    "incremental_agg_merge",
-    "distribution_drift",
-    "window_rank_funcs",
-    "window_range_frame",
-]
-
-# Pre-staged for round 6 (ROTATION.md "Round 6 — planned window"): at
-# r6 start, flip queries() to `window = {k: base[k] for k in
-# _R6_WINDOW}` — that one-line change is the whole of r6's window prep.
-# Composition: the 14 oracle-backed keys never driver-checked after r5
-# (the 8 displaced by the late-r4 tier, the 3 displaced by the r5-new
-# keys, plus shard_migration / stream_kv_dedup / image_phash_dedup —
-# registered after the r5 pin), then the 5 rows-only keys (their
-# weaker rows-only driver evidence refreshed), then the 31
-# OLDEST-checked keys (the r1 window head, incl. the flagship
-# re-checks word_count / mr_wordcount_shim / kv_replay) — freshness
-# rotation, oldest first. This completes the sweep: after r6 every
-# oracle-backed key has at least one driver CORRECTNESS row.
-# Pre-staged for round 7 (pure freshness — the sweep completes with
-# r6's driver run): oldest-checked keys first. The five r1-head keys
-# that fell past r6's 50-row cutoff lead, then the rest of the r1
-# window in its original order, then the oldest r2 keys. Any r7-NEW
-# keys must be inserted at the HEAD of this list when registered
-# (new keys always in-window). Flip queries() to _R7_WINDOW at r7
-# start — the same one-line change as r5/r6.
-# Pre-staged r8 window (ROTATION.md): the freshness re-checks the
-# twenty-two r7 head insertions displaced past the 50-row cutoff —
-# exactly queries()[50:100] of the final r7 order. At r8 start flip
-# queries() to _R8_WINDOW (the same one-line change as r5/r6/r7) and
-# insert any r8-NEW keys at the very head.
-# Pre-staged r9 window (ROTATION.md): pure freshness, oldest-checked
-# first — the two keys r8's head insertion displaced past the 50-row
-# cutoff, then the r2 cohort (24), then the 24 oldest r3 keys. At r9
-# start flip queries() to _R9_WINDOW (one line) and insert any r9-NEW
-# keys at the very head.
+# entries, so registry order = verification priority: queries() puts
+# the current window first. ROTATION.md keeps every earlier round's
+# window and schedules the next one, which replaces this list.
 # Round-11 window (VERDICT r10 gate note + next-round item #2): the r10
 # driver did NOT rotate, so 22 r10-optimization-touched keys have no
 # driver oracle row at the r10 HEAD. This window leads with every
@@ -255,423 +149,11 @@ _R11_WINDOW = [
     "bigram_lm",
 ]
 
-_R9_WINDOW = [
-    # r9-NEW key (always in-window): the bloom-sidecar posture twin
-    "manifest_bloom_sidecar",
-    # r9-TOUCHED keys (always in-window): VERDICT r8 #1-#2 changed the
-    # registered shapes — semdedup_drops/recall now derive an
-    # occupancy-scaled k from the corpus size, and the exact PPJoin
-    # tier (ngram pairs -> pair graph -> clusters/survivors) applies
-    # the default-on hot-shingle df cap. Outputs at the driver SFs are
-    # unchanged (base max shingle df 25 << cap 64; derived k == 8 at
-    # n <= 2000), but the changed keys need fresh green rows.
-    "semdedup_drops",
-    "semdedup_recall",
-    "dedup_ngram_jaccard",
-    "dedup_clusters",
-    "dedup_survivors",
-    "custom_sink_roundtrip",
-    "custom_stream_sink",
-    "text_normalize",
-    "arrow_text_stats",
-    "stream_static_join",
-    "stream_tumbling_window",
-    "stream_kv_state",
-    "stream_tws_counter",
-    "stream_session_window",
-    "stream_dedup",
-    "stream_stream_join",
-    "deterministic_sample",
-    "train_val_test_split",
-    "contamination_check",
-    "sequence_pack",
-    "doc_chunk_overlap",
-    "training_shuffle",
-    "curation_pipeline",
-    "multimodal_features",
-    "audio_energy_windows",
-    "image_header_parse",
-    "text_roundtrip_wordcount",
-    "json_runs_roundtrip",
-    "kmeans_clusters",
-    "pagerank_trade",
-    "cms_heavy_hitters",
-    "stream_sliding_window",
-    "stream_wap_sink",
-    "stream_cms_sink",
-    "grouped_arrow_stats",
-    "manifest_skipping_scan",
-    "manifest_delete_rewrite",
-    "manifest_append_incremental",
-    "manifest_upsert",
-    "dedup_incremental_bloom",
-    "stream_dedup_within_watermark",
-    "token_budget_mix",
-    "stream_stream_outer_join",
-    "exact_quota_split",
-    "manifest_optimize",
-    "stream_observe_metrics",
-    "stream_available_now",
-    "pretrain_mix_pipeline",
-    "iterator_udf_scoring",
-    "catalog_partition_overwrite",
-    "dedup_incremental_minhash",
-    "tfidf_top_terms",
-    "winnow_fingerprints",
-    "winnow_neardup_pairs",
-]
-
-_R8_WINDOW = [
-    # r8-NEW key (always in-window): duplicate clusters over the
-    # minhash pair graph — the scale path the x100 probe measured
-    # (BASELINE.md round-8 notes), full recursive-CTE oracle.
-    "dedup_clusters_minhash",
-    # VERDICT r7 #1: ngram_lm_kn_trigram was registered late in r7 and
-    # is the ONLY registry key with zero driver CORRECTNESS rows — it
-    # leads the window so r8's driver run restores the "every key has
-    # a row" invariant.
-    "ngram_lm_kn_trigram",
-    "q22_idle_customers",
-    "global_sort_range",
-    "semi_anti_join",
-    "outer_join_coverage",
-    "theta_join_nl",
-    "window_running_sum",
-    "topk_per_group",
-    "rollup_revenue",
-    "cube_orders",
-    "grouping_sets_revenue",
-    "distinct_counts",
-    "set_ops",
-    "set_ops_all",
-    "scalar_functions",
-    "variant_extract",
-    "collated_group",
-    "array_functions",
-    "sort_limit",
-    "correlated_scalar_subquery",
-    "in_subquery",
-    "exact_percentiles",
-    "dedup_exact",
-    "dedup_ngram_jaccard",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_incremental",
-    "dedup_clusters",
-    "boilerplate_spans",
-    "dup_passage_coverage",
-    "tf_cosine_pairs",
-    "ann_topk_cosine",
-    "embedding_neardup_pairs",
-    "embedding_quantize",
-    "bm25_topk",
-    "fuzzy_join_levenshtein",
-    "bpe_train_merges",
-    "bpe_encode_vocab",
-    "bigram_novelty",
-    "perceptron_quality",
-    "mr_wordcount_combiner",
-    "manifest_wap_roundtrip",
-    "recursive_cte_hierarchy",
-    "lateral_topn_per_group",
-    "segment_dedup_clean",
-    "hybrid_rrf_retrieval",
-    "hybrid_rrf_ndcg",
-    "observed_metrics",
-    "map_functions",
-    "custom_sink_roundtrip",
-    "custom_stream_sink",
-]
-
-_R7_WINDOW = [
-    # r7-CONVERTED keys first (VERDICT r6 #1): the former rows-only tier,
-    # now oracle-backed — compressibility through the from-scratch
-    # deflate legs (full SQL replay of the dist-1 RLE stream size +
-    # LZ77 audit booleans), HLL/KLL through hash-checked audit forms
-    # (exact group keys/counts + live-sketch error-envelope booleans,
-    # the approx_aggregates r6 conversion pattern). Their green rows
-    # make the registry fully oracle-backed.
-    "compressibility",
-    "hll_distinct_merge",
-    "kll_quantile_merge",
-    # r7-NEW keys (always in-window): the Avro snappy-codec leg
-    # (from-scratch snappy both directions + BE-CRC32 trailer), the
-    # 16-bit/alpha PNG rung, and the 4:2:0 MJPEG + index-less AVI rung;
-    # then the TIFF-LZW rung (MSB-first early-change LZW + predictor 2)
-    # and the lossless-JPEG rung (SOF3: 7 predictors, 8/12/16-bit)
-    # and the sub-byte PNG rung (depths 1/2/4, gray + palette)
-    # and the 12-bit SOF1 rung (16-bit DQT, 2048/4095 level shift)
-    # and the arithmetic-coded rung (SOF9: QM coder + Annex F model)
-    # and the block-sorting rung (BWT, rotation-sort SQL oracle)
-    # and the corpus->LM step (exact-rational Kneser-Ney bigram model)
-    # and the hierarchical-JPEG rung (Annex J: DHP/SOF3/EXP/SOF7)
-    # and the lossy-audio rung (IMA ADPCM, 8-step unrolled SQL replay)
-    # and the storage-format rung (Parquet RLE-hybrid + delta-binary-
-    # packed, encoded byte lengths replayed in SQL)
-    # and the Heaps-law vocabulary growth curve (scalable offsets form)
-    # and the corpus Merkle root (distributed tree reduction)
-    # and the SOF5 differential-DCT pyramid (Annex J, DCT branch)
-    # and the SOF10 progressive-arithmetic rung (Annex G.2 scan models)
-    # and the sorted-neighborhood blocking rung (SIGMOD'95 SNM)
-    # and the distributed-PCA rung (integer power iteration, embeddings)
-    # and the JL random-projection rung (md5-derived sign matrix)
-    # and the streaming ADPCM autoloader twin (codec x streaming)
-    "stream_adpcm_ingest",
-    "embedding_random_projection",
-    "embedding_pca_power",
-    "dedup_sorted_neighborhood",
-    "jpeg_arith_prog_decode_stats",
-    "jpeg_hier_dct_decode_stats",
-    "corpus_merkle_root",
-    "vocab_growth_stats",
-    "columnar_encoding_stats",
-    "audio_adpcm_stats",
-    "jpeg_hier_decode_stats",
-    "ngram_lm_kneser_ney",
-    "bwt_transform_stats",
-    "jpeg_arith_decode_stats",
-    "jpeg12_decode_stats",
-    "png_subbyte_decode_stats",
-    "jpeg_lossless_decode_stats",
-    "tiff_lzw_decode_stats",
-    "avro_snappy_ingest",
-    "png16_decode_stats",
-    "video420_decode_stats",
-    # freshness rotation, oldest-checked first: the seventeen r6-
-    # continuation keys displaced these re-checks past r6's 50-row
-    # cutoff, so they lead r7 (all green since r1/r2; kv_replay is the
-    # flagship re-check zip_shard_ingest pushed out); any r7-NEW keys
-    # must still be inserted at the very head when registered
-    "sorted_group_concat",
-    "mr_wordcount_shim",
-    "kv_replay",
-    "shard_distribution",
-    "shard_rebalance",
-    "q1_pricing_summary",
-    "q2_min_cost_supplier",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "q4_order_priority",
-    "q6_forecast_revenue",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_profit",
-    "q10_returned_items",
-    "q11_supplier_concentration",
-    "q12_priority_lines",
-    "q13_customer_distribution",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q16_supplier_counts",
-    "q17_small_quantity_revenue",
-    "q18_large_orders",
-    "q19_disjunctive_parts",
-    "q20_promo_heavy_suppliers",
-    "q21_waiting_suppliers",
-    "q22_idle_customers",
-    "global_sort_range",
-    "semi_anti_join",
-    "outer_join_coverage",
-    "theta_join_nl",
-    "window_running_sum",
-    "topk_per_group",
-    "rollup_revenue",
-    "cube_orders",
-    "grouping_sets_revenue",
-    "distinct_counts",
-    "set_ops",
-    "set_ops_all",
-    "scalar_functions",
-    "variant_extract",
-    "collated_group",
-    "array_functions",
-    "sort_limit",
-    "correlated_scalar_subquery",
-    "in_subquery",
-    "exact_percentiles",
-    "dedup_exact",
-    "dedup_ngram_jaccard",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_incremental",
-    "dedup_clusters",
-    "boilerplate_spans",
-    "dup_passage_coverage",
-    "tf_cosine_pairs",
-    "ann_topk_cosine",
-    "embedding_neardup_pairs",
-    "embedding_quantize",
-    "bm25_topk",
-    "fuzzy_join_levenshtein",
-    "bpe_train_merges",
-    "bpe_encode_vocab",
-    "bigram_novelty",
-    "perceptron_quality",
-    "mr_wordcount_combiner",
-    "manifest_wap_roundtrip",
-    "recursive_cte_hierarchy",
-    "lateral_topn_per_group",
-]
-
-_R6_WINDOW = [
-    # never-checked: the r6-new ingest/codec rungs lead — the
-    # WebDataset tar-shard walker (odd docs .tar.gz through the
-    # from-scratch RFC 1951/1952 inflate), then the 4:2:0 subsampled +
-    # progressive SOF2 JPEG rungs (VERDICT r5 #2), then the 14 keys
-    # pre-staged by ROTATION.md
-    "tar_shard_ingest",
-    "stream_tar_ingest",
-    "video_decode_stats",
-    "manifest_change_feed",
-    "manifest_metadata_agg",
-    "cdf_incremental_mv",
-    "segment_dedup_clean",
-    "custom_stream_sink",
-    "audio_spectral_bins",
-    "wds_image_pipeline",
-    "python_udtf_dynamic_schema",
-    "autocorrelation_lags",
-    "image_augment_stats",
-    "mojibake_repair",
-    "robots_url_filter",
-    "crawl_curation_pipeline",
-    "zip_shard_ingest",
-    "avro_ingest_stats",
-    "tiff_decode_stats",
-    "jpeg420_decode_stats",
-    "jpeg_progressive_decode_stats",
-    "png_decode_stats",
-    "gif_decode_stats",
-    "g711_decode_stats",
-    "warc_ingest_stats",
-    "stream_warc_ingest",
-    "url_host_stats",
-    "html_extract_stats",
-    "stream_kv_dedup",
-    "image_phash_dedup",
-    "pivot_counts",
-    "unpivot_stack",
-    "range_join_bucketed",
-    "rfm_segments",
-    "winsorize_stats",
-    "equidepth_deciles",
-    "shuffle_hash_join_control",
-    "grouped_correlation",
-    "copurchase_pairs",
-    "trend_slope",
-    "mode_median_stats",
-    "shard_migration",
-    # rows-only re-checks (5)
-    "approx_aggregates",
-    "compressibility",
-    "equidepth_sampled",
-    "hll_distinct_merge",
-    "kll_quantile_merge",
-    # freshness rotation: the 31 oldest-checked (r1 head, flagships in)
-    "word_count",
-    "inverted_index",
-    "per_source_count",
-    "sorted_group_concat",
-    "mr_wordcount_shim",
-    "kv_replay",
-    "shard_distribution",
-    "shard_rebalance",
-    "q1_pricing_summary",
-    "q2_min_cost_supplier",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "q4_order_priority",
-    "q6_forecast_revenue",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_profit",
-    "q10_returned_items",
-    "q11_supplier_concentration",
-    "q12_priority_lines",
-    "q13_customer_distribution",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q16_supplier_counts",
-    "q17_small_quantity_revenue",
-    "q18_large_orders",
-    "q19_disjunctive_parts",
-    "q20_promo_heavy_suppliers",
-    "q21_waiting_suppliers",
-    "q22_idle_customers",
-    "global_sort_range",
-]
-
-_R4_WINDOW = [
-    # r3-new keys (6) — first driver evidence for the newest oracles
-    "dsir_importance_weights",
-    "k_anonymity_risk",
-    "stream_cdc_upsert",
-    "ann_lsh_topk",
-    "semdedup_recall",
-    "sketch_error_bounds",
-    # graph tier (3)
-    "bfs_hops",
-    "label_propagation",
-    "triangle_count",
-    # textstats family (11)
-    "extract_entities",
-    "gopher_rules",
-    "lang_id",
-    "quality_score",
-    "token_stats",
-    "fingerprint",
-    "repetition_score",
-    "pii_mask",
-    "bigram_lm",
-    "char_entropy",
-    "sentiment_lexicon",
-    # custom sources (3)
-    "custom_source_runs",
-    "custom_source_pushdown",
-    "custom_stream_source",
-    # format roundtrips (4)
-    "xml_roundtrip_agg",
-    "csv_roundtrip_agg",
-    "orc_roundtrip_agg",
-    "parquet_zstd_roundtrip",
-    # approx builtins (2)
-    "hll_overlap",
-    "approx_topk_builtin",
-    # maintenance / sql leftovers (4)
-    "join_skew_profile",
-    "pseudonymized_join",
-    "sql_execute_immediate",
-    "try_arithmetic",
-    # doc-embedding ANN + sampling (7)
-    "doc_hash_embedding",
-    "doc_ann_topk",
-    "negative_sampling",
-    "stratified_sample",
-    "weighted_sample",
-    "per_source_cap",
-    "mix_weights",
-    # multimodal (2)
-    "multimodal_resize",
-    "frame_sample",
-    # events / windows / as-of (8)
-    "interval_overlap_join",
-    "activity_gaps",
-    "tumbling_window_agg",
-    "sliding_window_agg",
-    "sessionize",
-    "asof_join",
-    "cogrouped_asof",
-    "resample_ffill",
-]
-
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Registry order = driver verification priority: the _R5_WINDOW
-    keys (50, all oracle-backed, none previously driver-checked) come
-    first, then every other key in its family order, with the
-    cumulatively driver-green entries last. See ROTATION.md for the
-    r6 schedule (the last 8 + rows-only re-checks) that completes the
-    sweep.
+    """Registry order = driver verification priority: the _R11_WINDOW
+    keys (50, all oracle-backed) come first, then every other key in
+    its family order. ROTATION.md schedules the next window.
     """
     base = {
         # --- north-star LLM pipeline: dedup / similarity (§7.4) ---

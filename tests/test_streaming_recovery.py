@@ -9,10 +9,14 @@ replay the unfinished batch idempotently.
 
 from __future__ import annotations
 
+import gc
+import importlib
 import os
 import shutil
+import time
 
 import pyspark.sql.functions as F
+import pytest
 
 
 def _write_file(spark, src: str, name: str, ids: range) -> None:
@@ -796,12 +800,13 @@ def test_decontaminate_restart_never_double_counts(spark, tmp_path_factory):
 
 
 def test_reliable_checkpoint_materialization(spark, sf_dir, monkeypatch):
-    """SPARK_GRAFT_RELIABLE_CHECKPOINT=1 switches the sinks' result
-    materialization from localCheckpoint (single-JVM) to a RELIABLE
+    """SPARK_GRAFT_RELIABLE_CHECKPOINT=1 switches every lineage cut
+    (``session.materialize``: sink results and batch operators' cuts)
+    from localCheckpoint (single-JVM) to a RELIABLE
     checkpoint in the session checkpoint dir — the cluster-safe posture:
     the returned frame must survive the deletion of its backing table
     and equal the default-path result, and the checkpoint dir must
-    actually hold the blocks."""
+    actually hold the blocks until the frame is dropped."""
     from tinymapreduce_spark.sources.textfiles import SCRATCH
     from tinymapreduce_spark.streaming.sinks import stream_wap_sink
 
@@ -820,6 +825,71 @@ def test_reliable_checkpoint_materialization(spark, sf_dir, monkeypatch):
     )
     reliable = {(r.event_type): (r.n, r.total_value) for r in out.collect()}
     assert reliable == default
+
+    # A batch operator's lineage cut honours the knob too: its blocks
+    # land in the checkpoint dir, and its result equals the default's.
+    from tinymapreduce_spark.operators.sketches import digit_bucket_quantiles
+
+    def rdd_dirs() -> set[str]:
+        return {d for _, ds, _ in os.walk(local) for d in ds if d.startswith("rdd-")}
+
+    before = rdd_dirs()
+    reliable_q = sorted(digit_bucket_quantiles(spark, sf_dir).collect())
+    cut = rdd_dirs() - before
+    assert cut, "sketch table was not reliably checkpointed"
+    # The frame is gone: the context cleaner deletes its checkpoint
+    # files (cleaning runs after a JVM GC, asynchronously).
+    deadline = time.monotonic() + 60
+    while cut & rdd_dirs() and time.monotonic() < deadline:
+        gc.collect()
+        spark.sparkContext._jvm.System.gc()
+        time.sleep(0.5)
+    assert not cut & rdd_dirs(), "reliable checkpoint files outlived their frame"
+    monkeypatch.delenv("SPARK_GRAFT_RELIABLE_CHECKPOINT")
+    assert reliable_q == sorted(digit_bucket_quantiles(spark, sf_dir).collect())
+
+
+@pytest.mark.parametrize(
+    "module, sink, prefix, fail",
+    [
+        ("streaming.sinks", "stream_quality_filter", "quality_stream", "publish"),
+        ("streaming.sinks", "stream_wap_sink", "wap_stream", "read"),
+        ("streaming.state", "stream_kv_dedup", "kv_dedup_stream", "read"),
+        (
+            "sources.textfiles",
+            "custom_stream_sink",
+            "custom_stream_sink_",
+            "processAllAvailable",
+        ),
+    ],
+)
+def test_failed_sink_run_leaves_no_scratch(
+    spark, sf_dir, monkeypatch, module, sink, prefix, fail
+):
+    """A streaming sink whose per-batch step (``publish``), stream run
+    (``processAllAvailable``) or finish step (``read``) raises must
+    still delete its run-scoped table, feed and output dirs under
+    SCRATCH."""
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    from tinymapreduce_spark.sources.manifest_sink import ManifestTable
+    from tinymapreduce_spark.sources.textfiles import SCRATCH
+
+    def runs() -> set[str]:
+        return {d for d in os.listdir(SCRATCH) if d.startswith(prefix)}
+
+    os.makedirs(SCRATCH, exist_ok=True)
+
+    def boom(*args, **kwargs):
+        raise RuntimeError(f"injected {fail} failure")
+
+    before = runs()
+    target = StreamingQuery if fail == "processAllAvailable" else ManifestTable
+    monkeypatch.setattr(target, fail, boom)
+    mod = importlib.import_module(f"tinymapreduce_spark.{module}")
+    with pytest.raises(Exception, match="injected"):
+        getattr(mod, sink)(spark, sf_dir)
+    assert runs() == before
 
 
 def test_decontaminate_eval_grams_built_once_per_run(spark, monkeypatch):

@@ -43,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tinymapreduce_spark.session import materialize
 from tinymapreduce_spark.sources.loaders import load_table, spread_for_cpu
 
 PERCEPTRON_ROUNDS = 4
@@ -135,10 +136,9 @@ def perceptron_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats = _features(spark, sf_dir).persist()
     try:
         w = _train(feats)
-        return (
+        return materialize(
             _scored(feats, w)
             .select("doc_id", F.col("y").alias("label"), "pred", "margin")
-            .localCheckpoint(eager=True)
         )
     finally:
         feats.unpersist()

@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tinymapreduce_spark.session import materialize
 from tinymapreduce_spark.sources.loaders import load_table
 
 K_CLUSTERS = 8
@@ -147,7 +148,7 @@ def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         for _ in range(KMEANS_ITERS):
             centroids = _update_centroids(_assign(vecs, centroids), centroids)
         final = _assign(vecs, centroids)
-        return (
+        return materialize(
             final.groupBy("cluster")
             .agg(
                 F.count(F.lit(1)).alias("n_vecs"),
@@ -158,7 +159,6 @@ def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("mean_sq_dist"),
             )
             .orderBy("cluster")
-            .localCheckpoint(eager=True)
         )
     finally:
         vecs.unpersist()

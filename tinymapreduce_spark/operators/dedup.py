@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from tinymapreduce_spark.functions.hashing import h60 as _h60
 from tinymapreduce_spark.functions.text import normalized_text, tokens
+from tinymapreduce_spark.session import materialize
 from tinymapreduce_spark.sources.loaders import documents_for_cpu, load_table
 
 SHINGLE_K = 3  # token 3-gram shingles
@@ -183,7 +184,7 @@ def ngram_jaccard_pairs(
     if hot_df_cap is not None:
         dfreq = dfreq.where(F.col("df") < hot_df_cap)
     # one inner join applies the cap AND attaches df for prefix ranking
-    sh = raw.join(dfreq, "h").localCheckpoint(eager=True)
+    sh = materialize(raw.join(dfreq, "h"))
     sets = _doc_sets(sh.select("doc_id", "h"))
     w = Window.partitionBy("doc_id").orderBy("df", "h")
     prefix = (
@@ -264,7 +265,7 @@ def boilerplate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = documents_for_cpu(spark, sf_dir)
     # Both the df-count branch and the semi-join branch consume the
     # shingle relation — materialize it so the corpus scans + explode
-    # run once. Eager localCheckpoint, not cache(): checkpoint blocks
+    # run once. materialize, not cache(): checkpoint blocks
     # are released by the context cleaner when the frame is GC'd,
     # whereas cache() pins blocks in the CacheManager until an explicit
     # clear — in a long-lived multi-query session (the bench lap, any
@@ -272,16 +273,16 @@ def boilerplate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # accumulate and later CPU-heavy queries absorb the GC pressure
     # (r8's 24 s hybrid_rrf_ndcg walls; same convention as
     # semdedup_drops' cells frame).
-    # Known tradeoff (ADVICE r10 #2, applies to every localCheckpoint
-    # in this tier): localCheckpoint TRUNCATES lineage with no
+    # Known tradeoff (ADVICE r10 #2, applies to every lineage cut in
+    # this tier): the default localCheckpoint TRUNCATES lineage with no
     # recompute path — on a real cluster, losing an executor that
     # holds checkpoint blocks fails the consuming query where cache()
     # would recompute. Acceptable here (single-process local mode; on
     # a cluster these are seconds-long intra-query intermediates whose
     # retry is the query itself); a deployment that needs
-    # executor-loss tolerance for them should use reliable
-    # checkpoint(eager=True) to cluster storage instead.
-    sh = _shingles(docs).localCheckpoint(eager=True)
+    # executor-loss tolerance sets SPARK_GRAFT_RELIABLE_CHECKPOINT=1,
+    # which turns every ``materialize`` into a reliable checkpoint.
+    sh = materialize(_shingles(docs))
     hot = (
         sh.groupBy("h")
         .agg(F.count(F.lit(1)).alias("df"))
@@ -429,7 +430,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str, threshold: float = NGRAM
     portability is not needed and hashing throughput matters more.
     """
     docs = documents_for_cpu(spark, sf_dir)
-    sh = _shingles_portable(docs).localCheckpoint(eager=True)
+    sh = materialize(_shingles_portable(docs))
     bands = _lsh_bands(_minhash_signature(sh))
     cand = (
         bands.alias("a")
@@ -556,7 +557,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str, max_hamming: int = 3) -> Dat
     the portable hash family — the driver hash-compares against
     DEDUP_SIMHASH_SQL exactly."""
     docs = documents_for_cpu(spark, sf_dir)
-    sim = _simhash(docs).localCheckpoint(eager=True)
+    sim = materialize(_simhash(docs))
     bands = sim.select(
         "doc_id",
         "simhash",
@@ -711,13 +712,10 @@ def dedup_incremental_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5(normalized_text("text")).alias("content_key"),
         (batch_byte < 64).alias("is_new"),
     )
-    base_index = (
-        keyed.where(~F.col("is_new"))
-        .select("content_key")
-        .distinct()
-        # eager localCheckpoint over persist: blocks are GC-released,
-        # so repeated bench invocations don't accumulate storage
-        .localCheckpoint(eager=True)
+    # materialize over persist: blocks are GC-released, so repeated
+    # bench invocations don't accumulate storage
+    base_index = materialize(
+        keyed.where(~F.col("is_new")).select("content_key").distinct()
     )
 
     pos = _bloom_positions(F.col("content_key"))
@@ -1255,7 +1253,7 @@ def dedup_incremental_minhash(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2), 16, 10
     ).cast("int")
     flagged = docs.withColumn("is_new", batch_byte < 64)
-    sh = _shingles_portable(flagged).localCheckpoint(eager=True)
+    sh = materialize(_shingles_portable(flagged))
     flags = flagged.select("doc_id", "is_new")
     bands = _lsh_bands(_minhash_signature(sh)).join(flags, "doc_id")
     new_b = bands.where(F.col("is_new")).select("doc_id", "band", "band_hash")

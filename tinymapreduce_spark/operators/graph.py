@@ -15,7 +15,7 @@ count is the graph DIAMETER (a 1M-node chain needs 1M rounds; this
 needs ~40). That difference is the whole ballgame at 100 TB.
 
 Spark-specific posture for iterative algorithms:
-- `localCheckpoint(eager=True)` every round truncates the lineage —
+- `session.materialize` every round truncates the lineage —
   without it the plan doubles per iteration and the driver dies in
   analysis long before the data is the bottleneck.
 - convergence is detected by an order-insensitive edge-set checksum
@@ -27,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from tinymapreduce_spark.session import materialize
 
 
 def _canon(edges: DataFrame) -> DataFrame:
@@ -53,7 +55,7 @@ def connected_components(edges: DataFrame, max_rounds: int = 50) -> DataFrame:
     component = smallest node id reachable. Two-phase star contraction,
     driver loop with per-round lineage truncation.
     """
-    e = _canon(edges).localCheckpoint(eager=True)
+    e = materialize(_canon(edges))
     prev = None
     for _ in range(max_rounds):
         # large-star: for each node, link every LARGER neighbor to the
@@ -74,7 +76,7 @@ def connected_components(edges: DataFrame, max_rounds: int = 50) -> DataFrame:
         small = withm.select(F.col("v").alias("u"), F.col("minv").alias("v")).union(
             withm.select("u", F.col("minv").alias("v"))
         )
-        e = _canon(small).localCheckpoint(eager=True)
+        e = materialize(_canon(small))
         cur = _checksum(e)
         if cur == prev:
             break
@@ -130,7 +132,7 @@ def pagerank(
     equi-join on src that AQE plans as broadcast while ranks are small
     and shuffle at scale), one tiny scalar aggregate for dangling mass
     (crossJoin of a 1-row frame — never a collect of data rows), and
-    `localCheckpoint(eager=True)` to truncate lineage. Per-round cost is
+    `session.materialize` to truncate lineage. Per-round cost is
     O(|E|) shuffled bytes — the same bound as one groupBy over the edge
     list — so 10 rounds at 100 TB is 10 bounded shuffles, not a growing
     plan.
@@ -158,7 +160,7 @@ def pagerank(
         # init, and the dangling anti-join / per-round left join all
         # reuse it instead of re-deriving the caller's distinct/union
         # lineage.
-        nodes = nodes.localCheckpoint(eager=True)
+        nodes = materialize(nodes)
         n_nodes = nodes.count()
     if n_nodes == 0:  # empty graph -> empty ranking (schema-stable)
         return nodes.select(
@@ -169,7 +171,7 @@ def pagerank(
     base = PR_SCALE // n_nodes
     outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     # (src, dst, outdeg) is loop-invariant: materialize once.
-    fanout = edges.join(outdeg, "src").localCheckpoint(eager=True)
+    fanout = materialize(edges.join(outdeg, "src"))
     # Both loop-invariant coverage facts come from ONE aggregate job
     # over the edge list (the setup jobs, not the iterations, dominate
     # wall time at moderate scale — r02 verdict item #5):
@@ -195,13 +197,11 @@ def pagerank(
     # already emits a row per node and the per-round nodes-left-join —
     # one extra O(|V|) shuffle per round — is dropped too.
     dangling_nodes = (
-        nodes.join(
-            outdeg, nodes["node"] == outdeg["src"], "left_anti"
-        ).localCheckpoint(eager=True)
+        materialize(nodes.join(outdeg, nodes["node"] == outdeg["src"], "left_anti"))
         if has_dangling
         else None
     )
-    # Lineage is truncated by localCheckpoint; when ranks is consumed
+    # Lineage is truncated by materialize; when ranks is consumed
     # once per round (no dangling aggregate reading it a second time),
     # a 5-round cadence amortizes the materialization barrier without
     # re-execution risk (single consumer => the lazy chain between
@@ -259,7 +259,7 @@ def pagerank(
                         F.expr(new_rank_full).alias("rank_i"),
                     )
                 )
-            ranks = ranks.localCheckpoint(eager=True)
+            ranks = materialize(ranks)
         return ranks.select(
             "node",
             "rank_i",
@@ -293,7 +293,7 @@ def pagerank(
         )
         ranks = new_ranks.select("node", F.expr(new_rank).alias("rank_i"))
         if it % ckpt_every == ckpt_every - 1 or it == iters - 1:
-            ranks = ranks.localCheckpoint(eager=True)
+            ranks = materialize(ranks)
     return ranks.select(
         "node", "rank_i", (F.col("rank_i") / F.lit(float(PR_SCALE))).alias("rank")
     )
@@ -362,7 +362,7 @@ def pagerank_trade(spark, sf_dir: str) -> DataFrame:
     # Materialize the edge build ONCE; every setup consumer (node set,
     # out-degrees, fanout, coverage aggregate) then reads the in-memory
     # edge list instead of re-deriving the orders×lineitem join.
-    edges = _trade_edges(spark, sf_dir).localCheckpoint(eager=True)
+    edges = materialize(_trade_edges(spark, sf_dir))
     nodes = edges.select(F.col("src").alias("node")).union(
         edges.select(F.col("dst").alias("node"))
     ).distinct()
@@ -526,7 +526,7 @@ def bfs_hops(spark, sf_dir: str) -> DataFrame:
     Scale shape: per round ONE equi-join shuffle bounded by the edges
     touched by the frontier plus one anti-join against the visited set
     (16 B/node), the textbook distributed-BFS bound. The visited set is
-    ``localCheckpoint``ed each round so lineage stays flat and the next
+    materialized each round so lineage stays flat and the next
     frontier is a free scan of materialized rows (``hop == h``), never a
     re-execution of the anti-join. Rounds are FIXED (no data-dependent
     early exit), so the result is a pure function of the graph and the
@@ -536,7 +536,7 @@ def bfs_hops(spark, sf_dir: str) -> DataFrame:
     the oracle agrees by construction)."""
     from tinymapreduce_spark.sources.loaders import load_table
 
-    edges = _trade_edges(spark, sf_dir).localCheckpoint(eager=True)
+    edges = materialize(_trade_edges(spark, sf_dir))
     nation = load_table(spark, sf_dir, "nation").where(
         F.col("n_name") == BFS_SEED_NATION
     )
@@ -545,9 +545,7 @@ def bfs_hops(spark, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
         .select((F.col("c_custkey").cast("long") * 2).alias("node"))
     )
-    dist = seeds.select(
-        "node", F.lit(0).cast("long").alias("hop")
-    ).localCheckpoint(eager=True)
+    dist = materialize(seeds.select("node", F.lit(0).cast("long").alias("hop")))
     # Round 11 note: a static-plan variant of this loop (explicit
     # broadcasts, AQE off per round) was built and A/B-measured at a
     # WASH (~2.5 s both ways) — unlike pagerank, the visited set's two
@@ -562,7 +560,7 @@ def bfs_hops(spark, sf_dir: str) -> DataFrame:
             .join(dist, "node", "left_anti")
             .select("node", F.lit(h).cast("long").alias("hop"))
         )
-        dist = dist.union(nxt).localCheckpoint(eager=True)
+        dist = materialize(dist.union(nxt))
     return dist.select(_trade_label().alias("node"), "hop").orderBy("hop", "node")
 
 
@@ -616,12 +614,11 @@ def label_propagation(spark, sf_dir: str) -> DataFrame:
     DuckDB oracle (LABEL_PROPAGATION_SQL) unrolls the same rounds as
     chained MATERIALIZED CTEs with a ROW_NUMBER argmax — different
     surface syntax, identical (count DESC, label ASC) selection."""
-    edges = _trade_edges(spark, sf_dir).localCheckpoint(eager=True)
-    labels = (
+    edges = materialize(_trade_edges(spark, sf_dir))
+    labels = materialize(
         edges.select(F.col("src").alias("node"))
         .distinct()
         .select("node", F.col("node").alias("label"))
-        .localCheckpoint(eager=True)
     )
     # Round 11 note: a pagerank-style static chain (all 4 rounds lazily
     # chained, explicit label broadcast, AQE off for the final eager
@@ -637,7 +634,7 @@ def label_propagation(spark, sf_dir: str) -> DataFrame:
             F.col("dst").alias("node"), "label"
         )
         counts = nb.groupBy("node", "label").agg(F.count(F.lit(1)).alias("cnt"))
-        labels = (
+        labels = materialize(
             counts.groupBy("node")
             .agg(
                 F.max(
@@ -645,7 +642,6 @@ def label_propagation(spark, sf_dir: str) -> DataFrame:
                 ).alias("best")
             )
             .select("node", (-F.col("best.nl")).alias("label"))
-            .localCheckpoint(eager=True)
         )
     return (
         labels.groupBy("label")

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tinymapreduce_spark.functions.text import tokens
+from tinymapreduce_spark.session import materialize
 from tinymapreduce_spark.sources.loaders import documents_for_cpu
 
 # (query_id, terms) — vocabulary drawn from the synthetic corpus
@@ -62,13 +63,15 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the plan tokenizes the corpus exactly once, and everything after
     # runs on n_docs-sized rows.
     all_terms = sorted({t for _, terms in BM25_QUERIES for t in terms})
-    per_doc = tok.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("dl"),
-        *[
-            F.sum(F.when(F.col("term") == t, 1).otherwise(0)).alias(f"tf_{i}")
-            for i, t in enumerate(all_terms)
-        ],
-    ).localCheckpoint(eager=True)
+    per_doc = materialize(
+        tok.groupBy("doc_id").agg(
+            F.count(F.lit(1)).alias("dl"),
+            *[
+                F.sum(F.when(F.col("term") == t, 1).otherwise(0)).alias(f"tf_{i}")
+                for i, t in enumerate(all_terms)
+            ],
+        )
+    )
     stats = per_doc.agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("total_len")
     )

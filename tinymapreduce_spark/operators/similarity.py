@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tinymapreduce_spark.functions.vectors import cosine_similarity
+from tinymapreduce_spark.session import materialize
 from tinymapreduce_spark.sources.loaders import load_table
 
 N_QUERIES = 10  # vec_id < 10 are the demo query vectors
@@ -614,16 +615,14 @@ def semdedup_drops(
     # (b-side bucketed by vec_id, a-side replicated) to spread the
     # within-cell pair work over k * SEMDEDUP_SALT shuffle partitions —
     # the same skew treatment as plans/layout.py::salted_skew_join.
-    # cells is O(N * nassign) narrow rows; localCheckpoint (eager) so the
+    # cells is O(N * nassign) narrow rows; materialized so the
     # self-join's two sides share one computation of the assignment
     # window — unlike persist(), its blocks are released by the context
     # cleaner when the frame is GC'd, so repeated invocations in a
     # long-lived bench session don't accumulate storage.
     from tinymapreduce_spark.functions.vectors import dot, l2_norm
 
-    cells = cells.withColumn("nrm", l2_norm(F.col("embedding"))).localCheckpoint(
-        eager=True
-    )
+    cells = materialize(cells.withColumn("nrm", l2_norm(F.col("embedding"))))
     a = cells.select(
         F.col("vec_id").alias("id_a"),
         F.col("embedding").alias("emb_a"),
@@ -1020,10 +1019,9 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumer (event-log: 10 heavy stages instead of 5, 2.0 s vs
     # 4.5 s for identical runs). The explicit count tracks cluster
     # cores instead of the previous hard 32.
-    emb = (
+    emb = materialize(
         load_table(spark, sf_dir, "embeddings")
         .repartition(spark.sparkContext.defaultParallelism, "vec_id")
-        .localCheckpoint(eager=True)
     )
 
     # IVF: cell assignment + query probes (shared with ann_ivf_topk)
@@ -1747,7 +1745,12 @@ def semdedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("emb_b"),
         F.col("nrm").alias("nrm_b"),
     )
-    truth = (
+    # truth feeds BOTH the semi-join and its own count below —
+    # materialize the (tiny, <= sample-sized) id set once instead of
+    # running the |sample|^2 pair pass twice (guide §5 caching: reused
+    # AND expensive to recompute; materialized blocks release with the
+    # frame, not the CacheManager)
+    truth = materialize(
         a.crossJoin(F.broadcast(b))
         .where(F.col("id_a") < F.col("id_b"))
         .where(
@@ -1760,12 +1763,6 @@ def semdedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("id_b")
         .distinct()
-        # truth feeds BOTH the semi-join and its own count below —
-        # materialize the (tiny, <= sample-sized) id set once instead
-        # of running the |sample|^2 pair pass twice (guide §5 caching:
-        # reused AND expensive to recompute; eager localCheckpoint so
-        # blocks release with the frame, not the CacheManager)
-        .localCheckpoint(eager=True)
     )
     drops = (
         semdedup_drops(spark, sf_dir)

@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from tinymapreduce_spark.session import materialize
 from tinymapreduce_spark.sources.loaders import documents_for_cpu, load_table
 
 HLL_LG_K = 12  # 2^12 registers: ~1.6% relative standard error, 4 KB sketch
@@ -53,8 +54,8 @@ def hll_distinct_merge_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.hll_sketch_agg("o_custkey", F.lit(HLL_LG_K)).alias("sk")
     )
     # Cache: the ALL row must union the *same* per-group sketches
-    # (localCheckpoint: GC-released, no cross-invocation storage leak).
-    per_group = per_group.localCheckpoint(eager=True)
+    # (materialize: GC-released, no cross-invocation storage leak).
+    per_group = materialize(per_group)
     groups = per_group.select(
         F.col("o_orderpriority").alias("grp"),
         F.hll_sketch_estimate("sk").alias("approx_custkeys"),
@@ -78,7 +79,7 @@ def kll_quantile_merge_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_group = li.groupBy("l_returnflag").agg(
         F.kll_sketch_agg_double("price", F.lit(KLL_K)).alias("sk")
     )
-    per_group = per_group.localCheckpoint(eager=True)
+    per_group = materialize(per_group)
 
     def quantile_cols(df: DataFrame) -> DataFrame:
         cols = [
@@ -372,7 +373,7 @@ def hll_portable_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("grp", "reg")
         .agg(F.max("rho").alias("mj"))
     )
-    regs = regs.localCheckpoint(eager=True)
+    regs = materialize(regs)
     merged = (
         regs.groupBy("reg")
         .agg(F.max("mj").alias("mj"))
@@ -479,7 +480,7 @@ def hll_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     rho = F.when(F.col("w") == 0, F.lit(52)).otherwise(
         F.lit(52) - F.length(F.bin(F.col("w")))
     )
-    regs = (
+    regs = materialize(
         base.select(
             "yr",
             F.col("h").bitwiseAND(F.lit(HLLP_M - 1).cast("long")).alias("reg"),
@@ -488,7 +489,6 @@ def hll_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("yr", "reg", rho.alias("rho"))
         .groupBy("yr", "reg")
         .agg(F.max("rho").alias("mj"))
-        .localCheckpoint(eager=True)
     )
     years = regs.select("yr").distinct()
     pairs = (
@@ -592,7 +592,7 @@ def digit_bucket_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets = li.select("grp", lb.alias("lb")).groupBy("grp", "lb").agg(
         F.count(F.lit(1)).alias("cnt")
     )
-    buckets = buckets.localCheckpoint(eager=True)
+    buckets = materialize(buckets)
     merged = (
         buckets.groupBy("lb")
         .agg(F.sum("cnt").alias("cnt"))

@@ -34,7 +34,7 @@ Scale shape: per round, ONE corpus-wide pair aggregation (partial
 agg collapses each partition's pairs before the (x, y) shuffle), the
 argmax via TakeOrderedAndProject (never a global sort), and the merge
 applied through a broadcast of the 1-row winner — no driver-side data
-beyond O(1).  ``localCheckpoint`` truncates lineage per round (same
+beyond O(1).  ``materialize`` truncates lineage per round (same
 convention as operators/graph.py).  The working vocabulary is capped
 at the top ``BPE_VOCAB`` word types — at 100 TB the word-type table
 is Zipf-bounded and the cap is the standard training practice
@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tinymapreduce_spark.functions.text import tokens
+from tinymapreduce_spark.session import materialize
 from tinymapreduce_spark.sources.loaders import documents_for_cpu
 
 BPE_MERGES = 8
@@ -135,14 +136,13 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ties in pair frequency break on (x ASC, y ASC) — a total order,
     so the entire training trajectory is a pure function of the data
     and the DuckDB oracle (``BPE_TRAIN_SQL``) replays it exactly."""
-    vocab = _initial_vocab(spark, sf_dir).localCheckpoint(eager=True)
+    vocab = materialize(_initial_vocab(spark, sf_dir))
     rules: list[DataFrame] = []
     for r in range(1, BPE_MERGES + 1):
-        best = (
+        best = materialize(
             _pair_counts(vocab)
             .orderBy(F.desc("n"), F.asc("x"), F.asc("y"))
             .limit(1)
-            .localCheckpoint(eager=True)
         )
         rules.append(
             best.select(
@@ -153,7 +153,7 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("n").alias("pair_n"),
             )
         )
-        vocab = _apply_merge(vocab, best).localCheckpoint(eager=True)
+        vocab = materialize(_apply_merge(vocab, best))
     out = rules[0]
     for extra in rules[1:]:
         out = out.unionAll(extra)

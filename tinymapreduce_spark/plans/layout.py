@@ -30,6 +30,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tinymapreduce_spark.session import materialize
 from tinymapreduce_spark.sources.loaders import load_table
 
 SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".tmp")
@@ -406,7 +407,7 @@ def bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     confs at OPTIMIZATION time (= first action), so the confs (broadcast
     disabled to simulate the at-scale regime) must be live exactly when
     the plan first materializes. The operator therefore eagerly
-    localCheckpoints the frame inside the conf scope — no driver-side
+    materializes the frame inside the conf scope — no driver-side
     ``collect()``; the result stays a distributed frame whose
     materialized blocks hold the bloom-pruned execution (and are
     GC-released after use), so caller re-execution reads those,
@@ -416,7 +417,9 @@ def bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     with _temp_confs(spark, BLOOM_CONFS):
-        out = (
+        # materialize, not persist: it runs under the scoped confs, and
+        # its blocks are GC-released (no leak across bench invocations)
+        out = materialize(
             li.join(
                 orders.where(F.col("o_orderpriority") == "1-URGENT"),
                 li.l_orderkey == orders.o_orderkey,
@@ -428,10 +431,6 @@ def bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("double")
                 .alias("total_price"),
             )
-            # eager localCheckpoint: materializes under the scoped
-            # confs AND releases its blocks via GC (no persist leak
-            # across bench invocations)
-            .localCheckpoint(eager=True)
         )
     return out
 

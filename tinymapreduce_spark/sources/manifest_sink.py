@@ -41,6 +41,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 from tinymapreduce_spark.pyworker import prime_worker
+from tinymapreduce_spark.session import materialize
 
 
 def _src_fp(sf_dir: str, table: str) -> str:
@@ -511,7 +512,7 @@ def _split_files_by_key_frame(
     if len(overlapping) > MERGE_PLAN_CHUNK:
         # the probe side re-enters the join once per chunk below —
         # compute the distinct key set once instead of per chunk
-        probe = probe.localCheckpoint(eager=True)
+        probe = materialize(probe)
     conj = None
     for i in range(BLOOM_K):
         pos = F.pmod(

@@ -333,36 +333,34 @@ def custom_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     the straight word count — multi-epoch output reassembles exactly or
     the shared oracle flips."""
     import shutil
-    import uuid as _uuid
+    import uuid
 
+    from tinymapreduce_spark.session import materialize
     from tinymapreduce_spark.sources import mr_runs_source
 
     runs_dir = _ensure_json_runs(spark, sf_dir)
     mr_runs_source.register(spark)
     tag = os.path.basename(os.path.normpath(sf_dir))
-    base = os.path.join(SCRATCH, f"custom_stream_sink_{tag}_{_uuid.uuid4().hex[:8]}")
+    base = os.path.join(SCRATCH, f"custom_stream_sink_{tag}_{uuid.uuid4().hex[:8]}")
     sink, ckpt = os.path.join(base, "out"), os.path.join(base, "ckpt")
-
-    stream = spark.readStream.format("mr_runs").option("path", runs_dir).load()
-    q = (
-        stream.select("key", "value")
-        .writeStream.format("mr_runs")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .start()
-    )
     try:
-        q.processAllAvailable()
+        stream = spark.readStream.format("mr_runs").option("path", runs_dir).load()
+        q = (
+            stream.select("key", "value")
+            .writeStream.format("mr_runs")
+            .option("path", sink)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        back = spark.read.format("mr_runs").option("path", sink).load()
+        return materialize(
+            back.groupBy(F.col("key").alias("word")).agg(F.count(F.lit(1)).alias("cnt"))
+        )
     finally:
-        q.stop()
-
-    back = spark.read.format("mr_runs").option("path", sink).load()
-    out = back.groupBy(F.col("key").alias("word")).agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    from tinymapreduce_spark.streaming.sinks import _materialize
-
-    out = out.transform(_materialize)
-    shutil.rmtree(base, ignore_errors=True)
-    return out
+        # run-scoped: removed on every exit, a failed run included
+        shutil.rmtree(base, ignore_errors=True)

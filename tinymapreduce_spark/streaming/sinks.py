@@ -7,80 +7,149 @@ sink's job, via idempotent commits keyed by batchId (the published
 pattern behind every transactional Spark sink). The WAP manifest table
 (sources/manifest_sink.py) gives exactly that: ``publish(snapshot_id=
 f"batch-{batch_id}")`` is a no-op when that id already committed, so a
-replayed batch can never double-publish.
+replayed batch can never double-publish. This is the streaming analog
+of the reference MapReduce worker's exactly-once output story
+(temp-file + rename per reduce task), lifted to a versioned multi-file
+table.
 
-This is the streaming analog of the reference's exactly-once output
-story (temp-file + rename per reduce task,
-``/root/reference/src/mr/worker.go:160-184``) lifted to a versioned
-multi-file table.
+Every foreachBatch sink runs on one skeleton, ``run_batch_sink``:
 
-Result materialization: each query here returns a ``_materialize``-d
-frame and then deletes the run-scoped backing table directory. The
-default path is ``localCheckpoint(eager=True)`` — lineage truncation
-WITHOUT replication, safe in this single-JVM local deployment where
-executor == driver. For a multi-executor cluster the helper switches
-(``SPARK_GRAFT_RELIABLE_CHECKPOINT=1``) to a RELIABLE ``checkpoint``:
-blocks land in the session checkpoint directory (fault-tolerant
-storage on a real cluster), so an executor loss after the backing
-table is deleted cannot strand the returned frame — the cluster-safe
-posture the round-4 verdict's residual asked for, behind one env knob
-and covered by tests/test_streaming_recovery.py.
+- It owns the run: a fresh run id and one run-scoped dir under SCRATCH
+  holding the ``ManifestTable`` and the feed. The table is fresh per
+  run because micro-batch ids restart at 0 per query — a reused table
+  would no-op on stale snapshots.
+- A batch ``feed`` is written as parquet (one file per partition, so
+  the caller picks the split) and streamed back ``per_trigger`` files
+  per trigger, so the per-batch path really runs several times. A
+  streaming ``feed`` runs as-is, in the caller's output mode: complete
+  for wap's aggregate, update for ``state.stream_kv_dedup``'s dedup
+  state.
+- ``start`` → ``processAllAvailable`` → ``stop``; the table's current
+  version then goes through the caller's ``finish`` step and is
+  materialized (``session.materialize``), because the run dir is
+  deleted next — in a ``finally``, so a failed batch or finish step
+  leaves nothing behind either.
+
+The counter sinks (cms, ann, chunk, quality, perplexity, decontaminate)
+fold each batch's partial counters into the current version with
+``merge_counters`` (read current + union + re-sum) and publish under
+the batch id: a replayed batch recomputes the merge against whatever is
+current, then hits the idempotent no-op publish, so counts never
+double-add. Counter addition is exact and associative, so the final
+table equals the one-shot batch aggregate — the shared DuckDB oracle
+each key is hash-checked against. The keyed-change sinks (cdc_upsert,
+cdc_apply_changes, dv_erasure) seed the table with the orders base
+version and apply each batch as one commit under its batch id.
 """
 
 from __future__ import annotations
 
+import decimal
 import os
+import shutil
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tinymapreduce_spark.operators.multimodal import BINFILE_CAP as _BINFILE_CAP
 from tinymapreduce_spark.pyworker import prime_worker
-from tinymapreduce_spark.sources.loaders import events_stream_source, normalize_event_ts
+from tinymapreduce_spark.session import materialize
+from tinymapreduce_spark.sources.loaders import (
+    documents_for_cpu,
+    events_stream_source,
+    load_table,
+    normalize_event_ts,
+)
 from tinymapreduce_spark.sources.manifest_sink import ManifestTable, cdc_change_feed
 from tinymapreduce_spark.sources.textfiles import SCRATCH
 
 
-def _materialize(df: DataFrame) -> DataFrame:
-    """Truncate lineage so the run-scoped backing dirs can be deleted
-    (chain-friendly via ``df.transform(_materialize)``).
+def run_batch_sink(
+    prefix: str,
+    feed: DataFrame,
+    per_batch: Callable[[ManifestTable, DataFrame, int], object],
+    finish: Callable[[DataFrame], DataFrame] | None = None,
+    per_trigger: int = 2,
+    seed: Callable[[ManifestTable], object] | None = None,
+    mode: str = "append",
+) -> DataFrame:
+    """Run one foreachBatch sink (module docstring) and return its
+    materialized result: ``seed(table)`` before the stream starts,
+    ``per_batch(table, batch_df, batch_id)`` per micro-batch in output
+    ``mode``, then ``finish`` (default: none) over the table's current
+    version."""
+    spark = feed.sparkSession
+    run_dir = os.path.join(SCRATCH, f"{prefix}_{uuid.uuid4().hex[:8]}")
+    try:
+        table = ManifestTable(os.path.join(run_dir, "table"))
+        if seed is not None:
+            seed(table)
+        stream = feed
+        if not feed.isStreaming:
+            src = os.path.join(run_dir, "feed")
+            feed.write.parquet(src)
+            stream = (
+                spark.readStream.schema(spark.read.parquet(src).schema)
+                .option("maxFilesPerTrigger", str(per_trigger))
+                .parquet(src)
+            )
+        q = (
+            stream.writeStream.outputMode(mode)
+            .foreachBatch(lambda df, i: per_batch(table, df, i))
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        out = table.read(spark)
+        return materialize(finish(out) if finish else out)
+    finally:
+        shutil.rmtree(run_dir, ignore_errors=True)
 
-    Default: ``localCheckpoint`` — fast, unreplicated, correct where
-    executor == driver (this local deployment). With
-    ``SPARK_GRAFT_RELIABLE_CHECKPOINT=1``: a RELIABLE ``checkpoint``
-    into the session checkpoint dir, which on a real cluster lives on
-    fault-tolerant storage — a lost executor can no longer strand the
-    returned frame after its source table is deleted."""
-    if os.environ.get("SPARK_GRAFT_RELIABLE_CHECKPOINT") == "1":
-        sc = df.sparkSession.sparkContext
-        if sc.getCheckpointDir() is None:
-            explicit = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
-            if explicit:
-                sc.setCheckpointDir(explicit)
-            else:
-                # ADVICE r5: a local-scratch default is NOT fault-tolerant
-                # storage — the executor-loss safety this knob claims only
-                # holds when the dir is shared (HDFS/S3/NFS). Warn loudly
-                # instead of silently defaulting, and purge checkpoint
-                # data stranded by previous processes (checkpoint blocks
-                # are never deleted by Spark itself).
-                default_dir = os.path.join(SCRATCH, "reliable_ckpt")
-                import shutil
-                import warnings
 
-                warnings.warn(
-                    "SPARK_GRAFT_RELIABLE_CHECKPOINT=1 with no checkpoint"
-                    " dir configured: defaulting to local scratch"
-                    f" ({default_dir}), which is only fault-tolerant when"
-                    " executor == driver. On a multi-executor cluster set"
-                    " SPARK_GRAFT_CHECKPOINT_DIR to shared storage.",
-                    stacklevel=2,
-                )
-                shutil.rmtree(default_dir, ignore_errors=True)  # stale runs
-                sc.setCheckpointDir(default_dir)
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
+def merge_counters(
+    table: ManifestTable, part: DataFrame, keys: list[str], sums: list[str]
+) -> DataFrame:
+    """The frame to publish for a batch's partial counters ``part``:
+    ``part`` itself on the first batch, else the table's current
+    version plus ``part``, re-summed per ``keys`` (``sums`` as long)."""
+    if table.current_version() is None:
+        return part
+    return (
+        table.read(part.sparkSession)
+        .unionByName(part)
+        .groupBy(*keys)
+        .agg(*[F.sum(c).cast("long").alias(c) for c in sums])
+    )
+
+
+def _orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
+    )
+
+
+def _seed_orders(orders: DataFrame) -> Callable[[ManifestTable], object]:
+    """Seed step of the keyed-change sinks: the orders table as the base
+    version, range-split on the key with per-file key stats, so each
+    batch's stats semi-join prunes to the files of its key slice."""
+    return lambda table: table.publish(
+        orders.repartitionByRange(8, "o_orderkey"),
+        snapshot_id="base",
+        stats_cols=["o_orderkey"],
+    )
+
+
+def _status_totals(final: DataFrame) -> DataFrame:
+    """Finish step of the keyed-change sinks: per-status row count and
+    addition-order-exact price total."""
+    return final.groupBy("o_orderstatus").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("total"),
+    )
 
 
 def stream_wap_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -91,34 +160,19 @@ def stream_wap_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     all events (shared SQL oracle). Batch replays hit the idempotent
     no-op path, so recovery never double-counts."""
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (
-        events_stream_source(spark, sf_dir, schema)
-    )
-    stream = normalize_event_ts(stream)
+    stream = normalize_event_ts(events_stream_source(spark, sf_dir, schema))
     agg = stream.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
     )
-
-    # Fresh table per invocation: micro-batch ids restart at 0 per query,
-    # so reusing a table dir across runs would no-op on stale snapshots.
-    table = ManifestTable(os.path.join(SCRATCH, f"wap_stream_{uuid.uuid4().hex[:8]}"))
-
-    def publish_batch(batch_df: DataFrame, batch_id: int) -> None:
-        table.publish(batch_df, snapshot_id=f"batch-{batch_id}")
-
-    q = agg.writeStream.outputMode("complete").foreachBatch(publish_batch).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    # materialize, then drop the run-scoped table dir (fresh per run —
-    # batch ids restart per query, so it can never be reused anyway)
-    out = table.read(spark).transform(_materialize)
-    import shutil
-
-    shutil.rmtree(table.table_dir, ignore_errors=True)
-    return out
+    return run_batch_sink(
+        "wap_stream",
+        agg,
+        lambda table, batch_df, batch_id: table.publish(
+            batch_df, snapshot_id=f"batch-{batch_id}"
+        ),
+        mode="complete",
+    )
 
 
 STREAM_WAP_SQL = """
@@ -132,19 +186,12 @@ GROUP BY event_type
 def stream_cms_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Count-Min maintenance — the incremental form of
     ``operators/sketches.cms_heavy_hitters``: the corpus arrives as
-    micro-batches (the single-file testdata is pre-split into 8 parquet
-    files, streamed 2 per trigger, so the merge path really runs), each
-    batch's (row, bucket) cell counts are ADDED into the versioned
-    sketch table (read current + union + re-sum + publish), and the
-    final table is queried batch-side for the top-k heavy hitters.
-
-    Exactly-once: the read-modify-write publishes under snapshot_id =
-    batch id — a replayed batch recomputes the merge against whatever
-    is current, then hits the idempotent no-op publish, so counts can
-    never double-add. Because cell addition is exact and associative,
-    the final cell table equals the one-shot batch sketch bit-for-bit —
-    the query output shares CMS_SQL with the batch operator, and the
-    driver hash-checks it.
+    micro-batches (8 feed files, 2 per trigger), each batch's
+    (row, bucket) cell counts are ADDED into the versioned sketch
+    table, and the final table is queried batch-side for the top-k
+    heavy hitters. The final cell table equals the one-shot batch
+    sketch bit-for-bit, so the query output shares CMS_SQL with the
+    batch operator.
 
     At 100 TB this is the production sketch story: per-batch partial
     cell tables are a few KB regardless of batch size; history gives
@@ -155,65 +202,36 @@ def stream_cms_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         CMS_TOPK,
         _cms_cells,
     )
-    from tinymapreduce_spark.sources.loaders import load_table
 
     # RAW table for the feed write (the tokenize + sketch fold runs on
     # the BATCH reads): the spread-for-CPU view would just move the
     # text through a second exchange before the repartition(8) one.
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    run = uuid.uuid4().hex[:8]
-    src = os.path.join(SCRATCH, f"cms_stream_src_{run}")
-    docs.repartition(8).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(src)
-    )
-    table = ManifestTable(os.path.join(SCRATCH, f"cms_stream_{run}"))
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
+    def merge_batch(table: ManifestTable, batch_df: DataFrame, batch_id: int) -> None:
         cells = (
             batch_df.select(F.explode(tokens("text")).alias("token"))
             .select(F.explode(_cms_cells(F.col("token"))).alias("c"))
             .groupBy(F.col("c.r").alias("r"), F.col("c.b").alias("b"))
             .agg(F.count(F.lit(1)).alias("cell_n"))
         )
-        if table.current_version() is not None:
-            cells = (
-                table.read(s)
-                .unionByName(cells)
-                .groupBy("r", "b")
-                .agg(F.sum("cell_n").alias("cell_n"))
-            )
-        table.publish(cells, snapshot_id=f"batch-{batch_id}")
+        table.publish(
+            merge_counters(table, cells, ["r", "b"], ["cell_n"]),
+            snapshot_id=f"batch-{batch_id}",
+        )
 
-    q = stream.writeStream.foreachBatch(merge_batch).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    def top_k(cells: DataFrame) -> DataFrame:
+        cand = docs.select(F.explode(tokens("text")).alias("token")).distinct()
+        est = (
+            cand.select("token", F.explode(_cms_cells(F.col("token"))).alias("c"))
+            .select("token", F.col("c.r").alias("r"), F.col("c.b").alias("b"))
+            .join(F.broadcast(cells), ["r", "b"])
+            .groupBy("token")
+            .agg(F.min("cell_n").alias("est_count"))
+        )
+        return est.orderBy(F.desc("est_count"), F.asc("token")).limit(CMS_TOPK)
 
-    cells = table.read(spark)
-    cand = docs.select(F.explode(tokens("text")).alias("token")).distinct()
-    est = (
-        cand.select("token", F.explode(_cms_cells(F.col("token"))).alias("c"))
-        .select("token", F.col("c.r").alias("r"), F.col("c.b").alias("b"))
-        .join(F.broadcast(cells), ["r", "b"])
-        .groupBy("token")
-        .agg(F.min("cell_n").alias("est_count"))
-    )
-    out = (
-        est.orderBy(F.desc("est_count"), F.asc("token"))
-        .limit(CMS_TOPK)
-        .transform(_materialize)
-    )
-    import shutil
-
-    shutil.rmtree(table.table_dir, ignore_errors=True)
-    shutil.rmtree(src, ignore_errors=True)
-    return out
+    return run_batch_sink("cms_stream", docs.repartition(8), merge_batch, top_k)
 
 
 def stream_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -227,15 +245,8 @@ def stream_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     addition-order-exact and oracle-checkable. At scale this is how a
     production pipeline exports throughput/quality counters to its
     metrics bus for free."""
-    import uuid as _uuid
-
-    from tinymapreduce_spark.sources.loaders import normalize_event_ts
-
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (
-        events_stream_source(spark, sf_dir, schema)
-    )
-    stream = normalize_event_ts(stream)
+    stream = normalize_event_ts(events_stream_source(spark, sf_dir, schema))
     observed = stream.observe(
         "ingest_counters",
         F.count(F.lit(1)).alias("n_rows"),
@@ -244,7 +255,7 @@ def stream_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # a real (tiny) downstream computation so the observe node has a consumer
     agg = observed.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-    name = f"stream_obs_{_uuid.uuid4().hex[:8]}"
+    name = f"stream_obs_{uuid.uuid4().hex[:8]}"
     q = agg.writeStream.outputMode("complete").format("memory").queryName(name).start()
     try:
         q.processAllAvailable()
@@ -255,8 +266,6 @@ def stream_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
                 rows.append((int(m["n_rows"]), m["total_value"], int(m["n_null_props"])))
     finally:
         q.stop()
-    import decimal
-
     n_rows = sum(r[0] for r in rows)
     # per-batch totals may arrive as float through the progress JSON;
     # str() recovers the exact decimal(18,2) value, and the cross-batch
@@ -474,24 +483,10 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     with table size). Keys are disjoint across batches, so the final
     state is order-independent.
 
-    Exactly-once: each batch commits under ``snapshot_id=cdc-{batch_id}``
-    — a replayed batch re-derives against the current version and hits
-    the idempotent no-op publish, the streaming analog of the
-    reference's rename-commit story. Oracle: CASE + UNION ALL
-    reconstruction of the final state (shared shape with
-    ``manifest_upsert``, different key classes)."""
-    from tinymapreduce_spark.sources.loaders import load_table
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
-    )
-    run = uuid.uuid4().hex[:8]
-    table = ManifestTable(os.path.join(SCRATCH, f"cdc_tbl_{run}"))
-    table.publish(
-        orders.repartitionByRange(8, "o_orderkey"),
-        snapshot_id="base",
-        stats_cols=["o_orderkey"],
-    )
+    Each batch commits under ``snapshot_id=cdc-{batch_id}``. Oracle:
+    CASE + UNION ALL reconstruction of the final state (shared shape
+    with ``manifest_upsert``, different key classes)."""
+    orders = _orders(spark, sf_dir)
     updates = orders.where("o_custkey % 7 = 0").withColumn(
         "o_totalprice", F.col("o_totalprice") * 2
     )
@@ -501,46 +496,16 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderstatus",
         "o_totalprice",
     )
-    feed_dir = os.path.join(SCRATCH, f"cdc_feed_{run}")
-    updates.unionByName(inserts).repartitionByRange(4, "o_orderkey").write.mode(
-        "overwrite"
-    ).parquet(feed_dir)
-
-    schema = spark.read.parquet(feed_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed_dir)
+    return run_batch_sink(
+        "cdc",
+        updates.unionByName(inserts).repartitionByRange(4, "o_orderkey"),
+        lambda table, batch_df, batch_id: table.upsert_matching(
+            batch_df.sparkSession, "o_orderkey", batch_df, snapshot_id=f"cdc-{batch_id}"
+        ),
+        _status_totals,
+        per_trigger=1,
+        seed=_seed_orders(orders),
     )
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        table.upsert_matching(
-            batch_df.sparkSession, "o_orderkey", batch_df,
-            snapshot_id=f"cdc-{batch_id}",
-        )
-
-    q = stream.writeStream.foreachBatch(apply_batch).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    dec = lambda c: F.col(c).cast("decimal(18,2)")  # noqa: E731
-    out = (
-        table.read(spark)
-        .groupBy("o_orderstatus")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(dec("o_totalprice")).cast("double").alias("total"),
-        )
-        # materialize before deleting the run-scoped scratch dirs below
-        .transform(_materialize)
-    )
-    import shutil
-
-    shutil.rmtree(table.table_dir, ignore_errors=True)
-    shutil.rmtree(feed_dir, ignore_errors=True)
-    return out
 
 
 STREAM_CDC_UPSERT_SQL = """
@@ -572,64 +537,21 @@ def stream_cdc_apply_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     RANGE-split on the key into 4 files streamed one per trigger, so
     the stats semi-join prunes each batch to its key slice of the
     table (the ``stream_cdc_upsert`` pruning story, now with erasure
-    in the same commit — GDPR deletion riding a CDC feed).
-
-    Exactly-once: each batch commits under ``snapshot_id=cdca-{batch}``;
-    replays hit the idempotent no-op publish."""
-    from tinymapreduce_spark.sources.loaders import load_table
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
+    in the same commit — GDPR deletion riding a CDC feed). Each batch
+    commits under ``snapshot_id=cdca-{batch_id}``."""
+    orders = _orders(spark, sf_dir)
+    return run_batch_sink(
+        "cdca",
+        # op-class predicates shared with the batch twin so driver query
+        # and streaming twin can never drift off their common oracle
+        cdc_change_feed(orders).repartitionByRange(4, "o_orderkey"),
+        lambda table, batch_df, batch_id: table.apply_changes(
+            batch_df.sparkSession, "o_orderkey", batch_df, snapshot_id=f"cdca-{batch_id}"
+        ),
+        _status_totals,
+        per_trigger=1,
+        seed=_seed_orders(orders),
     )
-    run = uuid.uuid4().hex[:8]
-    table = ManifestTable(os.path.join(SCRATCH, f"cdca_tbl_{run}"))
-    table.publish(
-        orders.repartitionByRange(8, "o_orderkey"),
-        snapshot_id="base",
-        stats_cols=["o_orderkey"],
-    )
-    feed_dir = os.path.join(SCRATCH, f"cdca_feed_{run}")
-    # op-class predicates shared with the batch twin so driver query
-    # and streaming twin can never drift off their common oracle
-    cdc_change_feed(orders).repartitionByRange(
-        4, "o_orderkey"
-    ).write.mode("overwrite").parquet(feed_dir)
-
-    schema = spark.read.parquet(feed_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed_dir)
-    )
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        table.apply_changes(
-            batch_df.sparkSession, "o_orderkey", batch_df,
-            snapshot_id=f"cdca-{batch_id}",
-        )
-
-    q = stream.writeStream.foreachBatch(apply_batch).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    dec = lambda c: F.col(c).cast("decimal(18,2)")  # noqa: E731
-    out = (
-        table.read(spark)
-        .groupBy("o_orderstatus")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(dec("o_totalprice")).cast("double").alias("total"),
-        )
-        # materialize before deleting the run-scoped scratch dirs below
-        .transform(_materialize)
-    )
-    import shutil
-
-    shutil.rmtree(table.table_dir, ignore_errors=True)
-    shutil.rmtree(feed_dir, ignore_errors=True)
-    return out
 
 
 def stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -637,22 +559,15 @@ def stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``operators/similarity.ann_ivf_topk``'s cell index: the coarse
     quantizer is trained ONCE on the bounded base sample (the
     train-once / ingest-forever posture of every production vector
-    store), then vectors arrive as micro-batches (the embeddings table
-    pre-split into 8 parquet files, streamed 2 per trigger) and each
-    batch's nearest-centroid assignments are ADDED into a versioned
-    per-cell postings-stats table (read current + union + re-sum +
-    publish). The query returns the final per-cell row counts and
-    vec_id checksums.
-
-    Exactly-once: the read-modify-write publishes under snapshot_id =
-    batch id, so a replayed batch recomputes against whatever is
-    current and then hits the idempotent no-op publish — counts can
-    never double-add. Because the codebook is frozen and per-cell
-    addition is exact and associative, the final table equals the
-    one-shot batch assignment bit-for-bit: the oracle replays the
-    integer-Lloyd's training and full-corpus assignment in SQL
-    (STREAM_ANN_INGEST_SQL shares the IVF oracle's CTEs) and the
-    driver hash-checks it.
+    store), then vectors arrive as micro-batches (8 feed files, 2 per
+    trigger) and each batch's nearest-centroid assignments are ADDED
+    into a versioned per-cell postings-stats table. The query returns
+    the final per-cell row counts and vec_id checksums. Because the
+    codebook is frozen and per-cell addition is exact and associative,
+    the final table equals the one-shot batch assignment bit-for-bit:
+    the oracle replays the integer-Lloyd's training and full-corpus
+    assignment in SQL (STREAM_ANN_INGEST_SQL shares the IVF oracle's
+    CTEs).
 
     At 100 TB this is how a vector index actually grows: assignment is
     a narrow map per batch (one broadcast centroid row, no shuffle),
@@ -670,19 +585,7 @@ def stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not cents:
         return spark.createDataFrame([], "cid int, n_vecs long, id_sum long")
 
-    run = uuid.uuid4().hex[:8]
-    src = os.path.join(SCRATCH, f"ann_stream_src_{run}")
-    emb.repartition(8).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(src)
-    )
-    table = ManifestTable(os.path.join(SCRATCH, f"ann_stream_{run}"))
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
+    def merge_batch(table: ManifestTable, batch_df: DataFrame, batch_id: int) -> None:
         part = (
             _with_cell_dists(batch_df, cents)
             .select("vec_id", _nearest_cid().alias("cid"))
@@ -692,16 +595,6 @@ def stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("vec_id").alias("id_sum"),
             )
         )
-        if table.current_version() is not None:
-            part = (
-                table.read(s)
-                .unionByName(part)
-                .groupBy("cid")
-                .agg(
-                    F.sum("n_vecs").alias("n_vecs"),
-                    F.sum("id_sum").alias("id_sum"),
-                )
-            )
         # The stats table is O(NLIST) rows BY CONSTRUCTION (cid is the
         # grouping key of a bounded codebook), yet the aggregate leaves
         # it spread over every shuffle partition — each version was
@@ -711,22 +604,15 @@ def stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         # 0.26 s job per micro-batch was exactly this write). coalesce
         # narrows only this final O(NLIST) write; the assignment scan
         # and the aggregation stay parallel (guide §6 small files).
-        table.publish(part.coalesce(1), snapshot_id=f"batch-{batch_id}")
+        merged = merge_counters(table, part, ["cid"], ["n_vecs", "id_sum"])
+        table.publish(merged.coalesce(1), snapshot_id=f"batch-{batch_id}")
 
-    q = stream.writeStream.foreachBatch(merge_batch).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    out = table.read(spark).select(
-        "cid", "n_vecs", "id_sum"
-    ).transform(_materialize)
-    import shutil
-
-    shutil.rmtree(table.table_dir, ignore_errors=True)
-    shutil.rmtree(src, ignore_errors=True)
-    return out
+    return run_batch_sink(
+        "ann_stream",
+        emb.repartition(8),
+        merge_batch,
+        lambda final: final.select("cid", "n_vecs", "id_sum"),
+    )
 
 
 def _stream_ann_ingest_sql() -> str:
@@ -755,47 +641,34 @@ STREAM_ANN_INGEST_SQL = _stream_ann_ingest_sql()
 def stream_chunk_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming chunk-store ingestion — the incremental form of
     ``operators/dedup.content_chunk_dedup``: documents arrive as
-    micro-batches (the corpus pre-split into 8 parquet files, streamed
-    2 per trigger), each batch is content-defined-chunked and its
-    (source, chunk-md5, length) counts are ADDED into a versioned
-    chunk-identity table (read current + union + re-sum + publish
-    under idempotent batch-id snapshot ids). The query folds the final
-    table into the same per-source dedup-ratio rollup as the batch
-    operator — and because chunk boundaries depend only on document
-    CONTENT (never on batch composition) and count addition is exact
-    and associative, the end state equals the one-shot batch chunking
-    bit-for-bit: the oracle is CONTENT_CHUNK_SQL, shared verbatim.
+    micro-batches (8 feed files, 2 per trigger), each batch is
+    content-defined-chunked and its (source, chunk-md5, length) counts
+    are ADDED into a versioned chunk-identity table. The query folds
+    the final table into the same per-source dedup-ratio rollup as the
+    batch operator — and because chunk boundaries depend only on
+    document CONTENT (never on batch composition) and count addition is
+    exact and associative, the end state equals the one-shot batch
+    chunking bit-for-bit: the oracle is CONTENT_CHUNK_SQL, shared
+    verbatim.
 
     This is the storage-dedup ingest loop at 100 TB: the chunk-identity
     table grows with UNIQUE content only (16-byte digests + counts,
     never text), each batch's delta is a narrow map + digest-width
     shuffle, and a re-delivered batch can never double-count a chunk."""
     from tinymapreduce_spark.operators.dedup import content_chunks_df
-    from tinymapreduce_spark.sources.loaders import load_table
 
     # RAW table for the feed write: the only consumer of `docs` is the
-    # 8-file source materialization, whose repartition is already an
-    # exchange — routing it through the spread-for-CPU view would move
-    # the full text payload through a second, useless exchange (the
-    # CPU-heavy chunking runs on the BATCH reads, not here).
+    # 8-file feed, whose repartition is already an exchange — routing
+    # it through the spread-for-CPU view would move the full text
+    # payload through a second, useless exchange (the CPU-heavy
+    # chunking runs on the BATCH reads, not here).
     docs = (
         load_table(spark, sf_dir, "documents")
         .where(F.length("text") > 0)
         .select("doc_id", "source", "text")
     )
-    run = uuid.uuid4().hex[:8]
-    src = os.path.join(SCRATCH, f"chunk_stream_src_{run}")
-    docs.repartition(8).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(src)
-    )
-    table = ManifestTable(os.path.join(SCRATCH, f"chunk_stream_{run}"))
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
+    def merge_batch(table: ManifestTable, batch_df: DataFrame, batch_id: int) -> None:
         part = (
             content_chunks_df(batch_df)
             .select(
@@ -804,40 +677,26 @@ def stream_chunk_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("source", "h", "clen")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        if table.current_version() is not None:
-            part = (
-                table.read(s)
-                .unionByName(part)
-                .groupBy("source", "h", "clen")
-                .agg(F.sum("cnt").alias("cnt"))
+        table.publish(
+            merge_counters(table, part, ["source", "h", "clen"], ["cnt"]),
+            snapshot_id=f"batch-{batch_id}",
+        )
+
+    def rollup(final: DataFrame) -> DataFrame:
+        return (
+            final.groupBy("source")
+            .agg(
+                F.sum("cnt").alias("n_chunks"),
+                F.count(F.lit(1)).alias("n_unique_chunks"),
+                F.sum(F.col("cnt") * F.col("clen")).alias("chars_total"),
+                F.sum("clen").alias("chars_unique"),
             )
-        table.publish(part, snapshot_id=f"batch-{batch_id}")
-
-    q = stream.writeStream.foreachBatch(merge_batch).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    out = (
-        table.read(spark)
-        .groupBy("source")
-        .agg(
-            F.sum("cnt").alias("n_chunks"),
-            F.count(F.lit(1)).alias("n_unique_chunks"),
-            F.sum(F.col("cnt") * F.col("clen")).alias("chars_total"),
-            F.sum("clen").alias("chars_unique"),
+            .withColumn(
+                "dedup_ratio", F.round(F.col("chars_unique") / F.col("chars_total"), 6)
+            )
         )
-        .withColumn(
-            "dedup_ratio", F.round(F.col("chars_unique") / F.col("chars_total"), 6)
-        )
-        .transform(_materialize)
-    )
-    import shutil
 
-    shutil.rmtree(table.table_dir, ignore_errors=True)
-    shutil.rmtree(src, ignore_errors=True)
-    return out
+    return run_batch_sink("chunk_stream", docs.repartition(8), merge_batch, rollup)
 
 
 def stream_dv_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -851,67 +710,30 @@ def stream_dv_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
     base files stay byte-identical; the pytest companion on the batch
     path pins that). The query aggregates the DV-read final state.
 
-    Exactly-once: each batch commits under ``snapshot_id=dv-{batch_id}``,
-    so a replayed batch re-derives its positions against the current
-    version — already-deleted positions are skipped by the
-    never-record-twice rule — and hits the idempotent no-op publish.
-    Erase keys are disjoint across batches (range split), so the final
-    state is order-independent and equals the one-shot batch delete:
-    the oracle replays the erase predicate over the raw table.
+    Each batch commits under ``snapshot_id=dv-{batch_id}``; a replayed
+    batch re-derives its positions against the current version —
+    already-deleted positions are skipped by the never-record-twice
+    rule — and hits the idempotent no-op publish. Erase keys are
+    disjoint across batches (range split), so the final state is
+    order-independent and equals the one-shot batch delete: the oracle
+    replays the erase predicate over the raw table.
 
     At 100 TB this is how continuous right-to-be-forgotten actually
     ships: the erasure stream writes KBs of positions per batch while
     compaction (``optimize``) materializes on its own schedule."""
-    from tinymapreduce_spark.sources.loaders import load_table
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
+    orders = _orders(spark, sf_dir)
+    return run_batch_sink(
+        "dverase",
+        orders.where("o_custkey % 13 = 0")
+        .select("o_orderkey")
+        .repartitionByRange(4, "o_orderkey"),
+        lambda table, batch_df, batch_id: table.delete_matching_mor(
+            batch_df.sparkSession, "o_orderkey", batch_df, snapshot_id=f"dv-{batch_id}"
+        ),
+        _status_totals,
+        per_trigger=1,
+        seed=_seed_orders(orders),
     )
-    run = uuid.uuid4().hex[:8]
-    table = ManifestTable(os.path.join(SCRATCH, f"dverase_tbl_{run}"))
-    table.publish(
-        orders.repartitionByRange(8, "o_orderkey"),
-        snapshot_id="base",
-        stats_cols=["o_orderkey"],
-    )
-    erase = orders.where("o_custkey % 13 = 0").select("o_orderkey")
-    feed_dir = os.path.join(SCRATCH, f"dverase_feed_{run}")
-    erase.repartitionByRange(4, "o_orderkey").write.mode("overwrite").parquet(feed_dir)
-
-    schema = spark.read.parquet(feed_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed_dir)
-    )
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        table.delete_matching_mor(
-            batch_df.sparkSession, "o_orderkey", batch_df,
-            snapshot_id=f"dv-{batch_id}",
-        )
-
-    q = stream.writeStream.foreachBatch(apply_batch).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    dec = lambda c: F.col(c).cast("decimal(18,2)")  # noqa: E731
-    out = (
-        table.read(spark)
-        .groupBy("o_orderstatus")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(dec("o_totalprice")).cast("double").alias("total"),
-        )
-        .transform(_materialize)
-    )
-    import shutil
-
-    shutil.rmtree(table.table_dir, ignore_errors=True)
-    shutil.rmtree(feed_dir, ignore_errors=True)
-    return out
 
 
 STREAM_DV_ERASURE_SQL = """
@@ -926,41 +748,24 @@ GROUP BY o_orderstatus
 def stream_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming document-quality filtering — the incremental form of
     ``operators/textstats.gopher_rules``: the corpus arrives as
-    micro-batches (pre-split into 8 parquet files, 2 per trigger), each
-    batch runs the SAME Catalyst rule battery (shared
-    ``gopher_rules_df`` expressions) and its per-(lang, verdict)
-    accept/reject counters are ADDED into the versioned table
-    (read current + union + re-sum + publish). The final table equals
-    the one-shot batch aggregate exactly, because counter addition is
-    associative — the shared-SQL oracle the driver hash-checks.
+    micro-batches (8 feed files, 2 per trigger), each batch runs the
+    SAME Catalyst rule battery (shared ``gopher_rules_df`` expressions)
+    and its per-(lang, verdict) accept/reject counters are ADDED into
+    the versioned table. The final table equals the one-shot batch
+    aggregate — the shared-SQL oracle the driver hash-checks.
 
-    Exactly-once: the read-modify-write publishes under snapshot_id =
-    batch id, so a replayed batch recomputes the merge against whatever
-    is current and then hits the idempotent no-op publish — counts can
-    never double-add. At 100 TB this is the live curation dashboard:
-    per-batch verdict partials are O(|langs| x 2) rows regardless of
-    batch size, and table history time-travels the acceptance rate."""
+    At 100 TB this is the live curation dashboard: per-batch verdict
+    partials are O(|langs| x 2) rows regardless of batch size, and
+    table history time-travels the acceptance rate."""
     from tinymapreduce_spark.operators.textstats import gopher_rules_df
-    from tinymapreduce_spark.sources.loaders import load_table
 
     # RAW table for the feed write (not the spread-for-CPU view): the
     # rule battery runs on the BATCH reads inside foreachBatch; here
     # the text would just pay a second full exchange before the
     # repartition(8) one.
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "lang")
-    run = uuid.uuid4().hex[:8]
-    src = os.path.join(SCRATCH, f"quality_stream_src_{run}")
-    docs.repartition(8).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(src)
-    )
-    table = ManifestTable(os.path.join(SCRATCH, f"quality_stream_{run}"))
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
+    def merge_batch(table: ManifestTable, batch_df: DataFrame, batch_id: int) -> None:
         part = (
             gopher_rules_df(batch_df, passthrough=("lang",))
             .groupBy("lang", "passes")
@@ -969,30 +774,12 @@ def stream_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("n_words").cast("long").alias("n_words"),
             )
         )
-        if table.current_version() is not None:
-            part = (
-                table.read(s)
-                .unionByName(part)
-                .groupBy("lang", "passes")
-                .agg(
-                    F.sum("n_docs").alias("n_docs"),
-                    F.sum("n_words").cast("long").alias("n_words"),
-                )
-            )
-        table.publish(part, snapshot_id=f"batch-{batch_id}")
+        table.publish(
+            merge_counters(table, part, ["lang", "passes"], ["n_docs", "n_words"]),
+            snapshot_id=f"batch-{batch_id}",
+        )
 
-    q = stream.writeStream.foreachBatch(merge_batch).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    out = table.read(spark).transform(_materialize)
-    import shutil
-
-    shutil.rmtree(table.table_dir, ignore_errors=True)
-    shutil.rmtree(src, ignore_errors=True)
-    return out
+    return run_batch_sink("quality_stream", docs.repartition(8), merge_batch)
 
 
 def _stream_quality_sql() -> str:
@@ -1014,11 +801,11 @@ def stream_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     continuous-ingestion form of ``textstats.perplexity_buckets``: the
     bigram LM and the per-language tercile cutpoints are trained ONCE
     batch-side over the full corpus (CCNet trains offline, scores the
-    crawl as it arrives), frozen via eager localCheckpoint, and every
-    micro-batch scores its documents against the static model
-    (stream-static joins inside foreachBatch), labels them
-    head/middle/tail, and ADDs its per-(lang, bucket) counters into the
-    versioned table under idempotent batch-id publishes. Because the
+    crawl as it arrives), frozen via ``materialize``, and every
+    micro-batch (8 feed files, 2 per trigger) scores its documents
+    against the static model (stream-static joins inside
+    foreachBatch), labels them head/middle/tail, and ADDs its
+    per-(lang, bucket) counters into the versioned table. Because the
     frozen model is exactly the batch query's model, the final counter
     table equals the batch bucketing aggregated — the shared-SQL oracle
     the driver hash-checks.
@@ -1033,7 +820,6 @@ def stream_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         pplx_model_df,
         pplx_score_df,
     )
-    from tinymapreduce_spark.sources.loaders import documents_for_cpu
 
     docs = documents_for_cpu(spark, sf_dir).select("doc_id", "text", "lang")
     # Materialize the bigram pass ONCE: both the LM build and the
@@ -1041,33 +827,13 @@ def stream_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # frozen by its own eager materialization they would otherwise run
     # the doc-scan + explode + groupBy twice (separate jobs see no
     # ReuseExchange). One checkpoint halves the model-training setup.
-    bg_full = pplx_bigrams_df(docs).transform(_materialize)
+    bg_full = materialize(pplx_bigrams_df(docs))
     lm, starts = pplx_model_df(bg_full)
-    lm = lm.transform(_materialize)
-    starts = starts.transform(_materialize)
-    cuts = pplx_cuts_df(pplx_score_df(bg_full, lm, starts)).transform(_materialize)
+    lm = materialize(lm)
+    starts = materialize(starts)
+    cuts = materialize(pplx_cuts_df(pplx_score_df(bg_full, lm, starts)))
 
-    run = uuid.uuid4().hex[:8]
-    src = os.path.join(SCRATCH, f"pplx_stream_src_{run}")
-    # Feed write from the RAW table: `docs` (the spread view) is the
-    # right input for the CPU-heavy model training above, but routing
-    # the feed write through it would pay the spread exchange a second
-    # time just to re-exchange into 8 files.
-    from tinymapreduce_spark.sources.loaders import load_table
-
-    load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", "lang"
-    ).repartition(8).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(src)
-    )
-    table = ManifestTable(os.path.join(SCRATCH, f"pplx_stream_{run}"))
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
+    def merge_batch(table: ManifestTable, batch_df: DataFrame, batch_id: int) -> None:
         labeled = pplx_label_df(
             pplx_score_df(pplx_bigrams_df(batch_df), lm, starts), cuts
         )
@@ -1075,30 +841,17 @@ def stream_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_bigrams").cast("long").alias("n_bigrams"),
         )
-        if table.current_version() is not None:
-            part = (
-                table.read(s)
-                .unionByName(part)
-                .groupBy("lang", "bucket")
-                .agg(
-                    F.sum("n_docs").alias("n_docs"),
-                    F.sum("n_bigrams").cast("long").alias("n_bigrams"),
-                )
-            )
-        table.publish(part, snapshot_id=f"batch-{batch_id}")
+        table.publish(
+            merge_counters(table, part, ["lang", "bucket"], ["n_docs", "n_bigrams"]),
+            snapshot_id=f"batch-{batch_id}",
+        )
 
-    q = stream.writeStream.foreachBatch(merge_batch).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    out = table.read(spark).transform(_materialize)
-    import shutil
-
-    shutil.rmtree(table.table_dir, ignore_errors=True)
-    shutil.rmtree(src, ignore_errors=True)
-    return out
+    # Feed write from the RAW table: `docs` (the spread view) is the
+    # right input for the CPU-heavy model training above, but routing
+    # the feed write through it would pay the spread exchange a second
+    # time just to re-exchange into 8 files.
+    feed = load_table(spark, sf_dir, "documents").select("doc_id", "text", "lang")
+    return run_batch_sink("pplx_stream", feed.repartition(8), merge_batch)
 
 
 def _stream_pplx_sql() -> str:
@@ -1119,7 +872,7 @@ def stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``operators/curation.contamination_check``: the eval slice's
     distinct 3-gram set is computed ONCE up front (tiny — ~1/97th of
     the corpus — and broadcast into every micro-batch), then the
-    training corpus arrives as micro-batches (8 parquet files, 2 per
+    training corpus arrives as micro-batches (8 feed files, 2 per
     trigger); each batch left-semi joins its grams against the static
     eval set and ADDS its per-source (n_train_docs, n_contaminated)
     partials into the versioned table. Because every training doc
@@ -1128,47 +881,22 @@ def stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the one-shot batch aggregate — the shared oracle the driver
     hash-checks.
 
-    Exactly-once: read-modify-write published under snapshot_id =
-    batch id (idempotent replay), as every sink in this module. At
-    100 TB this is live leak monitoring for a training-data intake:
+    At 100 TB this is live leak monitoring for a training-data intake:
     the eval-gram set stays a broadcast-sized invariant, each batch's
     cost is one tokenize + one semi-join, and table history
     time-travels the contamination rate as the crawl streams in."""
     from tinymapreduce_spark.functions.text import tokens
     from tinymapreduce_spark.operators.curation import EVAL_MOD, _grams
-    from tinymapreduce_spark.sources.loaders import documents_for_cpu
 
     docs = documents_for_cpu(spark, sf_dir).select("doc_id", "source", "text")
     tokked = docs.select("doc_id", "source", tokens("text").alias("toks"))
-    eval_grams = (
+    eval_grams = materialize(
         _grams(tokked.where(F.col("doc_id") % EVAL_MOD == 0))
         .select("gram")
         .distinct()
-        .transform(_materialize)
     )
 
-    run = uuid.uuid4().hex[:8]
-    src = os.path.join(SCRATCH, f"decontam_stream_src_{run}")
-    # Feed write from the RAW table: `docs` (the spread view) is the
-    # right input for the eval-gram tokenize above, but the feed write
-    # needs no CPU spread — only the 8-file exchange.
-    from tinymapreduce_spark.sources.loaders import load_table
-
-    load_table(spark, sf_dir, "documents").select(
-        "doc_id", "source", "text"
-    ).where(F.col("doc_id") % EVAL_MOD != 0).repartition(8).write.mode(
-        "overwrite"
-    ).parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(src)
-    )
-    table = ManifestTable(os.path.join(SCRATCH, f"decontam_stream_{run}"))
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
+    def merge_batch(table: ManifestTable, batch_df: DataFrame, batch_id: int) -> None:
         b = batch_df.select("doc_id", "source", tokens("text").alias("toks"))
         contaminated = (
             _grams(b)
@@ -1186,27 +914,17 @@ def stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count("hit").alias("n_contaminated"),
             )
         )
-        if table.current_version() is not None:
-            part = (
-                table.read(s)
-                .unionByName(part)
-                .groupBy("source")
-                .agg(
-                    F.sum("n_train_docs").alias("n_train_docs"),
-                    F.sum("n_contaminated").alias("n_contaminated"),
-                )
-            )
-        table.publish(part, snapshot_id=f"batch-{batch_id}")
+        table.publish(
+            merge_counters(
+                table, part, ["source"], ["n_train_docs", "n_contaminated"]
+            ),
+            snapshot_id=f"batch-{batch_id}",
+        )
 
-    q = stream.writeStream.foreachBatch(merge_batch).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    out = table.read(spark).transform(_materialize)
-    import shutil
-
-    shutil.rmtree(table.table_dir, ignore_errors=True)
-    shutil.rmtree(src, ignore_errors=True)
-    return out
+    # Feed write from the RAW table: `docs` (the spread view) is the
+    # right input for the eval-gram tokenize above, but the feed write
+    # needs no CPU spread — only the 8-file exchange.
+    feed = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "source", "text"
+    ).where(F.col("doc_id") % EVAL_MOD != 0)
+    return run_batch_sink("decontam_stream", feed.repartition(8), merge_batch)

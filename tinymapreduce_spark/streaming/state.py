@@ -172,12 +172,8 @@ def stream_kv_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     kvraft sequential-client contract. Both deliveries of a retried op
     are exploded from the one source row, so first-delivery-wins holds
     within every micro-batch by construction."""
-    import os
-    import shutil
-
     from tinymapreduce_spark.operators.kv import RETRY_SEQ_OFFSET, replay_ops
-    from tinymapreduce_spark.sources.manifest_sink import ManifestTable
-    from tinymapreduce_spark.sources.textfiles import SCRATCH
+    from tinymapreduce_spark.streaming.sinks import run_batch_sink
 
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
 
@@ -238,27 +234,15 @@ def stream_kv_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-    table = ManifestTable(
-        os.path.join(SCRATCH, f"kv_dedup_stream_{uuid.uuid4().hex[:8]}")
-    )
-
-    def accumulate(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
+    def accumulate(table, batch_df: DataFrame, batch_id: int) -> None:
         ops = batch_df
         if table.current_version() is not None:
-            ops = table.read(s).unionByName(ops)
+            ops = table.read(batch_df.sparkSession).unionByName(ops)
         table.publish(ops, snapshot_id=f"batch-{batch_id}")
 
-    q = accepted.writeStream.outputMode("update").foreachBatch(accumulate).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    from tinymapreduce_spark.streaming.sinks import _materialize
-
-    out = replay_ops(table.read(spark)).transform(_materialize)
-    shutil.rmtree(table.table_dir, ignore_errors=True)
-    return out
+    return run_batch_sink(
+        "kv_dedup_stream", accepted, accumulate, finish=replay_ops, mode="update"
+    )
 
 
 def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
