@@ -12,9 +12,8 @@ from tinymapreduce_spark.plans import layout
 
 def test_compaction_reduces_files_and_preserves_rows(spark, sf_dir):
     out = layout.compact_small_files(spark, sf_dir)
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    frag = os.path.join(layout.SCRATCH, f"docs_fragmented_{tag}")
-    comp = os.path.join(layout.SCRATCH, f"docs_compacted_{tag}")
+    frag = layout.corpus_dir("docs_fragmented", sf_dir, "documents")
+    comp = layout.corpus_dir("docs_compacted", sf_dir, "documents")
     n_frag = len([f for f in os.listdir(frag) if f.endswith(".parquet")])
     n_comp = len([f for f in os.listdir(comp) if f.endswith(".parquet")])
     assert n_frag == 64

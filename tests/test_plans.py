@@ -836,15 +836,10 @@ def test_manifest_skipping_scan_reads_file_subset(spark, sf_dir):
     assert "o_orderdate" in p
     # pruning happened at planning time: the scan's file list is a
     # strict subset of the published snapshot
-    import os
+    from tinymapreduce_spark.sources.manifest_sink import ManifestTable
+    from tinymapreduce_spark.sources.textfiles import corpus_dir
 
-    from tinymapreduce_spark.sources.manifest_sink import ManifestTable, _src_fp
-    from tinymapreduce_spark.sources.textfiles import SCRATCH
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    table = ManifestTable(
-        os.path.join(SCRATCH, f"skip_orders_{tag}_{_src_fp(sf_dir, 'orders')}")
-    )
+    table = ManifestTable(corpus_dir("skip_orders", sf_dir, "orders"))
     total = len(table.snapshot(table.current_version()).files)
     pruned = table.read_pruned(spark, "o_orderdate", "1997-01-01", "1998-01-01")
     n_read = len(pruned.inputFiles())

@@ -31,8 +31,6 @@ oracle-observable rate.
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -335,30 +333,24 @@ FROM per
 
 
 PAIR_GRAPH_SCHEMA = "doc_a long, doc_b long, n_shared long, jaccard double"
-_PAIR_GRAPH_LOCK = threading.Lock()
 
 
 def _ensure_pair_graph(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the exact Jaccard pair graph ONCE per (session, sf)
-    as parquet; every consumer (the pairs query itself, clusters,
+    """Materialize the exact Jaccard pair graph ONCE per session and
+    corpus as parquet; every consumer (the pairs query itself, clusters,
     survivors — and any real pipeline stage) reads the materialization
     instead of re-running the prefix-filter join. This is the pipeline
     shape VERDICT r01's plan audit called for: detect once, reuse
-    everywhere. First caller pays; steady state is a tiny narrow scan.
-    The lock serializes concurrent first callers on a shared session
-    (the conf-marker check-then-write is not atomic)."""
-    import os
+    everywhere. First caller pays; steady state is a tiny narrow scan."""
+    from tinymapreduce_spark.sources.textfiles import build_once, corpus_dir
 
-    from tinymapreduce_spark.sources.textfiles import SCRATCH
+    out = corpus_dir("pair_graph", sf_dir, "documents")
+    return build_once(
+        spark,
+        out,
+        lambda: ngram_jaccard_pairs(spark, sf_dir).write.mode("overwrite").parquet(out),
+    )
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    out = os.path.join(SCRATCH, f"pair_graph_{tag}")
-    marker = f"spark.tinymr.pair_graph_{tag.replace('.', '_')}"
-    with _PAIR_GRAPH_LOCK:
-        if not spark.conf.get(marker, None):
-            ngram_jaccard_pairs(spark, sf_dir).write.mode("overwrite").parquet(out)
-            spark.conf.set(marker, "1")
-    return out
 
 NUM_MINHASH = 32  # k permutations
 LSH_BANDS = 8  # 8 bands x 4 rows: catches j>=0.5 pairs w.p. ~0.97

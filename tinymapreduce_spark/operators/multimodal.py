@@ -597,58 +597,30 @@ BINFILE_CAP = 200  # bounded file count for the file-based ingest path
 
 
 def _ensure_bmp_files(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize a directory of REAL .bmp files (one per document id
-    below BINFILE_CAP, pixels from the shared generation formula),
-    written DISTRIBUTED via foreachPartition with temp+rename commits —
-    at 100 TB an image corpus already lives as files in shared/object
-    storage, and each task writing its own files is exactly that shape.
-    Idempotent per (session, corpus identity): the dir is keyed by the
-    documents table's (size, mtime) fingerprint — the SAME identity the
-    streaming twin keys its checkpoint by — so a regenerated corpus
-    gets a fresh directory instead of leftover img_N.bmp files from the
-    old one leaking into the binaryFile listing."""
-    import os
+    """A directory of REAL .bmp files, one per document id below
+    BINFILE_CAP with pixels from the shared generation formula, written
+    by ``write_doc_files`` (distributed, temp+rename per file, built
+    once per session under the documents table's ``corpus_dir`` — the
+    SAME identity the streaming twin keys its checkpoint by, so a
+    regenerated corpus gets a fresh directory instead of leftover
+    img_N.bmp files from the old one leaking into the binaryFile
+    listing). At 100 TB an image corpus already lives as files in
+    shared/object storage, and each task writing its own files is
+    exactly that shape."""
+    from tinymapreduce_spark.sources.textfiles import write_doc_files
 
-    from tinymapreduce_spark.sources.manifest_sink import _src_fp
-    from tinymapreduce_spark.sources.textfiles import SCRATCH
+    def encode(ids: list[int]) -> bytes:
+        (d,) = ids
+        w, h = IMG_W(d), IMG_H(d)
+        px = [
+            [tuple(IMG_PIX(d, x, y, c) for c in range(3)) for x in range(w)]
+            for y in range(h)
+        ]
+        return encode_bmp(w, h, px)
 
-    from tinymapreduce_spark.sources.loaders import load_table
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    fp = _src_fp(sf_dir, "documents")
-    out_dir = os.path.join(SCRATCH, f"bmp_files_{tag}_{fp}")
-    marker = f"spark.tinymr.bmp_files_{tag.replace('.', '_')}_{fp}"
-    if not spark.conf.get(marker, None):
-        os.makedirs(out_dir, exist_ok=True)
-        # id-only column-pruned scan (the text column never leaves the
-        # footer) fanned to a few writer tasks — file creation is the
-        # work here, not the id read
-        docs = (
-            load_table(spark, sf_dir, "documents")
-            .select("doc_id")
-            .where(F.col("doc_id") < BINFILE_CAP)
-            .coalesce(8)
-        )
-
-        def write_part(rows) -> None:
-            prime_worker()
-            import os as _os
-
-            for row in rows:
-                d = int(row.doc_id)
-                w, h = IMG_W(d), IMG_H(d)
-                px = [
-                    [tuple(IMG_PIX(d, x, y, c) for c in range(3)) for x in range(w)]
-                    for y in range(h)
-                ]
-                tmp = _os.path.join(out_dir, f".img_{d}.tmp")
-                with open(tmp, "wb") as f:
-                    f.write(encode_bmp(w, h, px))
-                _os.replace(tmp, _os.path.join(out_dir, f"img_{d}.bmp"))
-
-        docs.foreachPartition(write_part)
-        spark.conf.set(marker, "1")
-    return out_dir
+    return write_doc_files(
+        spark, sf_dir, "bmp_files", BINFILE_CAP, 1, lambda d: f"img_{d}.bmp", encode
+    )
 
 
 def binary_files_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4246,88 +4218,36 @@ ADPCM_DOC_CAP = 500  # bounded file count for the file-based path
 
 def _ensure_wav_files(spark: SparkSession, sf_dir: str) -> str:
     """One IMA-ADPCM .wav per document (formula samples, formula block
-    indices), written distributed with temp+rename commits; idempotent
-    per corpus fingerprint — the .tar.gz/.bmp convention."""
-    import os
+    indices), written by ``write_doc_files`` — the .tar.gz/.bmp
+    convention."""
+    from tinymapreduce_spark.sources.textfiles import write_doc_files
 
-    from tinymapreduce_spark.sources.loaders import load_table
-    from tinymapreduce_spark.sources.manifest_sink import _src_fp
-    from tinymapreduce_spark.sources.textfiles import SCRATCH
+    def encode(ids: list[int]) -> bytes:
+        (d,) = ids
+        nb = IMA_NB(d)
+        samples = [IMA_SAMPLE(d, t) for t in range(9 * nb)]
+        return encode_wav_ima(samples, [(d + b) % 89 for b in range(nb)])
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    fp = _src_fp(sf_dir, "documents")
-    out_dir = os.path.join(SCRATCH, f"wav_files_{tag}_{fp}")
-    marker = f"spark.tinymr.wav_files_{tag.replace('.', '_')}_{fp}"
-    if not spark.conf.get(marker, None):
-        os.makedirs(out_dir, exist_ok=True)
-        docs = (
-            load_table(spark, sf_dir, "documents")
-            .select("doc_id")
-            .where(F.col("doc_id") < ADPCM_DOC_CAP)
-            .repartition(16)
-        )
-
-        def write_part(rows) -> None:
-            prime_worker()
-            import os as _os
-
-            for row in rows:
-                d = int(row.doc_id)
-                nb = IMA_NB(d)
-                samples = [IMA_SAMPLE(d, t) for t in range(9 * nb)]
-                idxs = [(d + b) % 89 for b in range(nb)]
-                blob = encode_wav_ima(samples, idxs)
-                path = _os.path.join(out_dir, f"doc_{d:06d}.wav")
-                tmp = path + f".tmp{_os.getpid()}"
-                with open(tmp, "wb") as f:
-                    f.write(blob)
-                _os.replace(tmp, path)
-
-        docs.foreachPartition(write_part)
-        spark.conf.set(marker, "1")
-    return out_dir
+    return write_doc_files(
+        spark, sf_dir, "wav_files", ADPCM_DOC_CAP, 1, lambda d: f"doc_{d:06d}.wav", encode
+    )
 
 
 def stream_adpcm_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental lossy-audio ingest: stream the .wav landing dir
     through the checkpointed binaryFile index, decode IMA ADPCM inside
     the stream, append per-doc stats to a parquet sink under
-    Trigger.AvailableNow, then aggregate the sink to ONE summary row.
-    Idempotent: re-running against the same checkpoint ingests nothing.
-    Oracle aggregates the 8-step unrolled ADPCM replay over the same
-    capped corpus."""
+    Trigger.AvailableNow (``run_available_now``), then aggregate the
+    sink to ONE summary row. Idempotent: re-running against the same
+    checkpoint ingests nothing. Oracle aggregates the 8-step unrolled
+    ADPCM replay over the same capped corpus."""
     import os
 
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
     from tinymapreduce_spark.sources.textfiles import SCRATCH
+    from tinymapreduce_spark.streaming.sinks import binary_file_stream, run_available_now
 
     src = _ensure_wav_files(spark, sf_dir)
-    base = os.path.join(SCRATCH, f"stream_{os.path.basename(src)}")
-    ckpt, sink = os.path.join(base, "ckpt"), os.path.join(base, "sink")
-
-    schema = StructType(
-        [
-            StructField("path", StringType()),
-            StructField("modificationTime", TimestampType()),
-            StructField("length", LongType()),
-            StructField("content", BinaryType()),
-        ]
-    )
-    blobs = (
-        spark.readStream.format("binaryFile")
-        .schema(schema)
-        .option("pathGlobFilter", "*.wav")
-        .load(src)
-        .select("path", "content")
-    )
+    blobs = binary_file_stream(spark, src, "*.wav").select("path", "content")
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         prime_worker()
@@ -4344,31 +4264,11 @@ def stream_adpcm_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 rows["decoded_sum"].append(sum(got))
             yield pd.DataFrame(rows)
 
-    q = (
-        blobs.mapInPandas(
-            parse, schema="doc_id long, n_samples long, decoded_sum long"
-        )
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("availableNow drain did not self-terminate")
-
-    has_parts = os.path.isdir(sink) and any(
-        f.endswith(".parquet") for f in os.listdir(sink)
-    )
-    back = (
-        spark.read.schema("doc_id long, n_samples long, decoded_sum long")
-        .parquet(sink)
-        if has_parts
-        else spark.createDataFrame(
-            [], "doc_id long, n_samples long, decoded_sum long"
-        )
+    out = "doc_id long, n_samples long, decoded_sum long"
+    back = run_available_now(
+        blobs.mapInPandas(parse, schema=out),
+        os.path.join(SCRATCH, f"stream_{os.path.basename(src)}"),
+        out,
     )
     return back.agg(
         F.count("*").alias("n_docs"),

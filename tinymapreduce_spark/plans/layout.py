@@ -32,8 +32,7 @@ from pyspark.sql import functions as F
 
 from tinymapreduce_spark.session import materialize
 from tinymapreduce_spark.sources.loaders import load_table
-
-SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".tmp")
+from tinymapreduce_spark.sources.textfiles import build_once, corpus_dir
 
 N_BUCKETS = 8
 SALT_BUCKETS = 16
@@ -42,12 +41,14 @@ SALT_BUCKETS = 16
 def _ensure_bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Persist orders+lineitem bucketed AND sorted on the join key.
 
-    Idempotent per (session, sf_dir): table names embed the sf tag. At
-    100 TB this is the one-off layout job whose cost every subsequent
-    join amortizes.
+    Idempotent per (session, source identity): a table is named by its
+    source's ``corpus_dir`` name, made a SQL identifier. At 100 TB this
+    is the one-off layout job whose cost every subsequent join amortizes.
     """
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_").replace("-", "_")
-    t_orders, t_lineitem = f"orders_b_{tag}", f"lineitem_b_{tag}"
+    t_orders, t_lineitem = (
+        os.path.basename(corpus_dir(f"{src}_b", sf_dir, src)).replace(".", "_").replace("-", "_")
+        for src in ("orders", "lineitem")
+    )
     warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
     for table, src, key in ((t_orders, "orders", "o_orderkey"), (t_lineitem, "lineitem", "l_orderkey")):
         if spark.catalog.tableExists(table):
@@ -99,16 +100,16 @@ GROUP BY o_orderpriority
 
 def _ensure_partitioned_docs(spark: SparkSession, sf_dir: str) -> str:
     """documents re-written partitioned by ``lang`` (hive-style dirs).
-    Idempotent per (session, sf_dir)."""
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(SCRATCH, f"docs_by_lang_{tag}")
-    marker = f"spark.tinymr.docs_by_lang_{tag.replace('.', '_')}"
-    if not spark.conf.get(marker, None):
-        load_table(spark, sf_dir, "documents").write.mode("overwrite").partitionBy(
-            "lang"
-        ).parquet(path)
-        spark.conf.set(marker, "1")
-    return path
+    Built once per session."""
+    path = corpus_dir("docs_by_lang", sf_dir, "documents")
+    return build_once(
+        spark,
+        path,
+        lambda: load_table(spark, sf_dir, "documents")
+        .write.mode("overwrite")
+        .partitionBy("lang")
+        .parquet(path),
+    )
 
 
 def partitioned_sink_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -188,9 +189,8 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     content-preserving; tests/test_layout_compact.py asserts the file
     counts.
     """
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    frag_dir = os.path.join(SCRATCH, f"docs_fragmented_{tag}")
-    compact_dir = os.path.join(SCRATCH, f"docs_compacted_{tag}")
+    frag_dir = corpus_dir("docs_fragmented", sf_dir, "documents")
+    compact_dir = corpus_dir("docs_compacted", sf_dir, "documents")
 
     docs = load_table(spark, sf_dir, "documents")
     docs.repartition(64).write.mode("overwrite").parquet(frag_dir)
@@ -235,12 +235,11 @@ def _morton16(x, y):
 def _zorder_dir(spark: SparkSession, sf_dir: str) -> str:
     """Rewrite lineitem Z-ordered on (l_partkey, l_suppkey): range
     partition + sort by the Morton code, so every output file covers a
-    small square-ish region of the 2-D key space. Idempotent per
-    (session, sf_dir)."""
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    out = os.path.join(SCRATCH, f"zorder_lineitem_{tag}")
-    marker = f"zorder_done_{tag}"
-    if not spark.conf.get(f"spark.tinymr.{marker}", None):
+    small square-ish region of the 2-D key space. Built once per
+    session."""
+    out = corpus_dir("zorder_lineitem", sf_dir, "lineitem")
+
+    def build() -> None:
         li = load_table(spark, sf_dir, "lineitem")
         # Quantize BOTH dims to the full 16-bit domain before
         # interleaving — with raw values, the wider-ranged key's high
@@ -270,8 +269,8 @@ def _zorder_dir(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(out)
         )
-        spark.conf.set(f"spark.tinymr.{marker}", "1")
-    return out
+
+    return build_once(spark, out, build)
 
 
 def zorder_pruned_agg(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -583,11 +583,10 @@ def catalog_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     the restatement; doubling a double is exact."""
     import os
 
-    from tinymapreduce_spark.sources.textfiles import SCRATCH
+    from tinymapreduce_spark.sources.textfiles import corpus_dir
 
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    tbl = f"orders_by_year_{tag}"
-    loc = os.path.join(SCRATCH, f"catalog_{tag}", tbl)
+    loc = corpus_dir("orders_by_year", sf_dir, "orders")
+    tbl = os.path.basename(loc).replace(".", "_").replace("-", "_")
     spark.sql(
         f"""CREATE TABLE IF NOT EXISTS {tbl}
             (o_orderkey BIGINT, o_totalprice DOUBLE, yr INT)

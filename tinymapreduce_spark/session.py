@@ -80,13 +80,10 @@ def bounded_state_partitions(spark: "SparkSession", key_domain: int):
     Scale posture: the cap is ``min(session setting, key_domain)`` — it
     can only REDUCE partitions to the number of distinct keys that can
     ever exist, never below the session's configured parallelism for
-    unbounded-key queries (which don't use this helper). Override with
-    ``SPARK_GRAFT_STREAM_STATE_PARTITIONS`` to force a value (e.g. to
-    reproduce pre-round-10 layouts).
+    unbounded-key queries (which don't use this helper).
     """
     cur = spark.conf.get("spark.sql.shuffle.partitions")
-    forced = int(os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "0"))
-    n = forced or min(int(cur), max(1, int(key_domain)))
+    n = min(int(cur), max(1, int(key_domain)))
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:
         yield
@@ -193,10 +190,7 @@ def get_spark(
         # units per query x 320 queries -> 4096 keeps every unit
         # resident for ~200 MB of metaspace; any multi-query production
         # session sizes this the same way (static conf: set at launch).
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "4096"),
-        )
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # events.parquet carries TIMESTAMP(NANOS) which Spark's vectorized
         # reader rejects; read as long and convert in the loader (lossless:

@@ -42,16 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from tinymapreduce_spark.pyworker import prime_worker
 from tinymapreduce_spark.session import materialize
-
-
-def _src_fp(sf_dir: str, table: str) -> str:
-    """(size, mtime) fingerprint of a source table file. Scratch-cached
-    manifest tables are keyed by it so that if the driver ever
-    REGENERATES testdata in place between rounds, the idempotent
-    snapshot-id no-op path cannot serve stale data — a changed source
-    gets a fresh table directory."""
-    st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
-    return f"{st.st_size}_{int(st.st_mtime)}"
+from tinymapreduce_spark.sources.textfiles import corpus_dir
 
 
 class AuditError(RuntimeError):
@@ -2311,10 +2302,8 @@ def manifest_wap_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
 
     from tinymapreduce_spark.sources.loaders import load_table
-    from tinymapreduce_spark.sources.textfiles import SCRATCH
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    table = ManifestTable(os.path.join(SCRATCH, f"wap_lineitem_{tag}_{_src_fp(sf_dir, 'lineitem')}"))
+    table = ManifestTable(corpus_dir("wap_lineitem", sf_dir, "lineitem"))
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_linestatus", "l_quantity", "l_extendedprice", "l_discount"
@@ -2349,10 +2338,8 @@ def manifest_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
 
     from tinymapreduce_spark.sources.loaders import load_table
-    from tinymapreduce_spark.sources.textfiles import SCRATCH
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    table = ManifestTable(os.path.join(SCRATCH, f"tt_lineitem_{tag}_{_src_fp(sf_dir, 'lineitem')}"))
+    table = ManifestTable(corpus_dir("tt_lineitem", sf_dir, "lineitem"))
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_linestatus", "l_quantity", "l_extendedprice", "l_discount", "l_orderkey"
     )
@@ -2380,10 +2367,8 @@ def manifest_skipping_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
 
     from tinymapreduce_spark.sources.loaders import load_table
-    from tinymapreduce_spark.sources.textfiles import SCRATCH
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    table = ManifestTable(os.path.join(SCRATCH, f"skip_orders_{tag}_{_src_fp(sf_dir, 'orders')}"))
+    table = ManifestTable(corpus_dir("skip_orders", sf_dir, "orders"))
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_orderpriority", "o_totalprice"
     )
@@ -2428,10 +2413,8 @@ def manifest_append_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
 
     from tinymapreduce_spark.sources.loaders import load_table
-    from tinymapreduce_spark.sources.textfiles import SCRATCH
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    table = ManifestTable(os.path.join(SCRATCH, f"inc_orders_{tag}_{_src_fp(sf_dir, 'orders')}"))
+    table = ManifestTable(corpus_dir("inc_orders", sf_dir, "orders"))
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_orderpriority", "o_totalprice"
     )
@@ -2494,10 +2477,8 @@ def manifest_expire_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
 
     from tinymapreduce_spark.sources.loaders import load_table
-    from tinymapreduce_spark.sources.textfiles import SCRATCH
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    table = ManifestTable(os.path.join(SCRATCH, f"ret_orders_{tag}_{_src_fp(sf_dir, 'orders')}"))
+    table = ManifestTable(corpus_dir("ret_orders", sf_dir, "orders"))
     marker = os.path.join(table.table_dir, "_lifecycle_done")
     if not os.path.exists(marker):
         orders = load_table(spark, sf_dir, "orders").select(
@@ -2565,10 +2546,8 @@ def manifest_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
 
     from tinymapreduce_spark.sources.loaders import load_table
-    from tinymapreduce_spark.sources.textfiles import SCRATCH
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    table = ManifestTable(os.path.join(SCRATCH, f"mor_orders_{tag}_{_src_fp(sf_dir, 'orders')}"))
+    table = ManifestTable(corpus_dir("mor_orders", sf_dir, "orders"))
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_orderpriority", "o_totalprice"
     )
@@ -2627,10 +2606,8 @@ def manifest_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
 
     from tinymapreduce_spark.sources.loaders import load_table
-    from tinymapreduce_spark.sources.textfiles import SCRATCH
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    table = ManifestTable(os.path.join(SCRATCH, f"evo_orders_{tag}_{_src_fp(sf_dir, 'orders')}"))
+    table = ManifestTable(corpus_dir("evo_orders", sf_dir, "orders"))
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
@@ -2675,10 +2652,8 @@ def manifest_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
 
     from tinymapreduce_spark.sources.loaders import load_table
-    from tinymapreduce_spark.sources.textfiles import SCRATCH
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    table = ManifestTable(os.path.join(SCRATCH, f"opt_orders_{tag}_{_src_fp(sf_dir, 'orders')}"))
+    table = ManifestTable(corpus_dir("opt_orders", sf_dir, "orders"))
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_orderpriority", "o_totalprice"
     )
@@ -2719,10 +2694,8 @@ def manifest_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
 
     from tinymapreduce_spark.sources.loaders import load_table
-    from tinymapreduce_spark.sources.textfiles import SCRATCH
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    table = ManifestTable(os.path.join(SCRATCH, f"ups_orders_{tag}_{_src_fp(sf_dir, 'orders')}"))
+    table = ManifestTable(corpus_dir("ups_orders", sf_dir, "orders"))
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
@@ -2807,12 +2780,8 @@ def manifest_apply_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
 
     from tinymapreduce_spark.sources.loaders import load_table
-    from tinymapreduce_spark.sources.textfiles import SCRATCH
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    table = ManifestTable(
-        os.path.join(SCRATCH, f"cdc_orders_{tag}_{_src_fp(sf_dir, 'orders')}")
-    )
+    table = ManifestTable(corpus_dir("cdc_orders", sf_dir, "orders"))
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
@@ -2866,10 +2835,8 @@ def manifest_delete_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
 
     from tinymapreduce_spark.sources.loaders import load_table
-    from tinymapreduce_spark.sources.textfiles import SCRATCH
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    table = ManifestTable(os.path.join(SCRATCH, f"del_orders_{tag}_{_src_fp(sf_dir, 'orders')}"))
+    table = ManifestTable(corpus_dir("del_orders", sf_dir, "orders"))
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
@@ -2920,12 +2887,8 @@ def manifest_delete_by_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
 
     from tinymapreduce_spark.sources.loaders import load_table
-    from tinymapreduce_spark.sources.textfiles import SCRATCH
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    table = ManifestTable(
-        os.path.join(SCRATCH, f"delt_orders_{tag}_{_src_fp(sf_dir, 'orders')}")
-    )
+    table = ManifestTable(corpus_dir("delt_orders", sf_dir, "orders"))
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
@@ -3026,12 +2989,8 @@ def _bloom_skipping_frame(
 
     from tinymapreduce_spark.functions.hashing import h60
     from tinymapreduce_spark.sources.loaders import load_table
-    from tinymapreduce_spark.sources.textfiles import SCRATCH
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    table = ManifestTable(
-        os.path.join(SCRATCH, f"{prefix}_{tag}_{_src_fp(sf_dir, 'orders')}")
-    )
+    table = ManifestTable(corpus_dir(prefix, sf_dir, "orders"))
     if sidecar:
         table.bloom_inline_budget = 0
     sl = (
@@ -3162,12 +3121,8 @@ def _cdf_table(spark: SparkSession, sf_dir: str) -> "ManifestTable":
     import pyspark.sql.functions as F
 
     from tinymapreduce_spark.sources.loaders import load_table
-    from tinymapreduce_spark.sources.textfiles import SCRATCH
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    table = ManifestTable(
-        os.path.join(SCRATCH, f"cdf_customer_{tag}_{_src_fp(sf_dir, 'customer')}")
-    )
+    table = ManifestTable(corpus_dir("cdf_customer", sf_dir, "customer"))
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey",
         (F.col("c_acctbal").cast("decimal(18,2)") * 100)
@@ -3278,12 +3233,8 @@ def manifest_metadata_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
 
     from tinymapreduce_spark.sources.loaders import load_table
-    from tinymapreduce_spark.sources.textfiles import SCRATCH
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    table = ManifestTable(
-        os.path.join(SCRATCH, f"meta_orders_{tag}_{_src_fp(sf_dir, 'orders')}")
-    )
+    table = ManifestTable(corpus_dir("meta_orders", sf_dir, "orders"))
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         (F.col("o_totalprice").cast("decimal(18,2)") * 100)

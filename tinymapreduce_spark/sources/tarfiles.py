@@ -288,54 +288,20 @@ TAR_DOCS_PER_FILE = 25  # one .tar.gz shard per 25 docs' samples
 
 
 def _ensure_tar_files(spark, sf_dir: str) -> str:
-    """Materialize a directory of REAL .tar.gz WebDataset shards (25
-    docs' samples per shard, whole-stream gzip), written DISTRIBUTED via
-    foreachPartition with temp+rename commits. Idempotent per (session,
-    corpus identity): keyed by the documents table's (size, mtime)
-    fingerprint — same convention as the .warc.gz / .bmp corpora."""
-    import os
+    """A directory of REAL .tar.gz WebDataset shards (25 docs' samples
+    per shard, whole-stream gzip), written by ``write_doc_files``
+    (distributed, temp+rename per shard, built once per session under
+    the documents table's ``corpus_dir``) — same convention as the
+    .warc.gz / .bmp corpora."""
+    from tinymapreduce_spark.sources.textfiles import write_doc_files
 
-    from pyspark.sql import functions as F
+    def encode(ids: list[int]) -> bytes:
+        return write_tar([m for d in ids for m in _doc_members(d)], gzipped=True)
 
-    from tinymapreduce_spark.sources.loaders import load_table
-    from tinymapreduce_spark.sources.manifest_sink import _src_fp
-    from tinymapreduce_spark.sources.textfiles import SCRATCH
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    fp = _src_fp(sf_dir, "documents")
-    out_dir = os.path.join(SCRATCH, f"tar_files_{tag}_{fp}")
-    marker = f"spark.tinymr.tar_files_{tag.replace('.', '_')}_{fp}"
-    if not spark.conf.get(marker, None):
-        os.makedirs(out_dir, exist_ok=True)
-        docs = (
-            load_table(spark, sf_dir, "documents")
-            .select("doc_id")
-            .where(F.col("doc_id") < TAR_DOC_CAP)
-            .withColumn("seg", (F.col("doc_id") / TAR_DOCS_PER_FILE).cast("int"))
-            .repartition("seg")
-        )
-
-        def write_part(rows) -> None:
-            prime_worker()
-            import os as _os
-            from collections import defaultdict
-
-            segs = defaultdict(list)
-            for row in rows:
-                segs[int(row.seg)].append(int(row.doc_id))
-            for seg, ds in segs.items():
-                members = []
-                for d in sorted(ds):
-                    members.extend(_doc_members(d))
-                path = _os.path.join(out_dir, f"shard_{seg:04d}.tar.gz")
-                tmp = path + ".tmp"
-                with open(tmp, "wb") as f:
-                    f.write(write_tar(members, gzipped=True))
-                _os.replace(tmp, path)
-
-        docs.foreachPartition(write_part)
-        spark.conf.set(marker, "1")
-    return out_dir
+    return write_doc_files(
+        spark, sf_dir, "tar_files", TAR_DOC_CAP, TAR_DOCS_PER_FILE,
+        lambda seg: f"shard_{seg:04d}.tar.gz", encode,
+    )
 
 
 def stream_tar_ingest(spark, sf_dir: str):
@@ -345,44 +311,20 @@ def stream_tar_ingest(spark, sf_dir: str):
     picked up by the checkpointed file index), the FULL ustar walker +
     the FROM-SCRATCH RFC 1952 inflate + sample grouping running inside
     the stream, per-sample rows appended to a parquet sink under
-    Trigger.AvailableNow. Re-running against the same checkpoint
-    ingests nothing, so the aggregate over the sink equals the batch
-    parse no matter how many times the query ran. The oracle aggregates
-    the member formulas over doc_id < TAR_DOC_CAP."""
+    Trigger.AvailableNow (``run_available_now``). Re-running against
+    the same checkpoint ingests nothing, so the aggregate over the sink
+    equals the batch parse no matter how many times the query ran. The
+    oracle aggregates the member formulas over doc_id < TAR_DOC_CAP."""
     import os
 
     import pandas as pd
     from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
 
     from tinymapreduce_spark.sources.textfiles import SCRATCH
+    from tinymapreduce_spark.streaming.sinks import binary_file_stream, run_available_now
 
     src = _ensure_tar_files(spark, sf_dir)
-    base = os.path.join(SCRATCH, f"stream_{os.path.basename(src)}")
-    ckpt, sink = os.path.join(base, "ckpt"), os.path.join(base, "sink")
-
-    schema = StructType(
-        [
-            StructField("path", StringType()),
-            StructField("modificationTime", TimestampType()),
-            StructField("length", LongType()),
-            StructField("content", BinaryType()),
-        ]
-    )
-    blobs = (
-        spark.readStream.format("binaryFile")
-        .schema(schema)
-        .option("pathGlobFilter", "*.tar.gz")
-        .load(src)
-        .select("content")
-    )
+    blobs = binary_file_stream(spark, src, "*.tar.gz").select("content")
 
     def parse(batches):
         prime_worker()
@@ -395,26 +337,11 @@ def stream_tar_ingest(spark, sf_dir: str):
                     rows["bsum"].append(sum(files["bin"]))
             yield pd.DataFrame(rows)
 
-    q = (
-        blobs.mapInPandas(parse, schema="doc_id long, tlen long, bsum long")
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("availableNow drain did not self-terminate")
-
-    has_parts = os.path.isdir(sink) and any(
-        f.endswith(".parquet") for f in os.listdir(sink)
-    )
-    back = (
-        spark.read.schema("doc_id long, tlen long, bsum long").parquet(sink)
-        if has_parts
-        else spark.createDataFrame([], "doc_id long, tlen long, bsum long")
+    out = "doc_id long, tlen long, bsum long"
+    back = run_available_now(
+        blobs.mapInPandas(parse, schema=out),
+        os.path.join(SCRATCH, f"stream_{os.path.basename(src)}"),
+        out,
     )
     return back.agg(
         F.countDistinct("doc_id").alias("n_docs"),

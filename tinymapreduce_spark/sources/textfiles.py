@@ -14,12 +14,94 @@ temp+rename idempotency trick, at cluster scale.
 from __future__ import annotations
 
 import os
+import threading
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tinymapreduce_spark.pyworker import prime_worker
+
 # Scratch dir inside the repo (the environment forbids writing elsewhere).
 SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".tmp")
+
+_BUILD_LOCK = threading.RLock()
+
+
+def corpus_dir(prefix: str, sf_dir: str, table: str) -> str:
+    """``SCRATCH/<prefix>_<tag>_<size>_<int mtime>``: the path of a
+    scratch artifact derived from ``sf_dir``'s ``table``, named by the
+    sf dir's name AND the source file's (size, mtime) identity. Two
+    corpora whose dirs share a name get different artifacts, and a
+    corpus regenerated in place gets a fresh one: file-stream
+    checkpoints track files by path and manifest snapshot ids no-op on
+    replay, so a reused path would silently serve the old bytes."""
+    tag = os.path.basename(os.path.normpath(sf_dir))
+    st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
+    return os.path.join(SCRATCH, f"{prefix}_{tag}_{st.st_size}_{int(st.st_mtime)}")
+
+
+def build_once(spark: SparkSession, path: str, build: Callable[[], object]) -> str:
+    """Return ``path`` after running ``build()`` (which writes the
+    artifact there) unless this session already built it. The memo is a
+    session conf marker, so a new session rebuilds; one lock serializes
+    the check-then-build, so concurrent first callers on a shared
+    session build once. ``path`` should come from ``corpus_dir`` so the
+    memo is keyed by the source's identity."""
+    marker = f"spark.tinymr.built.{path}"
+    with _BUILD_LOCK:
+        if not spark.conf.get(marker, None):
+            build()
+            spark.conf.set(marker, "1")
+    return path
+
+
+def write_doc_files(
+    spark: SparkSession,
+    sf_dir: str,
+    prefix: str,
+    cap: int,
+    per_file: int,
+    name: Callable[[int], str],
+    encode: Callable[[list[int]], bytes],
+) -> str:
+    """Build once a directory of real files over the documents below
+    ``cap``: doc ids ``[s * per_file, (s + 1) * per_file)`` go to one
+    file ``name(s)`` holding ``encode(sorted ids)``. Returns the dir,
+    ``corpus_dir(prefix, sf_dir, "documents")``. Written distributed
+    (``foreachPartition``, ids hash-partitioned by file so each file is
+    one task's), each file by temp + rename: a landing bucket only ever
+    lists whole files, and a re-executed task rewrites the same names."""
+    from tinymapreduce_spark.sources.loaders import load_table
+
+    out_dir = corpus_dir(prefix, sf_dir, "documents")
+
+    def write_part(rows) -> None:
+        prime_worker()
+        from collections import defaultdict
+
+        files = defaultdict(list)
+        for row in rows:
+            files[int(row.seg)].append(int(row.doc_id))
+        for seg, ids in files.items():
+            fname = name(seg)
+            tmp = os.path.join(out_dir, f".{fname}.tmp")
+            with open(tmp, "wb") as f:
+                f.write(encode(sorted(ids)))
+            os.replace(tmp, os.path.join(out_dir, fname))
+
+    def build() -> None:
+        os.makedirs(out_dir, exist_ok=True)
+        (
+            load_table(spark, sf_dir, "documents")
+            .select("doc_id")
+            .where(F.col("doc_id") < cap)
+            .withColumn("seg", (F.col("doc_id") / per_file).cast("int"))
+            .repartition(spark.sparkContext.defaultParallelism, "seg")
+            .foreachPartition(write_part)
+        )
+
+    return build_once(spark, out_dir, build)
 
 
 def read_whole_text_files(spark: SparkSession, path_glob: str, min_partitions: int = 8) -> DataFrame:
@@ -54,17 +136,16 @@ def text_roundtrip_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tinymapreduce_spark.functions.text import tokens
     from tinymapreduce_spark.sources.loaders import text_documents
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    corpus_dir = os.path.join(SCRATCH, f"corpus_{tag}")
-    out_dir = os.path.join(SCRATCH, f"wc_out_{tag}")
+    text_dir = corpus_dir("corpus", sf_dir, "documents")
+    out_dir = corpus_dir("wc_out", sf_dir, "documents")
 
     docs = text_documents(spark, sf_dir)
     # one text file per document partition-batch is wasteful at tiny sf;
     # a real corpus would already be files. Write one file per doc via
     # partitionBy on filename (exercises the committer's rename path).
-    docs.write.mode("overwrite").partitionBy("filename").text(corpus_dir)
+    docs.write.mode("overwrite").partitionBy("filename").text(text_dir)
 
-    ingested = read_whole_text_files(spark, os.path.join(corpus_dir, "*", "*.txt"))
+    ingested = read_whole_text_files(spark, os.path.join(text_dir, "*", "*.txt"))
     # filename arrives as the part-file name; recover doc identity from
     # the directory not needed for word_count (corpus-global counts).
     counts = (
@@ -84,21 +165,19 @@ def text_roundtrip_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ensure_json_runs(spark: SparkSession, sf_dir: str) -> str:
     """Materialize word-count KV pairs as R hash-partitioned JSON runs —
     exactly the reference's intermediate layout (ihash(key) % R, one
-    JSON-lines file per reduce bucket). Idempotent per (session, sf)."""
+    JSON-lines file per reduce bucket). Built once per session."""
     from tinymapreduce_spark.functions.text import tokens
     from tinymapreduce_spark.sources.loaders import text_documents
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    runs_dir = os.path.join(SCRATCH, f"json_runs_{tag}")
-    marker = f"spark.tinymr.json_runs_{tag.replace('.', '_')}"
-    if not spark.conf.get(marker, None):
-        docs = text_documents(spark, sf_dir)
-        kv = docs.select(
+    runs_dir = corpus_dir("json_runs", sf_dir, "documents")
+
+    def build() -> None:
+        kv = text_documents(spark, sf_dir).select(
             F.explode(tokens("contents")).alias("key"), F.lit("1").alias("value")
         )
         kv.repartition(10, "key").write.mode("overwrite").json(runs_dir)
-        spark.conf.set(marker, "1")
-    return runs_dir
+
+    return build_once(spark, runs_dir, build)
 
 
 def json_runs_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -109,11 +188,7 @@ def json_runs_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``/root/reference/src/mr/worker.go:140-156``), and finish the
     aggregation from the runs. Result equals the straight word count.
     """
-    from tinymapreduce_spark.functions.text import tokens
-    from tinymapreduce_spark.sources.loaders import text_documents
-
     runs_dir = _ensure_json_runs(spark, sf_dir)
-
     runs = spark.read.schema("key string, value string").json(runs_dir)
     return runs.groupBy(F.col("key").alias("word")).agg(F.count(F.lit(1)).alias("cnt"))
 
@@ -175,13 +250,12 @@ def _roundtrip_agg(spark: SparkSession, sf_dir: str, fmt: str, compression: str 
     """
     from tinymapreduce_spark.sources.loaders import load_table
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    fam = f"{fmt}_{compression}" if compression else fmt
-    out = os.path.join(SCRATCH, f"{fam}_lineitem_{tag}")
-    marker = f"spark.tinymr.{fam}_lineitem_{tag.replace('.', '_')}"
-    if not spark.conf.get(marker, None):
-        from tinymapreduce_spark.sources.loaders import spread_for_cpu
+    from tinymapreduce_spark.sources.loaders import spread_for_cpu
 
+    fam = f"{fmt}_{compression}" if compression else fmt
+    out = corpus_dir(f"{fam}_lineitem", sf_dir, "lineitem")
+
+    def build() -> None:
         # Spread the single-file scan before the write so the
         # round-tripped layout has >= cores files: the READ-BACK side
         # pays a per-record text parse (XML worst: ~600k StaxXmlParser
@@ -204,8 +278,8 @@ def _roundtrip_agg(spark: SparkSession, sf_dir: str, fmt: str, compression: str 
         if compression:
             writer = writer.option("compression", compression)
         writer.format(fmt).save(out)
-        spark.conf.set(marker, "1")
 
+    build_once(spark, out, build)
     reader = spark.read.format(fmt)
     if fmt == "csv":
         reader = reader.schema(LINEITEM_SLIM_SCHEMA).option("header", True)
@@ -267,8 +341,7 @@ def custom_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tinymapreduce_spark.sources.loaders import text_documents
 
     mr_runs_source.register(spark)
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    out = os.path.join(SCRATCH, f"custom_sink_{tag}")
+    out = corpus_dir("custom_sink", sf_dir, "documents")
 
     kv = text_documents(spark, sf_dir).select(
         F.explode(tokens("contents")).alias("key"), F.lit("1").alias("value")
@@ -340,8 +413,7 @@ def custom_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     runs_dir = _ensure_json_runs(spark, sf_dir)
     mr_runs_source.register(spark)
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    base = os.path.join(SCRATCH, f"custom_stream_sink_{tag}_{uuid.uuid4().hex[:8]}")
+    base = os.path.join(SCRATCH, f"custom_stream_sink_{uuid.uuid4().hex[:8]}")
     sink, ckpt = os.path.join(base, "out"), os.path.join(base, "ckpt")
     try:
         stream = spark.readStream.format("mr_runs").option("path", runs_dir).load()

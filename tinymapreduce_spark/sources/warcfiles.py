@@ -234,55 +234,21 @@ WARC_DOCS_PER_FILE = 25  # one .warc.gz "crawl segment" per 25 docs
 
 
 def _ensure_warc_files(spark, sf_dir: str) -> str:
-    """Materialize a directory of REAL .warc.gz crawl segments (25 docs'
-    records per file, per-record gzip members), written DISTRIBUTED via
-    foreachPartition with temp+rename commits — the Common Crawl drop
-    shape. Idempotent per (session, corpus identity): keyed by the
-    documents table's (size, mtime) fingerprint, the same convention as
-    the .bmp corpus (multimodal._ensure_bmp_files)."""
-    import os
+    """A directory of REAL .warc.gz crawl segments (25 docs' records per
+    file, per-record gzip members) — the Common Crawl drop shape —
+    written by ``write_doc_files`` (distributed, temp+rename per
+    segment, built once per session under the documents table's
+    ``corpus_dir``), the same convention as the .bmp corpus
+    (multimodal._ensure_bmp_files)."""
+    from tinymapreduce_spark.sources.textfiles import write_doc_files
 
-    from pyspark.sql import functions as F
+    def encode(ids: list[int]) -> bytes:
+        return write_warc([r for d in ids for r in _doc_records(d)], gzip_members=True)
 
-    from tinymapreduce_spark.sources.loaders import load_table
-    from tinymapreduce_spark.sources.manifest_sink import _src_fp
-    from tinymapreduce_spark.sources.textfiles import SCRATCH
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    fp = _src_fp(sf_dir, "documents")
-    out_dir = os.path.join(SCRATCH, f"warc_files_{tag}_{fp}")
-    marker = f"spark.tinymr.warc_files_{tag.replace('.', '_')}_{fp}"
-    if not spark.conf.get(marker, None):
-        os.makedirs(out_dir, exist_ok=True)
-        docs = (
-            load_table(spark, sf_dir, "documents")
-            .select("doc_id")
-            .where(F.col("doc_id") < WARC_DOC_CAP)
-            .withColumn("seg", (F.col("doc_id") / WARC_DOCS_PER_FILE).cast("int"))
-            .repartition("seg")
-        )
-
-        def write_part(rows) -> None:
-            prime_worker()
-            import os as _os
-            from collections import defaultdict
-
-            segs = defaultdict(list)
-            for row in rows:
-                segs[int(row.seg)].append(int(row.doc_id))
-            for seg, ds in segs.items():
-                recs = []
-                for d in sorted(ds):
-                    recs.extend(_doc_records(d))
-                path = _os.path.join(out_dir, f"seg_{seg:04d}.warc.gz")
-                tmp = path + ".tmp"
-                with open(tmp, "wb") as f:
-                    f.write(write_warc(recs, gzip_members=True))
-                _os.replace(tmp, path)
-
-        docs.foreachPartition(write_part)
-        spark.conf.set(marker, "1")
-    return out_dir
+    return write_doc_files(
+        spark, sf_dir, "warc_files", WARC_DOC_CAP, WARC_DOCS_PER_FILE,
+        lambda seg: f"seg_{seg:04d}.warc.gz", encode,
+    )
 
 
 def stream_warc_ingest(spark, sf_dir: str):
@@ -291,44 +257,21 @@ def stream_warc_ingest(spark, sf_dir: str):
     segment directory (new segments picked up by the checkpointed file
     index), the FULL record walker running inside the stream (gzip
     members + framing), per-response rows appended to a parquet sink
-    under Trigger.AvailableNow. Re-running against the same checkpoint
-    ingests nothing, so the aggregate over the sink equals the batch
-    parse no matter how many times the query ran. The oracle aggregates
-    the same payload formulas over doc_id < WARC_DOC_CAP."""
+    under Trigger.AvailableNow (``run_available_now``). Re-running
+    against the same checkpoint ingests nothing, so the aggregate over
+    the sink equals the batch parse no matter how many times the query
+    ran. The oracle aggregates the same payload formulas over
+    doc_id < WARC_DOC_CAP."""
     import os
 
     import pandas as pd
     from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
 
     from tinymapreduce_spark.sources.textfiles import SCRATCH
+    from tinymapreduce_spark.streaming.sinks import binary_file_stream, run_available_now
 
     src = _ensure_warc_files(spark, sf_dir)
-    base = os.path.join(SCRATCH, f"stream_{os.path.basename(src)}")
-    ckpt, sink = os.path.join(base, "ckpt"), os.path.join(base, "sink")
-
-    schema = StructType(
-        [
-            StructField("path", StringType()),
-            StructField("modificationTime", TimestampType()),
-            StructField("length", LongType()),
-            StructField("content", BinaryType()),
-        ]
-    )
-    blobs = (
-        spark.readStream.format("binaryFile")
-        .schema(schema)
-        .option("pathGlobFilter", "*.warc.gz")
-        .load(src)
-        .select("content")
-    )
+    blobs = binary_file_stream(spark, src, "*.warc.gz").select("content")
 
     def parse(batches):
         prime_worker()
@@ -344,26 +287,11 @@ def stream_warc_ingest(spark, sf_dir: str):
                     rows["plen"].append(len(body))
             yield pd.DataFrame(rows)
 
-    q = (
-        blobs.mapInPandas(parse, schema="doc_id long, plen long")
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("availableNow drain did not self-terminate")
-
-    has_parts = os.path.isdir(sink) and any(
-        f.endswith(".parquet") for f in os.listdir(sink)
-    )
-    back = (
-        spark.read.schema("doc_id long, plen long").parquet(sink)
-        if has_parts
-        else spark.createDataFrame([], "doc_id long, plen long")
+    out = "doc_id long, plen long"
+    back = run_available_now(
+        blobs.mapInPandas(parse, schema=out),
+        os.path.join(SCRATCH, f"stream_{os.path.basename(src)}"),
+        out,
     )
     return back.agg(
         F.countDistinct("doc_id").alias("n_docs"),

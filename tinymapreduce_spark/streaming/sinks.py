@@ -40,6 +40,15 @@ table equals the one-shot batch aggregate — the shared DuckDB oracle
 each key is hash-checked against. The keyed-change sinks (cdc_upsert,
 cdc_apply_changes, dv_erasure) seed the table with the orders base
 version and apply each batch as one commit under its batch id.
+
+Every file-ingest stream runs on a second, smaller skeleton,
+``run_available_now``: drain the backlog under
+``Trigger.AvailableNow`` into an append-only parquet sink whose
+checkpoint dir is named by the input's identity, then read the sink
+back. ``stream_available_now`` feeds it the events file; the four
+binary-corpus streams (.bmp here, .wav, .tar.gz and .warc.gz in their
+modules) feed it ``binary_file_stream`` over a corpus that
+``sources/textfiles.write_doc_files`` built once per session.
 """
 
 from __future__ import annotations
@@ -63,7 +72,7 @@ from tinymapreduce_spark.sources.loaders import (
     normalize_event_ts,
 )
 from tinymapreduce_spark.sources.manifest_sink import ManifestTable, cdc_change_feed
-from tinymapreduce_spark.sources.textfiles import SCRATCH
+from tinymapreduce_spark.sources.textfiles import SCRATCH, corpus_dir
 
 
 def run_batch_sink(
@@ -289,32 +298,23 @@ FROM events
 """
 
 
-def stream_available_now(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``Trigger.AvailableNow`` as a driver query — the scheduled-
-    incremental execution mode every production ingest uses: process
-    exactly the backlog present at start (checkpoint-tracked,
-    rate-limitable), write an append-only parquet sink, then terminate.
-    Re-running the query against the same checkpoint ingests NOTHING
-    new (no new files), so the sink count is stable across re-runs —
-    exactly-once ingest certified by the oracle equality itself: the
-    aggregate over the sink equals the batch aggregate over the source
-    no matter how many times the query ran."""
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    # Key the checkpoint by the source file's identity: the file-stream
-    # checkpoint tracks files BY PATH, so if the testdata were ever
-    # regenerated in place, an old checkpoint would silently skip the
-    # new bytes. A (size, mtime) fingerprint gives a fresh checkpoint
-    # exactly when the source actually changed.
-    st = os.stat(os.path.join(sf_dir, "events.parquet"))
-    fp = f"{st.st_size}_{int(st.st_mtime)}"
-    base = os.path.join(SCRATCH, f"avail_now_{tag}_{fp}")
-    ckpt, sink = os.path.join(base, "ckpt"), os.path.join(base, "sink")
+def run_available_now(stream: DataFrame, base: str, schema) -> DataFrame:
+    """Drain ``stream`` under ``Trigger.AvailableNow`` into an
+    append-only parquet sink (``base/sink``, checkpoint ``base/ckpt``)
+    and return the sink read back with ``schema`` — an empty frame when
+    nothing ever landed. The one lifecycle of every file-ingest stream:
+    the query processes exactly the backlog present at start, then
+    terminates. The file-stream checkpoint tracks input files by path,
+    so a re-run against the same ``base`` ingests nothing new and the
+    sink stays stable: the exactly-once ingest certificate. ``base``
+    must therefore be named by the input's identity (``corpus_dir``),
+    or a regenerated input would be silently skipped."""
+    spark = stream.sparkSession
+    sink = os.path.join(base, "sink")
     q = (
-        events_stream_source(spark, sf_dir, schema)
-        .writeStream.format("parquet")
+        stream.writeStream.format("parquet")
         .option("path", sink)
-        .option("checkpointLocation", ckpt)
+        .option("checkpointLocation", os.path.join(base, "ckpt"))
         .outputMode("append")
         .trigger(availableNow=True)
         .start()
@@ -322,14 +322,41 @@ def stream_available_now(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not q.awaitTermination(300):
         q.stop()
         raise TimeoutError("availableNow drain did not self-terminate")
+    if os.path.isdir(sink) and any(f.endswith(".parquet") for f in os.listdir(sink)):
+        return spark.read.schema(schema).parquet(sink)
+    return spark.createDataFrame([], schema)
 
-    has_parts = os.path.isdir(sink) and any(
-        f.endswith(".parquet") for f in os.listdir(sink)
+
+def binary_file_stream(spark: SparkSession, src: str, glob: str) -> DataFrame:
+    """Streaming ``binaryFile`` read of the files under ``src`` matching
+    ``glob`` — the landing-bucket autoloader shape: new files are picked
+    up by the checkpointed file index, the listing is pruned by the
+    glob, and each row carries one whole file's bytes. Streaming reads
+    need the source's fixed schema spelled out."""
+    return (
+        spark.readStream.format("binaryFile")
+        .schema("path string, modificationTime timestamp, length long, content binary")
+        .option("pathGlobFilter", glob)
+        .load(src)
     )
-    back = (
-        normalize_event_ts(spark.read.schema(schema).parquet(sink))
-        if has_parts
-        else normalize_event_ts(spark.createDataFrame([], schema))
+
+
+def stream_available_now(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``Trigger.AvailableNow`` as a driver query — the scheduled-
+    incremental execution mode every production ingest uses: process
+    exactly the backlog present at start (checkpoint-tracked,
+    rate-limitable), write an append-only parquet sink, then terminate
+    (``run_available_now``). Re-running the query against the same
+    checkpoint ingests NOTHING new, so the aggregate over the sink
+    equals the batch aggregate over the source no matter how many
+    times the query ran."""
+    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    back = normalize_event_ts(
+        run_available_now(
+            events_stream_source(spark, sf_dir, schema),
+            corpus_dir("avail_now", sf_dir, "events"),
+            schema,
+        )
     )
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
@@ -347,58 +374,22 @@ FROM events GROUP BY event_type
 def stream_binary_files_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental MULTIMODAL ingest — the autoloader shape every image
     pipeline schedules: a streaming ``binaryFile`` read over the .bmp
-    corpus directory (new files picked up by the checkpointed file
-    index; listing pruned by pathGlobFilter), the real BMP decode
-    running INSIDE the stream as an Arrow-batched mapInPandas, and an
-    append-only parquet sink under Trigger.AvailableNow. Re-running
-    against the same checkpoint ingests nothing new, so the aggregate
-    over the sink equals the batch decode no matter how many times the
-    query ran — the exactly-once-ingest certificate, now for binary
-    payloads. Shares binary_files_decode's generation-formula oracle
-    (aggregated)."""
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
+    corpus directory, the real BMP decode running INSIDE the stream as
+    an Arrow-batched mapInPandas, and an append-only parquet sink under
+    Trigger.AvailableNow (``run_available_now``; idempotent on re-run).
+    The checkpoint is named by the .bmp dir's own name, which
+    ``_ensure_bmp_files`` keys by corpus identity, so the file index
+    and the directory it indexes never disagree. Shares
+    binary_files_decode's generation-formula oracle (aggregated)."""
     from tinymapreduce_spark.operators.multimodal import (
         _ensure_bmp_files,
         decode_image,
     )
 
     src = _ensure_bmp_files(spark, sf_dir)
-    # checkpoint keyed by the .bmp source dir's OWN name — which
-    # _ensure_bmp_files already keys by (tag, corpus fingerprint) — so
-    # the checkpointed file index and the directory it indexes can
-    # never disagree: a regenerated corpus moves BOTH to fresh paths
-    # (the stream_available_now convention)
-    base = os.path.join(SCRATCH, f"stream_{os.path.basename(src)}")
-    ckpt, sink = os.path.join(base, "ckpt"), os.path.join(base, "sink")
-
-    # the binaryFile source's fixed schema (streaming reads require it)
-    schema = StructType(
-        [
-            StructField("path", StringType()),
-            StructField("modificationTime", TimestampType()),
-            StructField("length", LongType()),
-            StructField("content", BinaryType()),
-        ]
-    )
-    blobs = (
-        spark.readStream.format("binaryFile")
-        .schema(schema)
-        .option("pathGlobFilter", "*.bmp")
-        .load(src)
-        .select(
-            F.regexp_extract(F.col("path"), r"img_(\d+)\.bmp$", 1)
-            .cast("long")
-            .alias("doc_id"),
-            "content",
-        )
+    blobs = binary_file_stream(spark, src, "*.bmp").select(
+        F.regexp_extract(F.col("path"), r"img_(\d+)\.bmp$", 1).cast("long").alias("doc_id"),
+        "content",
     )
 
     def decode(batches):
@@ -416,26 +407,11 @@ def stream_binary_files_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
                 rows["n_px"].append(w * h)
             yield pd.DataFrame(rows)
 
-    q = (
-        blobs.mapInPandas(decode, schema="doc_id long, pixel_sum long, n_px long")
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("availableNow drain did not self-terminate")
-
-    has_parts = os.path.isdir(sink) and any(
-        f.endswith(".parquet") for f in os.listdir(sink)
-    )
-    back = (
-        spark.read.schema("doc_id long, pixel_sum long, n_px long").parquet(sink)
-        if has_parts
-        else spark.createDataFrame([], "doc_id long, pixel_sum long, n_px long")
+    out = "doc_id long, pixel_sum long, n_px long"
+    back = run_available_now(
+        blobs.mapInPandas(decode, schema=out),
+        os.path.join(SCRATCH, f"stream_{os.path.basename(src)}"),
+        out,
     )
     return back.agg(
         F.count(F.lit(1)).alias("n_images"),

@@ -160,10 +160,11 @@ def stream_kv_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     an AT-LEAST-ONCE delivery stream: the ops log streams in with
     planted retries (op_id ≡ 0 mod 7 re-delivered at seq + 2^40, the
     same plant as the batch form), flows through per-client streaming
-    dedup state, each micro-batch's ACCEPTED ops are accumulated into a
-    versioned table under idempotent batch-id publishes (a replayed
+    dedup state, each micro-batch's ACCEPTED ops are appended to a
+    versioned table under idempotent batch-id commits (a replayed
     batch can neither double-add nor re-accept — state and commit are
-    both keyed), and the accumulated log batch-folds to final KV state.
+    both keyed; a batch writes only its own ops, never the log so far),
+    and the accumulated log batch-folds to final KV state.
     Shares KV_REPLAY_DEDUP_SQL with the batch rung: the retries must be
     invisible end to end.
 
@@ -235,10 +236,7 @@ def stream_kv_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def accumulate(table, batch_df: DataFrame, batch_id: int) -> None:
-        ops = batch_df
-        if table.current_version() is not None:
-            ops = table.read(batch_df.sparkSession).unionByName(ops)
-        table.publish(ops, snapshot_id=f"batch-{batch_id}")
+        table.append(batch_df, snapshot_id=f"batch-{batch_id}")
 
     return run_batch_sink(
         "kv_dedup_stream", accepted, accumulate, finish=replay_ops, mode="update"
@@ -516,13 +514,10 @@ def state_store_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     state read stays byte-stable."""
     import os
 
-    from tinymapreduce_spark.sources.textfiles import SCRATCH
+    from tinymapreduce_spark.sources.textfiles import corpus_dir
 
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    st = os.stat(os.path.join(sf_dir, "events.parquet"))
-    base = os.path.join(SCRATCH, f"state_read_{tag}_{st.st_size}_{int(st.st_mtime)}")
-    ckpt = os.path.join(base, "ckpt")
+    ckpt = os.path.join(corpus_dir("state_read", sf_dir, "events"), "ckpt")
 
     stream = normalize_event_ts(
         events_stream_source(spark, sf_dir, schema)
@@ -648,12 +643,10 @@ def stream_pack_nextfit(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from tinymapreduce_spark.sources.textfiles import SCRATCH
+    from tinymapreduce_spark.sources.textfiles import corpus_dir
 
     src_path = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src_path)
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    feed_dir = os.path.join(SCRATCH, f"packfeed_{tag}_{st.st_size}_{int(st.st_mtime)}")
+    feed_dir = corpus_dir("packfeed", sf_dir, "documents")
     marker = os.path.join(feed_dir, "_ready")
     if not os.path.exists(marker):
         shutil.rmtree(feed_dir, ignore_errors=True)

@@ -250,12 +250,10 @@ def stream_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import time
 
-    from tinymapreduce_spark.sources.textfiles import SCRATCH
+    from tinymapreduce_spark.sources.textfiles import corpus_dir
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
     # fingerprint-keyed: regenerated testdata gets a fresh copy+sentinel
-    st = os.stat(os.path.join(sf_dir, "events.parquet"))
-    src_dir = os.path.join(SCRATCH, f"ssoj_{tag}_{st.st_size}_{int(st.st_mtime)}")
+    src_dir = corpus_dir("ssoj", sf_dir, "events")
     marker = os.path.join(src_dir, "_ready_v2")  # holds the flush-instant epoch-us
     if not os.path.exists(marker):
         shutil.rmtree(src_dir, ignore_errors=True)
