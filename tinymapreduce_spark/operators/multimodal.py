@@ -27,9 +27,6 @@ of the Arrow channel.
 from __future__ import annotations
 
 import sys
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
@@ -39,7 +36,7 @@ from pyspark.sql import functions as F
 # (driver may load us via sys.path only) — pickle this module by value.
 cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
-from tinymapreduce_spark.pyworker import prime_worker
+from tinymapreduce_spark.pyworker import PAYLOAD, row_stage
 from tinymapreduce_spark.sources.loaders import documents_for_cpu
 
 
@@ -231,25 +228,16 @@ def fake_features(payload: bytes) -> tuple[int, str]:
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads.
 
-    mapInPandas receives pandas batches whose 'payload' cells are Python
-    bytes — exactly how a real decoder (PIL/ffmpeg) would consume them.
+    The per-row function receives each 'payload' cell as Python bytes —
+    exactly how a real decoder (PIL/ffmpeg) would consume them.
     """
     docs = documents_for_cpu(spark, sf_dir)
     payloads = with_payload(docs).select("doc_id", "payload")
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            feats = [fake_features(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload_len": [f[0] for f in feats],
-                    "header_hex": [f[1] for f in feats],
-                }
-            )
+    def extract(d, p):
+        yield (d, *fake_features(p))
 
-    return payloads.mapInPandas(extract, schema="doc_id long, payload_len long, header_hex string")
+    return row_stage(payloads, "doc_id long, payload_len long, header_hex string", extract)
 
 
 MULTIMODAL_SQL = """
@@ -276,21 +264,12 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = documents_for_cpu(spark, sf_dir)
     payloads = with_payload(docs).select("doc_id", "payload")
 
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            resized = [bytes(p)[::RESIZE_STRIDE] for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "orig_len": [len(p) for p in pdf["payload"]],
-                    "resized_len": [len(r) for r in resized],
-                    "resized_md5": [hashlib.md5(r).hexdigest() for r in resized],
-                }
-            )
+    def resize(d, p):
+        r = bytes(p)[::RESIZE_STRIDE]
+        yield d, len(p), len(r), hashlib.md5(r).hexdigest()
 
-    return payloads.mapInPandas(
-        resize, schema="doc_id long, orig_len long, resized_len long, resized_md5 string"
+    return row_stage(
+        payloads, "doc_id long, orig_len long, resized_len long, resized_md5 string", resize
     )
 
 
@@ -317,31 +296,23 @@ FRAME_EVERY = 4
 
 def frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sample every 4th 16-byte 'frame' from each binary payload via
-    Arrow-batched mapInPandas; emits frame counts plus an md5 over the
+    an Arrow-batched per-row stage; emits frame counts plus an md5 over the
     concatenated sampled frames so the exact sampled bytes are verified."""
     import hashlib
 
     docs = documents_for_cpu(spark, sf_dir)
     payloads = with_payload(docs).select("doc_id", "payload")
 
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            rows = {"doc_id": pdf["doc_id"], "n_frames": [], "n_sampled": [], "sampled_md5": []}
-            for p in pdf["payload"]:
-                b = bytes(p)
-                n_frames = (len(b) + FRAME_BYTES - 1) // FRAME_BYTES
-                frames = [
-                    b[FRAME_BYTES * i : FRAME_BYTES * (i + 1)]
-                    for i in range(0, n_frames, FRAME_EVERY)
-                ]
-                rows["n_frames"].append(n_frames)
-                rows["n_sampled"].append(len(frames))
-                rows["sampled_md5"].append(hashlib.md5(b"".join(frames)).hexdigest())
-            yield pd.DataFrame(rows)
+    def sample(d, p):
+        b = bytes(p)
+        n_frames = (len(b) + FRAME_BYTES - 1) // FRAME_BYTES
+        frames = [
+            b[FRAME_BYTES * i : FRAME_BYTES * (i + 1)] for i in range(0, n_frames, FRAME_EVERY)
+        ]
+        yield d, n_frames, len(frames), hashlib.md5(b"".join(frames)).hexdigest()
 
-    return payloads.mapInPandas(
-        sample, schema="doc_id long, n_frames long, n_sampled long, sampled_md5 string"
+    return row_stage(
+        payloads, "doc_id long, n_frames long, n_sampled long, sampled_md5 string", sample
     )
 
 
@@ -373,9 +344,9 @@ AUDIO_WINDOW = 256
 
 
 def audio_energy_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Windowed energy over binary 'audio' payloads via Arrow-batched
-    mapInPandas + numpy (the exact batch shape a real DSP kernel uses:
-    frombuffer -> vectorized ops per batch, no per-sample Python).
+    """Windowed energy over binary 'audio' payloads via an Arrow-batched
+    per-row stage + numpy (frombuffer -> vectorized ops per payload, no
+    per-sample Python).
     Emits per doc: window count, total energy, and the argmax window
     (ties to the earliest), all exact integers."""
     return audio_energy_df(documents_for_cpu(spark, sf_dir))
@@ -389,39 +360,22 @@ def audio_energy_df(docs: DataFrame) -> DataFrame:
 
     payloads = with_payload(docs).select("doc_id", "payload")
 
-    def energy(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [],
-                "n_windows": [],
-                "total_energy": [],
-                "peak_window": [],
-                "peak_energy": [],
-            }
-            for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-                samples = np.frombuffer(bytes(p), dtype=np.uint8).astype(np.int64)
-                n_win = (len(samples) + AUDIO_WINDOW - 1) // AUDIO_WINDOW
-                if n_win == 0:
-                    # zero-length payload: no windows exist; emit no row,
-                    # mirroring the oracle (no chars -> no group row).
-                    continue
-                sq = samples * samples
-                wins = [
-                    int(sq[AUDIO_WINDOW * i : AUDIO_WINDOW * (i + 1)].sum())
-                    for i in range(n_win)
-                ]
-                peak = max(range(n_win), key=lambda i: (wins[i], -i))
-                rows["doc_id"].append(doc_id)
-                rows["n_windows"].append(n_win)
-                rows["total_energy"].append(int(sq.sum()))
-                rows["peak_window"].append(peak)
-                rows["peak_energy"].append(wins[peak])
-            yield pd.DataFrame(rows)
+    def energy(doc_id, p):
+        samples = np.frombuffer(bytes(p), dtype=np.uint8).astype(np.int64)
+        n_win = (len(samples) + AUDIO_WINDOW - 1) // AUDIO_WINDOW
+        if n_win == 0:
+            # zero-length payload: no windows exist; emit no row,
+            # mirroring the oracle (no chars -> no group row).
+            return
+        sq = samples * samples
+        wins = [int(sq[AUDIO_WINDOW * i : AUDIO_WINDOW * (i + 1)].sum()) for i in range(n_win)]
+        peak = max(range(n_win), key=lambda i: (wins[i], -i))
+        yield doc_id, n_win, int(sq.sum()), peak, wins[peak]
 
-    return payloads.mapInPandas(
+    return row_stage(
+        payloads,
+        "doc_id long, n_windows long, total_energy long, peak_window long, peak_energy long",
         energy,
-        schema="doc_id long, n_windows long, total_energy long, peak_window long, peak_energy long",
     )
 
 
@@ -509,6 +463,13 @@ WAV_S = lambda d, i: (d * 13 + i * i) % 4096 - 2048  # noqa: E731
 WAV_RATE = 8000
 
 
+def _img_bmp(d: int) -> bytes:
+    """Document ``d``'s formula image as a 24-bit BMP."""
+    w, h = IMG_W(d), IMG_H(d)
+    px = [[tuple(IMG_PIX(d, x, y, c) for c in range(3)) for x in range(w)] for y in range(h)]
+    return encode_bmp(w, h, px)
+
+
 def image_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL image decode over BinaryType: synthesize a 24-bit BMP per
     document (dimensions + pixels are pure functions of doc_id), carry
@@ -521,52 +482,21 @@ def image_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the values diverge."""
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = IMG_W(d), IMG_H(d)
-                px = [
-                    [tuple(IMG_PIX(d, x, y, c) for c in range(3)) for x in range(w)]
-                    for y in range(h)
-                ]
-                payloads.append(encode_bmp(w, h, px))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def encode(d):
+        yield d, _img_bmp(d)
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [],
-                "width": [],
-                "height": [],
-                "pixel_sum": [],
-                "mean_pixel": [],
-                "resized_pixel_sum": [],
-            }
-            for d, p in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, px = decode_image(bytes(p))
-                total = sum(v for row in px for bgr in row for v in bgr)
-                small = sum(
-                    v for y in range(0, h, 2) for x in range(0, w, 2) for v in px[y][x]
-                )
-                rows["doc_id"].append(d)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["pixel_sum"].append(total)
-                rows["mean_pixel"].append(total // (w * h * 3))
-                rows["resized_pixel_sum"].append(small)
-            yield pd.DataFrame(rows)
+    def decode(d, p):
+        w, h, px = decode_image(bytes(p))
+        total = sum(v for row in px for bgr in row for v in bgr)
+        small = sum(v for y in range(0, h, 2) for x in range(0, w, 2) for v in px[y][x])
+        yield d, w, h, total, total // (w * h * 3), small
 
-    blobs = docs.mapInPandas(encode, schema="doc_id long, payload binary")
-    return blobs.mapInPandas(
+    blobs = row_stage(docs, PAYLOAD, encode)
+    return row_stage(
+        blobs,
+        "doc_id long, width long, height long, pixel_sum long,"
+        " mean_pixel long, resized_pixel_sum long",
         decode,
-        schema=(
-            "doc_id long, width long, height long, pixel_sum long,"
-            " mean_pixel long, resized_pixel_sum long"
-        ),
     )
 
 
@@ -611,12 +541,7 @@ def _ensure_bmp_files(spark: SparkSession, sf_dir: str) -> str:
 
     def encode(ids: list[int]) -> bytes:
         (d,) = ids
-        w, h = IMG_W(d), IMG_H(d)
-        px = [
-            [tuple(IMG_PIX(d, x, y, c) for c in range(3)) for x in range(w)]
-            for y in range(h)
-        ]
-        return encode_bmp(w, h, px)
+        return _img_bmp(d)
 
     return write_doc_files(
         spark, sf_dir, "bmp_files", BINFILE_CAP, 1, lambda d: f"img_{d}.bmp", encode
@@ -649,30 +574,12 @@ def binary_files_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [],
-                "file_bytes": [],
-                "width": [],
-                "height": [],
-                "pixel_sum": [],
-            }
-            for d, n, p in zip(pdf["doc_id"], pdf["file_bytes"], pdf["content"]):
-                w, h, px = decode_image(bytes(p))
-                rows["doc_id"].append(d)
-                rows["file_bytes"].append(n)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["pixel_sum"].append(
-                    sum(v for row in px for bgr in row for v in bgr)
-                )
-            yield pd.DataFrame(rows)
+    def decode(d, n, p):
+        w, h, px = decode_image(bytes(p))
+        yield d, n, w, h, sum(v for row in px for bgr in row for v in bgr)
 
-    return blobs.mapInPandas(
-        decode,
-        schema="doc_id long, file_bytes long, width long, height long, pixel_sum long",
+    return row_stage(
+        blobs, "doc_id long, file_bytes long, width long, height long, pixel_sum long", decode
     )
 
 
@@ -708,45 +615,26 @@ def audio_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sample formula — little-endian int16 sign handling included."""
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                payloads.append(
-                    encode_wav([WAV_S(d, i) for i in range(WAV_N(d))], WAV_RATE)
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def encode(d):
+        yield d, encode_wav([WAV_S(d, i) for i in range(WAV_N(d))], WAV_RATE)
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [],
-                "n_samples": [],
-                "sample_rate": [],
-                "energy": [],
-                "peak_abs": [],
-                "mean_abs": [],
-            }
-            for d, p in zip(pdf["doc_id"], pdf["payload"]):
-                rate, samples = decode_wav(bytes(p))
-                rows["doc_id"].append(d)
-                rows["n_samples"].append(len(samples))
-                rows["sample_rate"].append(rate)
-                rows["energy"].append(sum(s * s for s in samples))
-                rows["peak_abs"].append(max(abs(s) for s in samples))
-                rows["mean_abs"].append(sum(abs(s) for s in samples) // len(samples))
-            yield pd.DataFrame(rows)
+    def decode(d, p):
+        rate, samples = decode_wav(bytes(p))
+        yield (
+            d,
+            len(samples),
+            rate,
+            sum(s * s for s in samples),
+            max(abs(s) for s in samples),
+            sum(abs(s) for s in samples) // len(samples),
+        )
 
-    blobs = docs.mapInPandas(encode, schema="doc_id long, payload binary")
-    return blobs.mapInPandas(
+    blobs = row_stage(docs, PAYLOAD, encode)
+    return row_stage(
+        blobs,
+        "doc_id long, n_samples long, sample_rate long, energy long,"
+        " peak_abs long, mean_abs long",
         decode,
-        schema=(
-            "doc_id long, n_samples long, sample_rate long, energy long,"
-            " peak_abs long, mean_abs long"
-        ),
     )
 
 
@@ -816,56 +704,25 @@ def jpeg_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = JPG_W(d), JPG_H(d)
-                bw, bh = (w + 7) // 8, (h + 7) // 8
-                blocks = [_jpg_block(d, b) for b in range(bw * bh)]
-                # every third doc carries restart intervals — the DRI
-                # path decodes through the same driver-checked query
-                # (restarts never change pixels, so the oracle is
-                # unaffected)
-                payloads.append(
-                    encode_jpeg(
-                        w, h, JPG_QT, [blocks], dri=2 if d % 3 == 0 else 0
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def encode(d):
+        w, h = JPG_W(d), JPG_H(d)
+        bw, bh = (w + 7) // 8, (h + 7) // 8
+        blocks = [_jpg_block(d, b) for b in range(bw * bh)]
+        # every third doc carries restart intervals — the DRI path
+        # decodes through the same driver-checked query (restarts never
+        # change pixels, so the oracle is unaffected)
+        yield d, encode_jpeg(w, h, JPG_QT, [blocks], dri=2 if d % 3 == 0 else 0)
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [],
-                "width": [],
-                "height": [],
-                "pixel_sum": [],
-                "min_pixel": [],
-                "max_pixel": [],
-            }
-            for d, p in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, planes = decode_jpeg(bytes(p))
-                px = planes[0]
-                flat = [v for row in px for v in row]
-                rows["doc_id"].append(d)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["pixel_sum"].append(sum(flat))
-                rows["min_pixel"].append(min(flat))
-                rows["max_pixel"].append(max(flat))
-            yield pd.DataFrame(rows)
+    def decode(d, p):
+        w, h, planes = decode_jpeg(bytes(p))
+        flat = [v for row in planes[0] for v in row]
+        yield d, w, h, sum(flat), min(flat), max(flat)
 
-    blobs = docs.mapInPandas(encode, schema="doc_id long, payload binary")
-    return blobs.mapInPandas(
+    blobs = row_stage(docs, PAYLOAD, encode)
+    return row_stage(
+        blobs,
+        "doc_id long, width long, height long, pixel_sum long, min_pixel long, max_pixel long",
         decode,
-        schema=(
-            "doc_id long, width long, height long, pixel_sum long,"
-            " min_pixel long, max_pixel long"
-        ),
     )
 
 
@@ -994,62 +851,35 @@ def jpeg420_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = J420_W(d), J420_H(d)
-                mcux, mcuy = (w + 15) // 16, (h + 15) // 16
-                comps = [
-                    _j420_blocks(d, 0, (2 * mcux) * (2 * mcuy)),
-                    _j420_blocks(d, 1, mcux * mcuy),
-                    _j420_blocks(d, 2, mcux * mcuy),
-                ]
-                payloads.append(
-                    encode_jpeg(
-                        w, h, JPG_QT, comps,
-                        sampling=[(2, 2), (1, 1), (1, 1)],
-                        dri=2 if d % 3 == 0 else 0,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def encode(d):
+        w, h = J420_W(d), J420_H(d)
+        mcux, mcuy = (w + 15) // 16, (h + 15) // 16
+        comps = [
+            _j420_blocks(d, 0, (2 * mcux) * (2 * mcuy)),
+            _j420_blocks(d, 1, mcux * mcuy),
+            _j420_blocks(d, 2, mcux * mcuy),
+        ]
+        yield d, encode_jpeg(
+            w, h, JPG_QT, comps,
+            sampling=[(2, 2), (1, 1), (1, 1)],
+            dri=2 if d % 3 == 0 else 0,
+        )
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "width": [], "height": [],
-                "chroma_w": [], "chroma_h": [],
-                "y_sum": [], "cb_sum": [], "cr_sum": [],
-                "y_min": [], "y_max": [],
-            }
-            for d, p in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, planes = decode_jpeg(bytes(p))
-                yf = [v for row in planes[0] for v in row]
-                cb = [v for row in planes[1] for v in row]
-                cr = [v for row in planes[2] for v in row]
-                rows["doc_id"].append(d)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["chroma_w"].append(len(planes[1][0]))
-                rows["chroma_h"].append(len(planes[1]))
-                rows["y_sum"].append(sum(yf))
-                rows["cb_sum"].append(sum(cb))
-                rows["cr_sum"].append(sum(cr))
-                rows["y_min"].append(min(yf))
-                rows["y_max"].append(max(yf))
-            yield pd.DataFrame(rows)
+    def decode(d, p):
+        w, h, planes = decode_jpeg(bytes(p))
+        yf, cb, cr = ([v for row in pl for v in row] for pl in planes)
+        yield (
+            d, w, h, len(planes[1][0]), len(planes[1]),
+            sum(yf), sum(cb), sum(cr), min(yf), max(yf),
+        )
 
-    blobs = docs.mapInPandas(encode, schema="doc_id long, payload binary")
-    return blobs.mapInPandas(
+    blobs = row_stage(docs, PAYLOAD, encode)
+    return row_stage(
+        blobs,
+        "doc_id long, width long, height long, chroma_w long,"
+        " chroma_h long, y_sum long, cb_sum long, cr_sum long,"
+        " y_min long, y_max long",
         decode,
-        schema=(
-            "doc_id long, width long, height long, chroma_w long,"
-            " chroma_h long, y_sum long, cb_sum long, cr_sum long,"
-            " y_min long, y_max long"
-        ),
     )
 
 
@@ -1097,56 +927,34 @@ def jpeg_progressive_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame
 
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = JPROG_W(d), JPROG_H(d)
-                bw, bh = (w + 7) // 8, (h + 7) // 8
-                comps = []
-                for ci in range(3):
-                    blocks = []
-                    for b in range(bw * bh):
-                        blk = [[0] * 8 for _ in range(8)]
-                        for (r, c), f in JPROG_COEF.items():
-                            blk[r][c] = f(d, ci, b)
-                        blocks.append(blk)
-                    comps.append(blocks)
-                payloads.append(
-                    encode_jpeg(w, h, JPG_QT, comps, progressive=True)
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def encode(d):
+        w, h = JPROG_W(d), JPROG_H(d)
+        bw, bh = (w + 7) // 8, (h + 7) // 8
+        comps = []
+        for ci in range(3):
+            blocks = []
+            for b in range(bw * bh):
+                blk = [[0] * 8 for _ in range(8)]
+                for (r, c), f in JPROG_COEF.items():
+                    blk[r][c] = f(d, ci, b)
+                blocks.append(blk)
+            comps.append(blocks)
+        yield d, encode_jpeg(w, h, JPG_QT, comps, progressive=True)
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "width": [], "height": [],
-                "y_sum": [], "cb_sum": [], "cr_sum": [],
-                "min_pixel": [], "max_pixel": [],
-            }
-            for d, p in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, planes = decode_jpeg(bytes(p))
-                flats = [[v for row in pl for v in row] for pl in planes]
-                rows["doc_id"].append(d)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["y_sum"].append(sum(flats[0]))
-                rows["cb_sum"].append(sum(flats[1]))
-                rows["cr_sum"].append(sum(flats[2]))
-                rows["min_pixel"].append(min(min(f) for f in flats))
-                rows["max_pixel"].append(max(max(f) for f in flats))
-            yield pd.DataFrame(rows)
+    def decode(d, p):
+        w, h, planes = decode_jpeg(bytes(p))
+        flats = [[v for row in pl for v in row] for pl in planes]
+        yield (
+            d, w, h, sum(flats[0]), sum(flats[1]), sum(flats[2]),
+            min(min(f) for f in flats), max(max(f) for f in flats),
+        )
 
-    blobs = docs.mapInPandas(encode, schema="doc_id long, payload binary")
-    return blobs.mapInPandas(
+    blobs = row_stage(docs, PAYLOAD, encode)
+    return row_stage(
+        blobs,
+        "doc_id long, width long, height long, y_sum long,"
+        " cb_sum long, cr_sum long, min_pixel long, max_pixel long",
         decode,
-        schema=(
-            "doc_id long, width long, height long, y_sum long,"
-            " cb_sum long, cr_sum long, min_pixel long, max_pixel long"
-        ),
     )
 
 
@@ -1321,80 +1129,47 @@ def png_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = PNG_W(d), PNG_H(d)
-                kind = d % 3
-                if kind == 0:
-                    px = [
-                        [(d + 3 * x + 7 * y) % 256 for x in range(w)]
-                        for y in range(h)
-                    ]
-                    ct, pal = 0, None
-                elif kind == 1:
-                    px = [
-                        [
-                            (
-                                (d + x + 2 * y) % 256,
-                                (2 * d + 3 * x + y) % 256,
-                                (d + 5 * x + 3 * y) % 256,
-                            )
-                            for x in range(w)
-                        ]
-                        for y in range(h)
-                    ]
-                    ct, pal = 2, None
-                else:
-                    pal = [
-                        (
-                            (d + 7 * i) % 256,
-                            (2 * d + 11 * i) % 256,
-                            (3 * d + 13 * i) % 256,
-                        )
-                        for i in range(16)
-                    ]
-                    px = [
-                        [(d + x + y) % 16 for x in range(w)] for y in range(h)
-                    ]
-                    ct = 3
-                payloads.append(
-                    encode_png(
-                        w, h, px, color_type=ct, palette=pal,
-                        interlace=d % 2,
-                        filters=lambda y, d=d: (y + d) % 5,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def encode(d):
+        w, h = PNG_W(d), PNG_H(d)
+        kind = d % 3
+        if kind == 0:
+            px = [[(d + 3 * x + 7 * y) % 256 for x in range(w)] for y in range(h)]
+            ct, pal = 0, None
+        elif kind == 1:
+            px = [
+                [
+                    ((d + x + 2 * y) % 256, (2 * d + 3 * x + y) % 256, (d + 5 * x + 3 * y) % 256)
+                    for x in range(w)
+                ]
+                for y in range(h)
+            ]
+            ct, pal = 2, None
+        else:
+            pal = [
+                ((d + 7 * i) % 256, (2 * d + 11 * i) % 256, (3 * d + 13 * i) % 256)
+                for i in range(16)
+            ]
+            px = [[(d + x + y) % 16 for x in range(w)] for y in range(h)]
+            ct = 3
+        yield d, encode_png(
+            w, h, px, color_type=ct, palette=pal,
+            interlace=d % 2,
+            filters=lambda y, d=d: (y + d) % 5,
+        )
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "width": [], "height": [], "color_type": [],
-                "r_sum": [], "g_sum": [], "b_sum": [],
-            }
-            for d, p in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, px = decode_png(bytes(p))
-                rows["doc_id"].append(d)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["color_type"].append([0, 2, 3][int(d) % 3])
-                rows["r_sum"].append(sum(v[0] for row in px for v in row))
-                rows["g_sum"].append(sum(v[1] for row in px for v in row))
-                rows["b_sum"].append(sum(v[2] for row in px for v in row))
-            yield pd.DataFrame(rows)
+    def decode(d, p):
+        w, h, px = decode_png(bytes(p))
+        yield (
+            d, w, h, [0, 2, 3][d % 3],
+            *(sum(v[c] for row in px for v in row) for c in range(3)),
+        )
 
-    blobs = docs.mapInPandas(encode, schema="doc_id long, payload binary")
-    return blobs.mapInPandas(
+    blobs = row_stage(docs, PAYLOAD, encode)
+    return row_stage(
+        blobs,
+        "doc_id long, width long, height long, color_type long,"
+        " r_sum long, g_sum long, b_sum long",
         decode,
-        schema=(
-            "doc_id long, width long, height long, color_type long,"
-            " r_sum long, g_sum long, b_sum long"
-        ),
     )
 
 
@@ -1422,96 +1197,65 @@ def png16_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = PNG_W(d), PNG_H(d)
-                kind = d % 4
-                if kind == 0:
-                    px = [
-                        [(257 * d + 1031 * x + 2003 * y) % 65536 for x in range(w)]
-                        for y in range(h)
-                    ]
-                elif kind == 1:
-                    px = [
-                        [
-                            ((d + 3 * x + 5 * y) % 256, (2 * d + x + y) % 256)
-                            for x in range(w)
-                        ]
-                        for y in range(h)
-                    ]
-                elif kind == 2:
-                    px = [
-                        [
-                            (
-                                (d + x + 2 * y) % 256,
-                                (2 * d + 3 * x + y) % 256,
-                                (d + 5 * x + 3 * y) % 256,
-                                (3 * d + x + y) % 256,
-                            )
-                            for x in range(w)
-                        ]
-                        for y in range(h)
-                    ]
-                else:
-                    px = [
-                        [
-                            (
-                                (513 * d + 999 * x + 7 * y) % 65536,
-                                (257 * d + 11 * x + 777 * y) % 65536,
-                                (129 * d + 31 * x + 63 * y) % 65536,
-                                (65 * d + 255 * x + 129 * y) % 65536,
-                            )
-                            for x in range(w)
-                        ]
-                        for y in range(h)
-                    ]
-                payloads.append(
-                    encode_png(
-                        w, h, px,
-                        color_type=_PNG16_CT[kind],
-                        depth=_PNG16_DEPTH[kind],
-                        interlace=d % 2,
-                        filters=lambda y, d=d: (y + d) % 5,
+    def encode(d):
+        w, h = PNG_W(d), PNG_H(d)
+        kind = d % 4
+        if kind == 0:
+            px = [[(257 * d + 1031 * x + 2003 * y) % 65536 for x in range(w)] for y in range(h)]
+        elif kind == 1:
+            px = [
+                [((d + 3 * x + 5 * y) % 256, (2 * d + x + y) % 256) for x in range(w)]
+                for y in range(h)
+            ]
+        elif kind == 2:
+            px = [
+                [
+                    (
+                        (d + x + 2 * y) % 256,
+                        (2 * d + 3 * x + y) % 256,
+                        (d + 5 * x + 3 * y) % 256,
+                        (3 * d + x + y) % 256,
                     )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+                    for x in range(w)
+                ]
+                for y in range(h)
+            ]
+        else:
+            px = [
+                [
+                    (
+                        (513 * d + 999 * x + 7 * y) % 65536,
+                        (257 * d + 11 * x + 777 * y) % 65536,
+                        (129 * d + 31 * x + 63 * y) % 65536,
+                        (65 * d + 255 * x + 129 * y) % 65536,
+                    )
+                    for x in range(w)
+                ]
+                for y in range(h)
+            ]
+        yield d, encode_png(
+            w, h, px,
+            color_type=_PNG16_CT[kind],
+            depth=_PNG16_DEPTH[kind],
+            interlace=d % 2,
+            filters=lambda y, d=d: (y + d) % 5,
+        )
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "width": [], "height": [], "color_type": [],
-                "bit_depth": [], "r_sum": [], "g_sum": [], "b_sum": [],
-                "a_sum": [],
-            }
-            for d, p in zip(pdf["doc_id"], pdf["payload"]):
-                d = int(d)
-                kind = d % 4
-                w, h, px = decode_png(bytes(p))
-                rows["doc_id"].append(d)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["color_type"].append(_PNG16_CT[kind])
-                rows["bit_depth"].append(_PNG16_DEPTH[kind])
-                rows["r_sum"].append(sum(v[0] for row in px for v in row))
-                rows["g_sum"].append(sum(v[1] for row in px for v in row))
-                rows["b_sum"].append(sum(v[2] for row in px for v in row))
-                rows["a_sum"].append(
-                    sum(v[3] for row in px for v in row) if kind else 0
-                )
-            yield pd.DataFrame(rows)
+    def decode(d, p):
+        kind = d % 4
+        w, h, px = decode_png(bytes(p))
+        yield (
+            d, w, h, _PNG16_CT[kind], _PNG16_DEPTH[kind],
+            *(sum(v[c] for row in px for v in row) for c in range(3)),
+            sum(v[3] for row in px for v in row) if kind else 0,
+        )
 
-    payloads = docs.mapInPandas(encode, schema="doc_id long, payload binary")
-    return payloads.mapInPandas(
+    blobs = row_stage(docs, PAYLOAD, encode)
+    return row_stage(
+        blobs,
+        "doc_id long, width long, height long, color_type long,"
+        " bit_depth long, r_sum long, g_sum long, b_sum long, a_sum long",
         decode,
-        schema=(
-            "doc_id long, width long, height long, color_type long,"
-            " bit_depth long, r_sum long, g_sum long, b_sum long, a_sum long"
-        ),
     )
 
 
@@ -1640,51 +1384,23 @@ def gif_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = GIF_W(d), GIF_H(d)
-                npal = 5 + d % 12
-                pal = [
-                    ((3 * d + 5 * i) % 256, (d + 9 * i) % 256, (2 * d + 7 * i) % 256)
-                    for i in range(npal)
-                ]
-                idx = [
-                    [(x // 2 + 3 * (y // 2) + d) % npal for x in range(w)]
-                    for y in range(h)
-                ]
-                payloads.append(
-                    encode_gif(w, h, idx, pal, interlace=bool(d % 2))
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def encode(d):
+        w, h = GIF_W(d), GIF_H(d)
+        npal = 5 + d % 12
+        pal = [
+            ((3 * d + 5 * i) % 256, (d + 9 * i) % 256, (2 * d + 7 * i) % 256)
+            for i in range(npal)
+        ]
+        idx = [[(x // 2 + 3 * (y // 2) + d) % npal for x in range(w)] for y in range(h)]
+        yield d, encode_gif(w, h, idx, pal, interlace=bool(d % 2))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "width": [], "height": [],
-                "r_sum": [], "g_sum": [], "b_sum": [],
-            }
-            for d, p in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, px = decode_gif(bytes(p))
-                rows["doc_id"].append(d)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["r_sum"].append(sum(v[0] for row in px for v in row))
-                rows["g_sum"].append(sum(v[1] for row in px for v in row))
-                rows["b_sum"].append(sum(v[2] for row in px for v in row))
-            yield pd.DataFrame(rows)
+    def decode(d, p):
+        w, h, px = decode_gif(bytes(p))
+        yield (d, w, h, *(sum(v[c] for row in px for v in row) for c in range(3)))
 
-    blobs = docs.mapInPandas(encode, schema="doc_id long, payload binary")
-    return blobs.mapInPandas(
-        decode,
-        schema=(
-            "doc_id long, width long, height long,"
-            " r_sum long, g_sum long, b_sum long"
-        ),
+    blobs = row_stage(docs, PAYLOAD, encode)
+    return row_stage(
+        blobs, "doc_id long, width long, height long, r_sum long, g_sum long, b_sum long", decode
     )
 
 
@@ -1735,42 +1451,22 @@ def g711_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     through two Arrow-batched kernels."""
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                n = G711_N(d)
-                codes = [(7 * d + 13 * i) % 256 for i in range(n)]
-                law = "ulaw" if d % 2 == 0 else "alaw"
-                payloads.append(encode_wav_g711(codes, law))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def law(d: int) -> str:
+        return "ulaw" if d % 2 == 0 else "alaw"
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "law": [], "n_samples": [],
-                "sample_sum": [], "min_sample": [], "max_sample": [],
-            }
-            for d, p in zip(pdf["doc_id"], pdf["payload"]):
-                _, samples = decode_wav(bytes(p))
-                rows["doc_id"].append(d)
-                rows["law"].append("ulaw" if int(d) % 2 == 0 else "alaw")
-                rows["n_samples"].append(len(samples))
-                rows["sample_sum"].append(sum(samples))
-                rows["min_sample"].append(min(samples))
-                rows["max_sample"].append(max(samples))
-            yield pd.DataFrame(rows)
+    def encode(d):
+        yield d, encode_wav_g711([(7 * d + 13 * i) % 256 for i in range(G711_N(d))], law(d))
 
-    blobs = docs.mapInPandas(encode, schema="doc_id long, payload binary")
-    return blobs.mapInPandas(
+    def decode(d, p):
+        _, samples = decode_wav(bytes(p))
+        yield d, law(d), len(samples), sum(samples), min(samples), max(samples)
+
+    blobs = row_stage(docs, PAYLOAD, encode)
+    return row_stage(
+        blobs,
+        "doc_id long, law string, n_samples long, sample_sum long,"
+        " min_sample long, max_sample long",
         decode,
-        schema=(
-            "doc_id long, law string, n_samples long, sample_sum long,"
-            " min_sample long, max_sample long"
-        ),
     )
 
 
@@ -1870,34 +1566,14 @@ def image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the join touches only same-band buckets."""
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                px = [
-                    [(PH_PIX(d, x, y),) * 3 for x in range(8)] for y in range(8)
-                ]
-                payloads.append(encode_bmp(8, 8, px))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def encode(d):
+        yield d, encode_bmp(8, 8, [[(PH_PIX(d, x, y),) * 3 for x in range(8)] for y in range(8)])
 
-    def hash_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            rows: dict[str, list] = {"doc_id": [], "b0": [], "b1": [], "b2": [], "b3": []}
-            for d, p in zip(pdf["doc_id"], pdf["payload"]):
-                _, _, px = decode_image(bytes(p))
-                bands = _ahash_bands(px)
-                rows["doc_id"].append(d)
-                for i in range(4):
-                    rows[f"b{i}"].append(bands[i])
-            yield pd.DataFrame(rows)
+    def hash_bands(d, p):
+        yield (d, *_ahash_bands(decode_image(bytes(p))[2]))
 
-    blobs = docs.mapInPandas(encode, schema="doc_id long, payload binary")
-    hashes = blobs.mapInPandas(
-        hash_kernel, schema="doc_id long, b0 long, b1 long, b2 long, b3 long"
-    )
+    blobs = row_stage(docs, PAYLOAD, encode)
+    hashes = row_stage(blobs, "doc_id long, b0 long, b1 long, b2 long, b3 long", hash_bands)
     bands = hashes.select(
         "doc_id",
         "b0",
@@ -2056,60 +1732,36 @@ def video_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
     coef_fns, qt = VID_COEF, JPG_QT
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, nb = VID_W(d), VID_W(d) // 8
-                frames = []
-                for f in range(VID_FRAMES(d)):
-                    blocks = []
-                    for b in range(nb):
-                        blk = [[0] * 8 for _ in range(8)]
-                        for (r, c), fn in coef_fns.items():
-                            blk[r][c] = fn(d, f, b)
-                        blocks.append(blk)
-                    frames.append(encode_jpeg_gray(w, VID_H, qt, blocks))
-                payloads.append(write_avi_mjpeg(w, VID_H, frames))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def encode(d):
+        w, nb = VID_W(d), VID_W(d) // 8
+        frames = []
+        for f in range(VID_FRAMES(d)):
+            blocks = []
+            for b in range(nb):
+                blk = [[0] * 8 for _ in range(8)]
+                for (r, c), fn in coef_fns.items():
+                    blk[r][c] = fn(d, f, b)
+                blocks.append(blk)
+            frames.append(encode_jpeg_gray(w, VID_H, qt, blocks))
+        yield d, write_avi_mjpeg(w, VID_H, frames)
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "width": [], "height": [], "n_frames": [],
-                "n_sampled": [], "pixel_sum": [], "min_pixel": [],
-                "max_pixel": [],
-            }
-            for d, p in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, frames = parse_avi_mjpeg(bytes(p))
-                flat: list[int] = []
-                sampled = frames[::2]
-                for jfif in sampled:
-                    fw, fh, planes = decode_jpeg(bytes(jfif))
-                    if (fw, fh) != (w, h):
-                        raise ValueError("frame dims disagree with avih")
-                    flat.extend(v for row in planes[0] for v in row)
-                rows["doc_id"].append(d)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_frames"].append(len(frames))
-                rows["n_sampled"].append(len(sampled))
-                rows["pixel_sum"].append(sum(flat))
-                rows["min_pixel"].append(min(flat))
-                rows["max_pixel"].append(max(flat))
-            yield pd.DataFrame(rows)
+    def decode(d, p):
+        w, h, frames = parse_avi_mjpeg(bytes(p))
+        flat: list[int] = []
+        sampled = frames[::2]
+        for jfif in sampled:
+            fw, fh, planes = decode_jpeg(bytes(jfif))
+            if (fw, fh) != (w, h):
+                raise ValueError("frame dims disagree with avih")
+            flat.extend(v for row in planes[0] for v in row)
+        yield d, w, h, len(frames), len(sampled), sum(flat), min(flat), max(flat)
 
-    blobs = docs.mapInPandas(encode, schema="doc_id long, payload binary")
-    return blobs.mapInPandas(
+    blobs = row_stage(docs, PAYLOAD, encode)
+    return row_stage(
+        blobs,
+        "doc_id long, width long, height long, n_frames long,"
+        " n_sampled long, pixel_sum long, min_pixel long, max_pixel long",
         decode,
-        schema=(
-            "doc_id long, width long, height long, n_frames long,"
-            " n_sampled long, pixel_sum long, min_pixel long,"
-            " max_pixel long"
-        ),
     )
 
 
@@ -2229,73 +1881,39 @@ def video420_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             out.append(blk)
         return out
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = J420_W(d), J420_H(d)
-                mcux, mcuy = (w + 15) // 16, (h + 15) // 16
-                frames = []
-                for f in range(2 + d % 4):
-                    comps = [
-                        frame_blocks(d, f, 0, (2 * mcux) * (2 * mcuy)),
-                        frame_blocks(d, f, 1, mcux * mcuy),
-                        frame_blocks(d, f, 2, mcux * mcuy),
-                    ]
-                    frames.append(
-                        encode_jpeg(
-                            w, h, qt, comps,
-                            sampling=[(2, 2), (1, 1), (1, 1)],
-                        )
-                    )
-                payloads.append(
-                    write_avi_mjpeg(w, h, frames, with_index=(d % 2 == 0))
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def encode(d):
+        w, h = J420_W(d), J420_H(d)
+        mcux, mcuy = (w + 15) // 16, (h + 15) // 16
+        frames = []
+        for f in range(2 + d % 4):
+            comps = [
+                frame_blocks(d, f, 0, (2 * mcux) * (2 * mcuy)),
+                frame_blocks(d, f, 1, mcux * mcuy),
+                frame_blocks(d, f, 2, mcux * mcuy),
+            ]
+            frames.append(encode_jpeg(w, h, qt, comps, sampling=[(2, 2), (1, 1), (1, 1)]))
+        yield d, write_avi_mjpeg(w, h, frames, with_index=(d % 2 == 0))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "width": [], "height": [], "chroma_w": [],
-                "chroma_h": [], "n_frames": [], "n_sampled": [],
-                "has_index": [], "y_sum": [], "cb_sum": [], "cr_sum": [],
-            }
-            for d, p in zip(pdf["doc_id"], pdf["payload"]):
-                d = int(d)
-                w, h, frames = parse_avi_mjpeg(bytes(p))
-                sampled = frames[::2]
-                ys = cbs = crs = 0
-                cw = ch = 0
-                for jf in sampled:
-                    fw, fh, planes = decode_jpeg(jf)
-                    ys += sum(v for row in planes[0] for v in row)
-                    cbs += sum(v for row in planes[1] for v in row)
-                    crs += sum(v for row in planes[2] for v in row)
-                    cw, ch = len(planes[1][0]), len(planes[1])
-                rows["doc_id"].append(d)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["chroma_w"].append(cw)
-                rows["chroma_h"].append(ch)
-                rows["n_frames"].append(len(frames))
-                rows["n_sampled"].append(len(sampled))
-                rows["has_index"].append(1 - d % 2)
-                rows["y_sum"].append(ys)
-                rows["cb_sum"].append(cbs)
-                rows["cr_sum"].append(crs)
-            yield pd.DataFrame(rows)
+    def decode(d, p):
+        w, h, frames = parse_avi_mjpeg(bytes(p))
+        sampled = frames[::2]
+        ys = cbs = crs = 0
+        cw = ch = 0
+        for jf in sampled:
+            fw, fh, planes = decode_jpeg(jf)
+            ys += sum(v for row in planes[0] for v in row)
+            cbs += sum(v for row in planes[1] for v in row)
+            crs += sum(v for row in planes[2] for v in row)
+            cw, ch = len(planes[1][0]), len(planes[1])
+        yield d, w, h, cw, ch, len(frames), len(sampled), 1 - d % 2, ys, cbs, crs
 
-    blobs = docs.mapInPandas(encode, schema="doc_id long, payload binary")
-    return blobs.mapInPandas(
+    blobs = row_stage(docs, PAYLOAD, encode)
+    return row_stage(
+        blobs,
+        "doc_id long, width long, height long, chroma_w long,"
+        " chroma_h long, n_frames long, n_sampled long,"
+        " has_index long, y_sum long, cb_sum long, cr_sum long",
         decode,
-        schema=(
-            "doc_id long, width long, height long, chroma_w long,"
-            " chroma_h long, n_frames long, n_sampled long,"
-            " has_index long, y_sum long, cb_sum long, cr_sum long"
-        ),
     )
 
 
@@ -2431,38 +2049,25 @@ def audio_spectral_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     cos_t = np.array(_SPEC_COS, dtype=np.int64)
     sin_t = np.array(_SPEC_SIN, dtype=np.int64)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "n_windows": [], "dominant_bin": [],
-                **{f"power_b{k}": [] for k in SPEC_BINS},
-            }
-            for d in pdf["doc_id"]:
-                d = int(d)
-                wav = encode_wav([SPEC_S(d, i) for i in range(SPEC_N(d))], WAV_RATE)
-                _, samples = decode_wav(wav)  # the REAL decode path
-                s = np.asarray(samples, dtype=np.int64)
-                nw = len(s) // SPEC_W
-                win = s[: nw * SPEC_W].reshape(nw, SPEC_W)
-                totals = {}
-                for k in SPEC_BINS:
-                    idx = (np.arange(SPEC_W) * k) % SPEC_W
-                    re = win @ cos_t[idx]
-                    im = win @ sin_t[idx]
-                    totals[k] = int((re * re + im * im).sum())
-                dom = max(SPEC_BINS, key=lambda k: (totals[k], -k))
-                rows["doc_id"].append(d)
-                rows["n_windows"].append(nw)
-                rows["dominant_bin"].append(dom)
-                for k in SPEC_BINS:
-                    rows[f"power_b{k}"].append(totals[k])
-            yield pd.DataFrame(rows)
+    def spectrum(d):
+        wav = encode_wav([SPEC_S(d, i) for i in range(SPEC_N(d))], WAV_RATE)
+        _, samples = decode_wav(wav)  # the REAL decode path
+        s = np.asarray(samples, dtype=np.int64)
+        nw = len(s) // SPEC_W
+        win = s[: nw * SPEC_W].reshape(nw, SPEC_W)
+        totals = {}
+        for k in SPEC_BINS:
+            idx = (np.arange(SPEC_W) * k) % SPEC_W
+            re = win @ cos_t[idx]
+            im = win @ sin_t[idx]
+            totals[k] = int((re * re + im * im).sum())
+        dom = max(SPEC_BINS, key=lambda k: (totals[k], -k))
+        yield (d, nw, dom, *(totals[k] for k in SPEC_BINS))
 
     schema = "doc_id long, n_windows long, dominant_bin long, " + ", ".join(
         f"power_b{k} long" for k in SPEC_BINS
     )
-    return docs.mapInPandas(kernel, schema=schema)
+    return row_stage(docs, schema, spectrum)
 
 
 def _audio_spectral_sql() -> str:
@@ -2544,46 +2149,26 @@ def image_augment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "variant": [], "width": [], "height": [],
-                "pixel_sum": [], "weighted_sum": [],
-            }
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = IMG_W(d), IMG_H(d)
-                px = [
-                    [tuple(IMG_PIX(d, x, y, c) for c in range(3)) for x in range(w)]
-                    for y in range(h)
-                ]
-                wdec, hdec, pdec = decode_image(encode_bmp(w, h, px))
-                arr = np.array(pdec, dtype=np.int64)  # (h, w, 3)
-                variants = {
-                    "orig": arr,
-                    "hflip": arr[:, ::-1],
-                    "rot90": np.rot90(arr, k=-1),
-                    "crop": arr[1:-1, 1:-1],
-                }
-                for name, a in variants.items():
-                    vh, vw = a.shape[0], a.shape[1]
-                    xs = np.arange(vw).reshape(1, vw, 1)
-                    ys = np.arange(vh).reshape(vh, 1, 1)
-                    rows["doc_id"].append(d)
-                    rows["variant"].append(name)
-                    rows["width"].append(vw)
-                    rows["height"].append(vh)
-                    rows["pixel_sum"].append(int(a.sum()))
-                    rows["weighted_sum"].append(int(((xs + 3 * ys) * a).sum()))
-            yield pd.DataFrame(rows)
+    def augment(d):
+        wdec, hdec, pdec = decode_image(_img_bmp(d))
+        arr = np.array(pdec, dtype=np.int64)  # (h, w, 3)
+        variants = {
+            "orig": arr,
+            "hflip": arr[:, ::-1],
+            "rot90": np.rot90(arr, k=-1),
+            "crop": arr[1:-1, 1:-1],
+        }
+        for name, a in variants.items():
+            vh, vw = a.shape[0], a.shape[1]
+            xs = np.arange(vw).reshape(1, vw, 1)
+            ys = np.arange(vh).reshape(vh, 1, 1)
+            yield d, name, vw, vh, int(a.sum()), int(((xs + 3 * ys) * a).sum())
 
-    return docs.mapInPandas(
-        kernel,
-        schema=(
-            "doc_id long, variant string, width long, height long,"
-            " pixel_sum long, weighted_sum long"
-        ),
+    return row_stage(
+        docs,
+        "doc_id long, variant string, width long, height long,"
+        " pixel_sum long, weighted_sum long",
+        augment,
     )
 
 
@@ -2652,37 +2237,19 @@ def tiff_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "packbits": [], "big_endian": [],
-                "width": [], "height": [], "pixel_sum": [], "max_pixel": [],
-            }
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = TIFF_W(d), TIFF_H(d)
-                px = [[TIFF_PIX(d, x, y) for x in range(w)] for y in range(h)]
-                blob = encode_tiff(
-                    w, h, px, packbits=bool(d % 2), big_endian=d % 3 == 0
-                )
-                w2, h2, back = decode_tiff(blob)
-                flat = [v for row in back for v in row]
-                rows["doc_id"].append(d)
-                rows["packbits"].append(d % 2)
-                rows["big_endian"].append(int(d % 3 == 0))
-                rows["width"].append(w2)
-                rows["height"].append(h2)
-                rows["pixel_sum"].append(sum(flat))
-                rows["max_pixel"].append(max(flat))
-            yield pd.DataFrame(rows)
+    def roundtrip(d):
+        w, h = TIFF_W(d), TIFF_H(d)
+        px = [[TIFF_PIX(d, x, y) for x in range(w)] for y in range(h)]
+        blob = encode_tiff(w, h, px, packbits=bool(d % 2), big_endian=d % 3 == 0)
+        w2, h2, back = decode_tiff(blob)
+        flat = [v for row in back for v in row]
+        yield d, d % 2, int(d % 3 == 0), w2, h2, sum(flat), max(flat)
 
-    return docs.mapInPandas(
+    return row_stage(
+        docs,
+        "doc_id long, packbits long, big_endian long, width long,"
+        " height long, pixel_sum long, max_pixel long",
         roundtrip,
-        schema=(
-            "doc_id long, packbits long, big_endian long, width long,"
-            " height long, pixel_sum long, max_pixel long"
-        ),
     )
 
 
@@ -2728,44 +2295,28 @@ def tiff_lzw_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "mode": [], "big_endian": [],
-                "width": [], "height": [], "pixel_sum": [], "corner_sum": [],
-            }
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = TIFFL_W(d), TIFFL_H(d)
-                px = [[(11 * d + 7 * x + 13 * y) % 256 for x in range(w)]
-                      for y in range(h)]
-                mode = d % 3
-                blob = encode_tiff(
-                    w, h, px,
-                    big_endian=bool(d % 2),
-                    rows_per_strip=16,
-                    lzw=mode > 0,
-                    predictor=mode == 2,
-                )
-                w2, h2, back = decode_tiff(blob)
-                rows["doc_id"].append(d)
-                rows["mode"].append(mode)
-                rows["big_endian"].append(d % 2)
-                rows["width"].append(w2)
-                rows["height"].append(h2)
-                rows["pixel_sum"].append(sum(v for r in back for v in r))
-                rows["corner_sum"].append(
-                    back[0][0] + back[0][-1] + back[-1][0] + back[-1][-1]
-                )
-            yield pd.DataFrame(rows)
+    def roundtrip(d):
+        w, h = TIFFL_W(d), TIFFL_H(d)
+        px = [[(11 * d + 7 * x + 13 * y) % 256 for x in range(w)] for y in range(h)]
+        mode = d % 3
+        blob = encode_tiff(
+            w, h, px,
+            big_endian=bool(d % 2),
+            rows_per_strip=16,
+            lzw=mode > 0,
+            predictor=mode == 2,
+        )
+        w2, h2, back = decode_tiff(blob)
+        yield (
+            d, mode, d % 2, w2, h2, sum(v for r in back for v in r),
+            back[0][0] + back[0][-1] + back[-1][0] + back[-1][-1],
+        )
 
-    return docs.mapInPandas(
+    return row_stage(
+        docs,
+        "doc_id long, mode long, big_endian long, width long,"
+        " height long, pixel_sum long, corner_sum long",
         roundtrip,
-        schema=(
-            "doc_id long, mode long, big_endian long, width long,"
-            " height long, pixel_sum long, corner_sum long"
-        ),
     )
 
 
@@ -2818,42 +2369,23 @@ def jpeg_lossless_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "precision": [], "predictor": [], "pt": [],
-                "width": [], "height": [], "sample_sum": [], "max_sample": [],
-            }
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = 17 + d % 8, 13 + (3 * d) % 7
-                prec, pred, pt = JLS_PREC(d), 1 + d % 7, d % 2
-                mod = 1 << prec
-                px = [[(11 * d + 7 * x + 13 * y + x * y) % mod
-                       for x in range(w)] for y in range(h)]
-                blob = encode_jpeg_lossless(
-                    w, h, px, predictor=pred, precision=prec,
-                    point_transform=pt,
-                )
-                w2, h2, p2, pr2, pt2, back = decode_jpeg_lossless(blob)
-                flat = [v for row in back for v in row]
-                rows["doc_id"].append(d)
-                rows["precision"].append(p2)
-                rows["predictor"].append(pr2)
-                rows["pt"].append(pt2)
-                rows["width"].append(w2)
-                rows["height"].append(h2)
-                rows["sample_sum"].append(sum(flat))
-                rows["max_sample"].append(max(flat))
-            yield pd.DataFrame(rows)
+    def roundtrip(d):
+        w, h = 17 + d % 8, 13 + (3 * d) % 7
+        prec, pred, pt = JLS_PREC(d), 1 + d % 7, d % 2
+        mod = 1 << prec
+        px = [[(11 * d + 7 * x + 13 * y + x * y) % mod for x in range(w)] for y in range(h)]
+        blob = encode_jpeg_lossless(
+            w, h, px, predictor=pred, precision=prec, point_transform=pt
+        )
+        w2, h2, p2, pr2, pt2, back = decode_jpeg_lossless(blob)
+        flat = [v for row in back for v in row]
+        yield d, p2, pr2, pt2, w2, h2, sum(flat), max(flat)
 
-    return docs.mapInPandas(
+    return row_stage(
+        docs,
+        "doc_id long, precision long, predictor long, pt long,"
+        " width long, height long, sample_sum long, max_sample long",
         roundtrip,
-        schema=(
-            "doc_id long, precision long, predictor long, pt long,"
-            " width long, height long, sample_sum long, max_sample long"
-        ),
     )
 
 
@@ -2905,50 +2437,36 @@ def png_subbyte_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "bit_depth": [], "paletted": [],
-                "width": [], "height": [], "r_sum": [], "g_sum": [],
-                "b_sum": [],
-            }
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = PNG_W(d), PNG_H(d)
-                kind = d % 6
-                depth = _PNGSB_DEPTH[kind]
-                mod = 1 << depth
-                px = [[(3 * x + 5 * y + d) % mod for x in range(w)]
-                      for y in range(h)]
-                paletted = kind >= 3
-                pal = [((7 * i + d) % 256, (11 * i + 3 * d) % 256,
-                        (13 * i + 5 * d) % 256) for i in range(mod)]
-                blob = encode_png(
-                    w, h, px,
-                    color_type=3 if paletted else 0,
-                    palette=pal if paletted else None,
-                    depth=depth,
-                    interlace=d % 2,
-                    filters=lambda y, d=d: (y + d) % 5,
-                )
-                w2, h2, back = decode_png(blob)
-                rows["doc_id"].append(d)
-                rows["bit_depth"].append(depth)
-                rows["paletted"].append(int(paletted))
-                rows["width"].append(w2)
-                rows["height"].append(h2)
-                rows["r_sum"].append(sum(v[0] for row in back for v in row))
-                rows["g_sum"].append(sum(v[1] for row in back for v in row))
-                rows["b_sum"].append(sum(v[2] for row in back for v in row))
-            yield pd.DataFrame(rows)
+    def roundtrip(d):
+        w, h = PNG_W(d), PNG_H(d)
+        kind = d % 6
+        depth = _PNGSB_DEPTH[kind]
+        mod = 1 << depth
+        px = [[(3 * x + 5 * y + d) % mod for x in range(w)] for y in range(h)]
+        paletted = kind >= 3
+        pal = [
+            ((7 * i + d) % 256, (11 * i + 3 * d) % 256, (13 * i + 5 * d) % 256)
+            for i in range(mod)
+        ]
+        blob = encode_png(
+            w, h, px,
+            color_type=3 if paletted else 0,
+            palette=pal if paletted else None,
+            depth=depth,
+            interlace=d % 2,
+            filters=lambda y, d=d: (y + d) % 5,
+        )
+        w2, h2, back = decode_png(blob)
+        yield (
+            d, depth, int(paletted), w2, h2,
+            *(sum(v[c] for row in back for v in row) for c in range(3)),
+        )
 
-    return docs.mapInPandas(
+    return row_stage(
+        docs,
+        "doc_id long, bit_depth long, paletted long, width long,"
+        " height long, r_sum long, g_sum long, b_sum long",
         roundtrip,
-        schema=(
-            "doc_id long, bit_depth long, paletted long, width long,"
-            " height long, r_sum long, g_sum long, b_sum long"
-        ),
     )
 
 
@@ -3020,48 +2538,24 @@ def jpeg12_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = J12_W(d), J12_H(d)
-                bw, bh = (w + 7) // 8, (h + 7) // 8
-                blocks = [_j12_block(d, b) for b in range(bw * bh)]
-                payloads.append(
-                    encode_jpeg(
-                        w, h, J12_QT, [blocks], precision=12,
-                        dri=2 if d % 3 == 0 else 0,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def encode(d):
+        w, h = J12_W(d), J12_H(d)
+        bw, bh = (w + 7) // 8, (h + 7) // 8
+        blocks = [_j12_block(d, b) for b in range(bw * bh)]
+        yield d, encode_jpeg(
+            w, h, J12_QT, [blocks], precision=12, dri=2 if d % 3 == 0 else 0
+        )
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "width": [], "height": [],
-                "pixel_sum": [], "min_pixel": [], "max_pixel": [],
-            }
-            for d, p in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, planes = decode_jpeg(bytes(p))
-                flat = [v for row in planes[0] for v in row]
-                rows["doc_id"].append(int(d))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["pixel_sum"].append(sum(flat))
-                rows["min_pixel"].append(min(flat))
-                rows["max_pixel"].append(max(flat))
-            yield pd.DataFrame(rows)
+    def decode(d, p):
+        w, h, planes = decode_jpeg(bytes(p))
+        flat = [v for row in planes[0] for v in row]
+        yield d, w, h, sum(flat), min(flat), max(flat)
 
-    blobs = docs.mapInPandas(encode, schema="doc_id long, payload binary")
-    return blobs.mapInPandas(
+    blobs = row_stage(docs, PAYLOAD, encode)
+    return row_stage(
+        blobs,
+        "doc_id long, width long, height long, pixel_sum long, min_pixel long, max_pixel long",
         decode,
-        schema=(
-            "doc_id long, width long, height long, pixel_sum long,"
-            " min_pixel long, max_pixel long"
-        ),
     )
 
 
@@ -3161,47 +2655,23 @@ def jpeg_arith_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = JA_W(d), JA_H(d)
-                bw, bh = (w + 7) // 8, (h + 7) // 8
-                blocks = [_ja_block(d, b) for b in range(bw * bh)]
-                payloads.append(
-                    encode_jpeg_arith(w, h, JA_QT, blocks, kx=JA_KX[d % 4])
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def encode(d):
+        w, h = JA_W(d), JA_H(d)
+        bw, bh = (w + 7) // 8, (h + 7) // 8
+        blocks = [_ja_block(d, b) for b in range(bw * bh)]
+        yield d, encode_jpeg_arith(w, h, JA_QT, blocks, kx=JA_KX[d % 4])
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "kx": [], "width": [], "height": [],
-                "pixel_sum": [], "min_pixel": [], "max_pixel": [],
-            }
-            for d, p in zip(pdf["doc_id"], pdf["payload"]):
-                d = int(d)
-                w, h, px = decode_jpeg_arith(bytes(p))
-                flat = [v for row in px for v in row]
-                rows["doc_id"].append(d)
-                rows["kx"].append(JA_KX[d % 4])
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["pixel_sum"].append(sum(flat))
-                rows["min_pixel"].append(min(flat))
-                rows["max_pixel"].append(max(flat))
-            yield pd.DataFrame(rows)
+    def decode(d, p):
+        w, h, px = decode_jpeg_arith(bytes(p))
+        flat = [v for row in px for v in row]
+        yield d, JA_KX[d % 4], w, h, sum(flat), min(flat), max(flat)
 
-    blobs = docs.mapInPandas(encode, schema="doc_id long, payload binary")
-    return blobs.mapInPandas(
+    blobs = row_stage(docs, PAYLOAD, encode)
+    return row_stage(
+        blobs,
+        "doc_id long, kx long, width long, height long,"
+        " pixel_sum long, min_pixel long, max_pixel long",
         decode,
-        schema=(
-            "doc_id long, kx long, width long, height long,"
-            " pixel_sum long, min_pixel long, max_pixel long"
-        ),
     )
 
 
@@ -3292,47 +2762,30 @@ def jpeg_hier_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "width": [], "height": [], "pixel_sum": [],
-                "ref_sum": [], "diff_abs_sum": [], "max_abs_diff": [],
-            }
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = JH_W(d), JH_H(d)
-                px = [[(11 * d + 7 * x + 13 * y + x * y) % 256
-                       for x in range(w)] for y in range(h)]
-                blob = encode_jpeg_hier_lossless(
-                    w, h, px, predictor=1 + d % 7
-                )
-                w2, h2, back = decode_jpeg_hier_lossless(blob)
-                if (w2, h2, back) != (w, h, px):
-                    raise ValueError(f"hierarchical roundtrip broke on {d}")
-                rw, rh = (w + 1) // 2, (h + 1) // 2
-                ref = [[px[2 * y][2 * x] for x in range(rw)]
-                       for y in range(rh)]
-                exp = _exp_expand(ref, w, h)
-                diffs = [
-                    ((px[y][x] - exp[y][x] + 32768) & 0xFFFF) - 32768
-                    for y in range(h) for x in range(w)
-                ]
-                rows["doc_id"].append(d)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["pixel_sum"].append(sum(v for r in back for v in r))
-                rows["ref_sum"].append(sum(v for r in ref for v in r))
-                rows["diff_abs_sum"].append(sum(abs(v) for v in diffs))
-                rows["max_abs_diff"].append(max(abs(v) for v in diffs))
-            yield pd.DataFrame(rows)
+    def roundtrip(d):
+        w, h = JH_W(d), JH_H(d)
+        px = [[(11 * d + 7 * x + 13 * y + x * y) % 256 for x in range(w)] for y in range(h)]
+        blob = encode_jpeg_hier_lossless(w, h, px, predictor=1 + d % 7)
+        w2, h2, back = decode_jpeg_hier_lossless(blob)
+        if (w2, h2, back) != (w, h, px):
+            raise ValueError(f"hierarchical roundtrip broke on {d}")
+        rw, rh = (w + 1) // 2, (h + 1) // 2
+        ref = [[px[2 * y][2 * x] for x in range(rw)] for y in range(rh)]
+        exp = _exp_expand(ref, w, h)
+        diffs = [
+            ((px[y][x] - exp[y][x] + 32768) & 0xFFFF) - 32768
+            for y in range(h) for x in range(w)
+        ]
+        yield (
+            d, w, h, sum(v for r in back for v in r), sum(v for r in ref for v in r),
+            sum(abs(v) for v in diffs), max(abs(v) for v in diffs),
+        )
 
-    return docs.mapInPandas(
+    return row_stage(
+        docs,
+        "doc_id long, width long, height long, pixel_sum long,"
+        " ref_sum long, diff_abs_sum long, max_abs_diff long",
         roundtrip,
-        schema=(
-            "doc_id long, width long, height long, pixel_sum long,"
-            " ref_sum long, diff_abs_sum long, max_abs_diff long"
-        ),
     )
 
 
@@ -3568,43 +3021,27 @@ def audio_adpcm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "n_blocks": [], "decoded_sum": [],
-                "nibble_sum": [], "abs_err_sum": [], "max_abs_err": [],
-            }
-            for d in pdf["doc_id"]:
-                d = int(d)
-                nb = IMA_NB(d)
-                samples = [IMA_SAMPLE(d, t) for t in range(9 * nb)]
-                idxs = [(d + b) % 89 for b in range(nb)]
-                blob = encode_wav_ima(samples, idxs)
-                sr, got = decode_wav_ima(blob)
-                at = blob.index(b"data") + 8
-                nib_sum = 0
-                for b in range(nb):
-                    for byte in blob[at + 8 * b + 4 : at + 8 * b + 8]:
-                        nib_sum += (byte & 0xF) + (byte >> 4)
-                errs = [
-                    abs(samples[9 * b + 1 + k] - got[9 * b + 1 + k])
-                    for b in range(nb) for k in range(8)
-                ]
-                rows["doc_id"].append(d)
-                rows["n_blocks"].append(nb)
-                rows["decoded_sum"].append(sum(got))
-                rows["nibble_sum"].append(nib_sum)
-                rows["abs_err_sum"].append(sum(errs))
-                rows["max_abs_err"].append(max(errs))
-            yield pd.DataFrame(rows)
+    def roundtrip(d):
+        nb = IMA_NB(d)
+        samples = [IMA_SAMPLE(d, t) for t in range(9 * nb)]
+        idxs = [(d + b) % 89 for b in range(nb)]
+        blob = encode_wav_ima(samples, idxs)
+        sr, got = decode_wav_ima(blob)
+        at = blob.index(b"data") + 8
+        nib_sum = 0
+        for b in range(nb):
+            for byte in blob[at + 8 * b + 4 : at + 8 * b + 8]:
+                nib_sum += (byte & 0xF) + (byte >> 4)
+        errs = [
+            abs(samples[9 * b + 1 + k] - got[9 * b + 1 + k]) for b in range(nb) for k in range(8)
+        ]
+        yield d, nb, sum(got), nib_sum, sum(errs), max(errs)
 
-    return docs.mapInPandas(
-        kernel,
-        schema=(
-            "doc_id long, n_blocks long, decoded_sum long,"
-            " nibble_sum long, abs_err_sum long, max_abs_err long"
-        ),
+    return row_stage(
+        docs,
+        "doc_id long, n_blocks long, decoded_sum long,"
+        " nibble_sum long, abs_err_sum long, max_abs_err long",
+        roundtrip,
     )
 
 
@@ -3709,48 +3146,29 @@ def columnar_encoding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "n_values": [], "bit_width": [],
-                "hybrid_bytes": [], "delta_bytes": [], "value_sum": [],
-                "lz4_ok": [],
-            }
-            for d in pdf["doc_id"]:
-                d = int(d)
-                bw = PQ_BW(d)
-                n = 8 * PQ_NG(d) + PQ_TAIL(d)
-                vals = [_pq_value(d, t, bw) for t in range(n)]
-                hyb = rle_hybrid_encode(vals, bw)
-                if rle_hybrid_decode(hyb, bw, n) != vals:
-                    raise ValueError(f"hybrid roundtrip broke on doc {d}")
-                dl = delta_binary_packed_encode(vals)
-                if delta_binary_packed_decode(dl) != vals:
-                    raise ValueError(f"delta roundtrip broke on doc {d}")
-                # LZ4_RAW leg (the page-compression layer OVER the
-                # encoding layer, as Parquet stacks them): roundtrip
-                # both streams through the from-scratch block codec
-                for stream in (hyb, dl):
-                    if lz4_decompress(lz4_compress(stream),
-                                      len(stream)) != stream:
-                        raise ValueError(f"lz4 roundtrip broke on doc {d}")
-                rows["doc_id"].append(d)
-                rows["n_values"].append(n)
-                rows["bit_width"].append(bw)
-                rows["hybrid_bytes"].append(len(hyb))
-                rows["delta_bytes"].append(len(dl))
-                rows["value_sum"].append(sum(vals))
-                rows["lz4_ok"].append(True)
-            yield pd.DataFrame(rows)
+    def roundtrip(d):
+        bw = PQ_BW(d)
+        n = 8 * PQ_NG(d) + PQ_TAIL(d)
+        vals = [_pq_value(d, t, bw) for t in range(n)]
+        hyb = rle_hybrid_encode(vals, bw)
+        if rle_hybrid_decode(hyb, bw, n) != vals:
+            raise ValueError(f"hybrid roundtrip broke on doc {d}")
+        dl = delta_binary_packed_encode(vals)
+        if delta_binary_packed_decode(dl) != vals:
+            raise ValueError(f"delta roundtrip broke on doc {d}")
+        # LZ4_RAW leg (the page-compression layer OVER the encoding
+        # layer, as Parquet stacks them): roundtrip both streams through
+        # the from-scratch block codec
+        for stream in (hyb, dl):
+            if lz4_decompress(lz4_compress(stream), len(stream)) != stream:
+                raise ValueError(f"lz4 roundtrip broke on doc {d}")
+        yield d, n, bw, len(hyb), len(dl), sum(vals), True
 
-    return docs.mapInPandas(
-        kernel,
-        schema=(
-            "doc_id long, n_values long, bit_width long,"
-            " hybrid_bytes long, delta_bytes long, value_sum long,"
-            " lz4_ok boolean"
-        ),
+    return row_stage(
+        docs,
+        "doc_id long, n_values long, bit_width long,"
+        " hybrid_bytes long, delta_bytes long, value_sum long, lz4_ok boolean",
+        roundtrip,
     )
 
 
@@ -3934,40 +3352,24 @@ def jpeg_hier_dct_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "progressive": [], "width": [], "height": [],
-                "pixel_sum": [], "min_pixel": [], "max_pixel": [],
-            }
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = JHD_W(d), JHD_H(d)
-                rw, rh = (w + 1) // 2, (h + 1) // 2
-                blob = encode_jpeg_hier_dct(
-                    w, h, JHD_QT,
-                    _jhd_blocks(d, rw, rh, "ref"),
-                    _jhd_blocks(d, w, h, "diff"),
-                    progressive=bool(d % 2),
-                )
-                w2, h2, px = decode_jpeg_hier_dct(blob)
-                flat = [v for row in px for v in row]
-                rows["progressive"].append(d % 2)
-                rows["doc_id"].append(d)
-                rows["width"].append(w2)
-                rows["height"].append(h2)
-                rows["pixel_sum"].append(sum(flat))
-                rows["min_pixel"].append(min(flat))
-                rows["max_pixel"].append(max(flat))
-            yield pd.DataFrame(rows)
+    def roundtrip(d):
+        w, h = JHD_W(d), JHD_H(d)
+        rw, rh = (w + 1) // 2, (h + 1) // 2
+        blob = encode_jpeg_hier_dct(
+            w, h, JHD_QT,
+            _jhd_blocks(d, rw, rh, "ref"),
+            _jhd_blocks(d, w, h, "diff"),
+            progressive=bool(d % 2),
+        )
+        w2, h2, px = decode_jpeg_hier_dct(blob)
+        flat = [v for row in px for v in row]
+        yield d, d % 2, w2, h2, sum(flat), min(flat), max(flat)
 
-    return docs.mapInPandas(
+    return row_stage(
+        docs,
+        "doc_id long, progressive long, width long, height long,"
+        " pixel_sum long, min_pixel long, max_pixel long",
         roundtrip,
-        schema=(
-            "doc_id long, progressive long, width long, height long,"
-            " pixel_sum long, min_pixel long, max_pixel long"
-        ),
     )
 
 
@@ -4099,49 +3501,23 @@ def jpeg_arith_prog_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = JAP_W(d), JAP_H(d)
-                bw, bh = (w + 7) // 8, (h + 7) // 8
-                blocks = [_ja_block(d, b) for b in range(bw * bh)]
-                payloads.append(
-                    encode_jpeg_arith_progressive(
-                        w, h, JA_QT, blocks, kx=JA_KX[d % 4]
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def encode(d):
+        w, h = JAP_W(d), JAP_H(d)
+        bw, bh = (w + 7) // 8, (h + 7) // 8
+        blocks = [_ja_block(d, b) for b in range(bw * bh)]
+        yield d, encode_jpeg_arith_progressive(w, h, JA_QT, blocks, kx=JA_KX[d % 4])
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "kx": [], "width": [], "height": [],
-                "pixel_sum": [], "min_pixel": [], "max_pixel": [],
-            }
-            for d, p in zip(pdf["doc_id"], pdf["payload"]):
-                d = int(d)
-                w, h, px = decode_jpeg_arith(bytes(p))
-                flat = [v for row in px for v in row]
-                rows["doc_id"].append(d)
-                rows["kx"].append(JA_KX[d % 4])
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["pixel_sum"].append(sum(flat))
-                rows["min_pixel"].append(min(flat))
-                rows["max_pixel"].append(max(flat))
-            yield pd.DataFrame(rows)
+    def decode(d, p):
+        w, h, px = decode_jpeg_arith(bytes(p))
+        flat = [v for row in px for v in row]
+        yield d, JA_KX[d % 4], w, h, sum(flat), min(flat), max(flat)
 
-    blobs = docs.mapInPandas(encode, schema="doc_id long, payload binary")
-    return blobs.mapInPandas(
+    blobs = row_stage(docs, PAYLOAD, encode)
+    return row_stage(
+        blobs,
+        "doc_id long, kx long, width long, height long,"
+        " pixel_sum long, min_pixel long, max_pixel long",
         decode,
-        schema=(
-            "doc_id long, kx long, width long, height long,"
-            " pixel_sum long, min_pixel long, max_pixel long"
-        ),
     )
 
 
@@ -4249,24 +3625,13 @@ def stream_adpcm_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _ensure_wav_files(spark, sf_dir)
     blobs = binary_file_stream(spark, src, "*.wav").select("path", "content")
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        import os as _os
-
-        for pdf in batches:
-            rows: dict[str, list] = {"doc_id": [], "n_samples": [],
-                                     "decoded_sum": []}
-            for path, blob in zip(pdf["path"], pdf["content"]):
-                d = int(_os.path.basename(path)[4:10])
-                sr, got = decode_wav_ima(bytes(blob))
-                rows["doc_id"].append(d)
-                rows["n_samples"].append(len(got))
-                rows["decoded_sum"].append(sum(got))
-            yield pd.DataFrame(rows)
+    def parse(path, blob):
+        sr, got = decode_wav_ima(bytes(blob))
+        yield int(os.path.basename(path)[4:10]), len(got), sum(got)
 
     out = "doc_id long, n_samples long, decoded_sum long"
     back = run_available_now(
-        blobs.mapInPandas(parse, schema=out),
+        row_stage(blobs, out, parse),
         os.path.join(SCRATCH, f"stream_{os.path.basename(src)}"),
         out,
     )

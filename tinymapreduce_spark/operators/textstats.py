@@ -16,7 +16,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tinymapreduce_spark.functions.text import normalized_text, tokens
-from tinymapreduce_spark.pyworker import prime_worker
+from tinymapreduce_spark.pyworker import prime_worker, row_stage
 from tinymapreduce_spark.sources.loaders import documents_for_cpu, load_table
 
 # html_extract_stats ships an Arrow kernel; executors that can't import
@@ -858,7 +858,7 @@ def compressibility(spark: SparkSession, sf_dir: str) -> DataFrame:
       A regression in either compressor flips a hashed value.
 
     Python is unavoidable (no JVM-side deflate expression), so this runs
-    as an Arrow-batched mapInPandas kernel — bytes in, ints/bools out.
+    as an Arrow-batched per-row stage — bytes in, ints/bools out.
     NOTE: the SQL replay decomposes runs over CHARACTERS, which equals
     the kernel's byte runs only for ASCII corpora (the driver tables
     are; multi-byte parity for the kernel itself is pinned in pytest)."""
@@ -870,10 +870,6 @@ def compressibility(spark: SparkSession, sf_dir: str) -> DataFrame:
 def compressibility_audit_df(docs: DataFrame) -> DataFrame:
     """Kernel body over any ``(doc_id, text)`` frame — split out so
     tests can certify the formula and booleans on constructed docs."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     import zlib as _zlib
 
     from tinymapreduce_spark.functions.inflate import (
@@ -891,28 +887,16 @@ def compressibility_audit_df(docs: DataFrame) -> DataFrame:
         blob = deflate_dynamic(b)
         return inflate(blob)[0] == b and _zlib.decompress(blob, -15) == b
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            enc = pdf["text"].map(lambda t: t.encode("utf-8"))
-            raw = enc.map(len)
-            rle = enc.map(lambda b: len(deflate_rle(b)))
-            lz = enc.map(lambda b: len(deflate_fixed(b)))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "raw_bytes": raw,
-                    "rle_bytes": rle,
-                    "lz_le_rle": lz <= rle,
-                    "lz_le_raw": lz <= raw + 2,
-                    "dyn_ok": enc.map(_dyn_ok),
-                }
-            )
+    def audit(doc_id, text):
+        b = text.encode("utf-8")
+        raw, rle, lz = len(b), len(deflate_rle(b)), len(deflate_fixed(b))
+        yield doc_id, raw, rle, lz <= rle, lz <= raw + 2, _dyn_ok(b)
 
-    out = docs.mapInPandas(
-        kernel,
-        schema="doc_id long, raw_bytes long, rle_bytes long, "
+    out = row_stage(
+        docs,
+        "doc_id long, raw_bytes long, rle_bytes long, "
         "lz_le_rle boolean, lz_le_raw boolean, dyn_ok boolean",
+        audit,
     )
     # ratio on the JVM side (long/long division + round, same ops as the
     # oracle's ROUND(CAST(..)/.., 6) — not pandas' half-even rounding)
@@ -935,30 +919,15 @@ def compressibility_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
 def compressibility_df(docs: DataFrame) -> DataFrame:
     """Kernel body of the raw LZ77 leg over any ``(doc_id, text)``
     frame — tests certify the signal direction on constructed docs."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     from tinymapreduce_spark.functions.inflate import deflate_fixed
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            enc = pdf["text"].map(lambda t: t.encode("utf-8"))
-            raw = enc.map(len)
-            comp = enc.map(lambda b: len(deflate_fixed(b)))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "raw_bytes": raw,
-                    "deflate_bytes": comp,
-                    "compress_ratio": (comp / raw).round(6),
-                }
-            )
+    def ratio(doc_id, text):
+        b = text.encode("utf-8")
+        raw, comp = len(b), len(deflate_fixed(b))
+        yield doc_id, raw, comp, round(comp / raw, 6) if raw else float("inf")
 
-    return docs.mapInPandas(
-        kernel,
-        schema="doc_id long, raw_bytes long, deflate_bytes long, compress_ratio double",
+    return row_stage(
+        docs, "doc_id long, raw_bytes long, deflate_bytes long, compress_ratio double", ratio
     )
 
 
@@ -1110,7 +1079,7 @@ def text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream are representation-independent.
 
     No JVM NFC expression exists, so this is an Arrow-batched
-    mapInPandas kernel (unicodedata is C-accelerated); the oracle uses
+    per-row stage (unicodedata is C-accelerated); the oracle uses
     DuckDB's native nfc_normalize — two INDEPENDENT NFC
     implementations agreeing on the md5 is the point of the parity
     check (certified on combining-character docs in tests; the ASCII
@@ -1125,36 +1094,20 @@ def text_normalize_df(docs: DataFrame) -> DataFrame:
     import hashlib
     import unicodedata
 
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     _CONTROL = {c: None for c in range(32) if c not in (9, 10)}
     _CONTROL.update({c: None for c in range(127, 160)})
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prime_worker()
-        for pdf in batches:
-            out = {
-                "doc_id": pdf["doc_id"],
-                "clean_md5": [],
-                "changed": [],
-                "n_control_stripped": [],
-            }
-            # strip BEFORE normalizing: controls never join combining
-            # sequences, and DuckDB's nfc_normalize truncates at NUL —
-            # stripping first keeps the two oracles on the same input.
-            for t in pdf["text"]:
-                stripped = t.translate(_CONTROL)
-                clean = unicodedata.normalize("NFC", stripped)
-                out["clean_md5"].append(hashlib.md5(clean.encode("utf-8")).hexdigest())
-                out["changed"].append(clean != t)
-                out["n_control_stripped"].append(len(t) - len(stripped))
-            yield pd.DataFrame(out)
+    def normalize(doc_id, t):
+        # strip BEFORE normalizing: controls never join combining
+        # sequences, and DuckDB's nfc_normalize truncates at NUL —
+        # stripping first keeps the two oracles on the same input.
+        stripped = t.translate(_CONTROL)
+        clean = unicodedata.normalize("NFC", stripped)
+        md5 = hashlib.md5(clean.encode("utf-8")).hexdigest()
+        yield doc_id, md5, clean != t, len(t) - len(stripped)
 
-    return docs.mapInPandas(
-        kernel,
-        schema="doc_id long, clean_md5 string, changed boolean, n_control_stripped long",
+    return row_stage(
+        docs, "doc_id long, clean_md5 string, changed boolean, n_control_stripped long", normalize
     )
 
 
@@ -1721,10 +1674,6 @@ def html_extract_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per-row event parse in one Arrow kernel over
     (doc_id, html) — the same row-local contract as the codec rungs;
     at 100 TB this runs right after the WARC walker."""
-    from collections.abc import Iterator as _It
-
-    import pandas as pd
-
     d = F.col("doc_id")
     para = lambda i: F.concat(  # noqa: E731
         F.lit("<p class='c"), F.lit(str(i)), F.lit("'>para "),
@@ -1751,30 +1700,14 @@ def html_extract_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _extract = _extract_html  # bind for by-value closure capture
 
-    def extract(batches: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
-        prime_worker()
-        import pandas as pd
+    def extract(doc_id, doc):
+        title, text, n_links = _extract(doc)
+        yield doc_id, len(title), len(text), n_links, text.count("&")
 
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "title_len": [], "visible_chars": [],
-                "n_links": [], "n_amps": [],
-            }
-            for doc_id, doc in zip(pdf["doc_id"], pdf["html"]):
-                title, text, n_links = _extract(doc)
-                rows["doc_id"].append(doc_id)
-                rows["title_len"].append(len(title))
-                rows["visible_chars"].append(len(text))
-                rows["n_links"].append(n_links)
-                rows["n_amps"].append(text.count("&"))
-            yield pd.DataFrame(rows)
-
-    return pages.mapInPandas(
+    return row_stage(
+        pages,
+        "doc_id long, title_len long, visible_chars long, n_links long, n_amps long",
         extract,
-        schema=(
-            "doc_id long, title_len long, visible_chars long,"
-            " n_links long, n_amps long"
-        ),
     )
 
 
@@ -1836,33 +1769,17 @@ def mojibake_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     all flip the hash. Row-local Arrow kernel, no shuffle; detection is
     O(bytes) — the hygiene pass a web corpus runs before tokenization
     (the ftfy problem, solved for its dominant case)."""
-    import pandas as pd
+    import hashlib
 
     docs = documents_for_cpu(spark, sf_dir).select("doc_id", "text")
 
-    def kernel(batches):
-        prime_worker()
-        for pdf in batches:
-            out = {"doc_id": [], "was_mojibake": [], "repaired_md5": []}
-            for d, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(d)
-                clean = text + MOJIBAKE_SUFFIX
-                wire = (
-                    clean.encode("utf-8").decode("latin-1") if d % 2 else clean
-                )
-                repaired, was = _try_repair_mojibake(wire)
-                import hashlib
+    def repair(d, text):
+        clean = text + MOJIBAKE_SUFFIX
+        wire = clean.encode("utf-8").decode("latin-1") if d % 2 else clean
+        repaired, was = _try_repair_mojibake(wire)
+        yield d, int(was), hashlib.md5(repaired.encode("utf-8")).hexdigest()
 
-                out["doc_id"].append(d)
-                out["was_mojibake"].append(int(was))
-                out["repaired_md5"].append(
-                    hashlib.md5(repaired.encode("utf-8")).hexdigest()
-                )
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(
-        kernel, schema="doc_id long, was_mojibake long, repaired_md5 string"
-    )
+    return row_stage(docs, "doc_id long, was_mojibake long, repaired_md5 string", repair)
 
 
 MOJIBAKE_SQL = f"""
@@ -1953,8 +1870,6 @@ def robots_url_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles until the final bucket aggregate. Exactly the crawl
     front-door gate: at 100 TB the URL set is the big side and policy
     is the broadcast side."""
-    import pandas as pd
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     urls = docs.select(
         "doc_id",
@@ -1970,22 +1885,11 @@ def robots_url_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     hosts = spark.range(50).select(F.col("id").cast("int").alias("host"))
 
-    def parse_kernel(batches):
-        prime_worker()
-        for pdf in batches:
-            out = {"host": [], "pattern": [], "is_allow": []}
-            for h in pdf["host"]:
-                for pattern, is_allow in parse_robots(
-                    _robots_text(int(h)), ROBOTS_AGENT
-                ):
-                    out["host"].append(int(h))
-                    out["pattern"].append(pattern)
-                    out["is_allow"].append(int(is_allow))
-            yield pd.DataFrame(out)
+    def host_rules(h):
+        for pattern, is_allow in parse_robots(_robots_text(h), ROBOTS_AGENT):
+            yield h, pattern, int(is_allow)
 
-    rules = hosts.mapInPandas(
-        parse_kernel, schema="host int, pattern string, is_allow long"
-    )
+    rules = row_stage(hosts, "host int, pattern string, is_allow long", host_rules)
     matched = urls.join(
         F.broadcast(rules),
         (urls["host"] == rules["host"])
@@ -2072,10 +1976,8 @@ def crawl_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one fan-out exchange, one Arrow kernel (WARC walk +
     HTML parse + gate, all row-local), zero shuffles after — the
     curation front door as a single declarative stage."""
+    import hashlib
     import re as _re
-    from collections.abc import Iterator as _It
-
-    import pandas as pd
 
     from tinymapreduce_spark.sources.warcfiles import (
         WARC_DATE,
@@ -2086,66 +1988,38 @@ def crawl_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
     _extract = _extract_html
 
-    def kernel(batches: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
-        prime_worker()
-        import hashlib
+    def curate(d):
+        paras = "".join(
+            f"<p class='c{i}'>para {d} {i} &amp; more</p>"
+            f"<a href='/l{i}'>link{i}</a>"
+            for i in range(1 + d % 4)
+        )
+        html = (
+            f"<html><head><title>T{d}</title><script>var x = {d};"
+            f"</script><style>.c{{color:red}}</style></head><body>"
+            f"<!-- hidden {d} --><h1>Head&#33; {d}</h1>{paras}"
+            f"</body></html>"
+        )
+        warc = write_warc(
+            [
+                ("warcinfo", b"software: tinymapreduce-spark\r\n", {"WARC-Date": WARC_DATE}),
+                (
+                    "response",
+                    html.encode(),
+                    {"WARC-Date": WARC_DATE, "WARC-Target-URI": f"http://site{d % 50}.example/"},
+                ),
+            ],
+            gzip_members=bool(d % 2),
+        )
+        responses = [body for t, _, body in parse_warc(warc) if t == "response"]
+        _, text, _ = _extract(responses[0].decode())
+        toks = [t for t in _re.split("[^A-Za-z]+", text) if t]
+        yield d, d % 2, len(toks), int(len(toks) >= 5), hashlib.md5(text.encode()).hexdigest()
 
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "gzipped": [], "n_tokens": [], "kept": [],
-                "visible_md5": [],
-            }
-            for d in pdf["doc_id"]:
-                d = int(d)
-                paras = "".join(
-                    f"<p class='c{i}'>para {d} {i} &amp; more</p>"
-                    f"<a href='/l{i}'>link{i}</a>"
-                    for i in range(1 + d % 4)
-                )
-                html = (
-                    f"<html><head><title>T{d}</title><script>var x = {d};"
-                    f"</script><style>.c{{color:red}}</style></head><body>"
-                    f"<!-- hidden {d} --><h1>Head&#33; {d}</h1>{paras}"
-                    f"</body></html>"
-                )
-                warc = write_warc(
-                    [
-                        (
-                            "warcinfo",
-                            b"software: tinymapreduce-spark\r\n",
-                            {"WARC-Date": WARC_DATE},
-                        ),
-                        (
-                            "response",
-                            html.encode(),
-                            {
-                                "WARC-Date": WARC_DATE,
-                                "WARC-Target-URI": f"http://site{d % 50}.example/",
-                            },
-                        ),
-                    ],
-                    gzip_members=bool(d % 2),
-                )
-                responses = [
-                    body for t, _, body in parse_warc(warc) if t == "response"
-                ]
-                _, text, _ = _extract(responses[0].decode())
-                toks = [t for t in _re.split("[^A-Za-z]+", text) if t]
-                rows["doc_id"].append(d)
-                rows["gzipped"].append(d % 2)
-                rows["n_tokens"].append(len(toks))
-                rows["kept"].append(int(len(toks) >= 5))
-                rows["visible_md5"].append(
-                    hashlib.md5(text.encode()).hexdigest()
-                )
-            yield pd.DataFrame(rows)
-
-    return docs.mapInPandas(
-        kernel,
-        schema=(
-            "doc_id long, gzipped long, n_tokens long, kept long,"
-            " visible_md5 string"
-        ),
+    return row_stage(
+        docs,
+        "doc_id long, gzipped long, n_tokens long, kept long, visible_md5 string",
+        curate,
     )
 
 
@@ -2185,6 +2059,8 @@ def bwt_transform_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte order == code-point order, so Python agrees), and hashes the
     last column — the transform itself is verified, not just its
     inverse. Row-local Arrow kernel; rotations never leave the row."""
+    import hashlib
+
     from tinymapreduce_spark.functions.bwt import (
         bwt_forward,
         bwt_inverse,
@@ -2196,46 +2072,25 @@ def bwt_transform_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = documents_for_cpu(spark, sf_dir).select("doc_id", "text")
 
-    def kernel(batches):
-        prime_worker()
-        from collections.abc import Iterator  # noqa: F401
+    def transform(d, t):
+        if not t:
+            # The SQL oracle builds rotations via range(0, n), so an n=0
+            # doc yields no rows there; skip it here too to keep
+            # Spark/DuckDB parity on empty texts.
+            return
+        last, p = bwt_forward(t)
+        ok = bwt_inverse(last, p) == t
+        alpha = sorted(set(last))
+        codes = mtf_encode(last, alpha)
+        ok = ok and mtf_decode(rle0_decode(rle0_encode(codes)), alpha) == last
+        if not ok:
+            raise ValueError(f"BWT pipeline defect on doc {d}")
+        yield d, len(t), p, hashlib.md5(last.encode("utf-8")).hexdigest(), True
 
-        import hashlib
-
-        import pandas as pd
-
-        for pdf in batches:
-            rows = {"doc_id": [], "n": [], "primary_index": [],
-                    "bwt_md5": [], "roundtrip_ok": []}
-            for d, t in zip(pdf["doc_id"], pdf["text"]):
-                if not t:
-                    # The SQL oracle builds rotations via range(0, n),
-                    # so an n=0 doc yields no rows there; skip it here
-                    # too to keep Spark/DuckDB parity on empty texts.
-                    continue
-                last, p = bwt_forward(t)
-                ok = bwt_inverse(last, p) == t
-                alpha = sorted(set(last))
-                codes = mtf_encode(last, alpha)
-                ok = ok and mtf_decode(rle0_decode(rle0_encode(codes)),
-                                       alpha) == last
-                if not ok:
-                    raise ValueError(f"BWT pipeline defect on doc {d}")
-                rows["doc_id"].append(int(d))
-                rows["n"].append(len(t))
-                rows["primary_index"].append(p)
-                rows["bwt_md5"].append(
-                    hashlib.md5(last.encode("utf-8")).hexdigest()
-                )
-                rows["roundtrip_ok"].append(True)
-            yield pd.DataFrame(rows)
-
-    return docs.mapInPandas(
-        kernel,
-        schema=(
-            "doc_id long, n long, primary_index long, bwt_md5 string,"
-            " roundtrip_ok boolean"
-        ),
+    return row_stage(
+        docs,
+        "doc_id long, n long, primary_index long, bwt_md5 string, roundtrip_ok boolean",
+        transform,
     )
 
 

@@ -28,16 +28,31 @@ for entry points that do not. Row-at-a-time UDFs are left out: they run
 once per row. This module is registered pickle-by-value, so the helper
 ships inside those closures even when the worker cannot import this
 package.
+
+A per-row stage (each input row gives 0..n output rows, as a MapReduce
+``map`` does) is written as ``row_stage(df, schema, row_fn)``: the
+module's one ``mapInPandas`` kernel owns the batch loop, primes the
+worker and builds each output frame, so the caller writes only the
+per-row function. Whole-batch kernels (vectorized over a frame, Arrow
+batches, grouped stages) stay direct stage functions.
 """
 
 from __future__ import annotations
 
 import os
 import sys
+from collections.abc import Callable, Iterable, Iterator
 
+import pandas as pd
 from pyspark import cloudpickle
+from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 
 cloudpickle.register_pickle_by_value(sys.modules[__name__])
+
+# The (doc_id, payload) shape every encode -> decode stage passes between
+# its two hops.
+PAYLOAD = "doc_id long, payload binary"
 
 
 def prime_worker() -> None:
@@ -76,3 +91,20 @@ def prime_worker() -> None:
 
     invalidate_caches.stat_keyed = True
     cls.invalidate_caches = invalidate_caches
+
+
+def row_stage(df: DataFrame, schema: str, row_fn: Callable[..., Iterable[tuple]]) -> DataFrame:
+    """One ``mapInPandas`` hop that calls ``row_fn(*row)`` on each input
+    row, with the values of ``df``'s columns in column order, and emits
+    the 0..n tuples it yields as rows of the DDL ``schema``. Tuples are
+    matched to the schema's fields by position and the output frame is
+    labelled with the field names, so Spark assigns columns by name."""
+    names = StructType.fromDDL(schema).names
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prime_worker()
+        for pdf in batches:
+            rows = zip(*(pdf[c].tolist() for c in pdf.columns))
+            yield pd.DataFrame([out for row in rows for out in row_fn(*row)], columns=names)
+
+    return df.mapInPandas(kernel, schema)

@@ -32,7 +32,7 @@ from pyspark import cloudpickle
 
 from tinymapreduce_spark.functions.inflate import crc32, deflate_fixed, inflate
 from tinymapreduce_spark.functions.snappy import snappy_compress, snappy_decompress
-from tinymapreduce_spark.pyworker import prime_worker
+from tinymapreduce_spark.pyworker import row_stage
 
 cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
@@ -215,6 +215,23 @@ def parse_avro(payload: bytes) -> tuple[list[tuple[str, str]], list[dict]]:
 # Per doc d: 1 + d % 4 records {rid: d*1000 + r, delta: (d + r) % 7 - 3,
 # tag: 't' + (d + r) % 5}; even docs codec null, odd docs deflate.
 # Negative deltas exercise zigzag; multi-record blocks exercise framing.
+def _doc_roundtrip(d: int, codec: str) -> tuple[int, int, int, int]:
+    """Write document ``d``'s records as one ``codec`` container, read it
+    back, and return (n_records, rid_sum, delta_sum, tag_len_sum)."""
+    recs = [
+        {"rid": d * 1000 + r, "delta": (d + r) % 7 - 3, "tag": f"t{(d + r) % 5}"}
+        for r in range(1 + d % 4)
+    ]
+    fields = [("rid", "long"), ("delta", "long"), ("tag", "string")]
+    _, back = parse_avro(write_avro(recs, fields, codec=codec))
+    return (
+        len(back),
+        sum(x["rid"] for x in back),
+        sum(x["delta"] for x in back),
+        sum(len(x["tag"]) for x in back),
+    )
+
+
 def avro_ingest_stats(spark, sf_dir: str):
     """REAL Avro ingest over BinaryType: one container per document
     (alternating null/deflate codecs, 3-record blocks so multi-block
@@ -223,46 +240,18 @@ def avro_ingest_stats(spark, sf_dir: str):
     block counts and both codec legs are all load-bearing. The oracle
     replays the record formulas; a varint, sync, framing or inflate bug
     flips the hash. Row-local Arrow kernels — the codec-tier shape."""
-    import pandas as pd
-
     from tinymapreduce_spark.sources.loaders import documents_for_cpu
 
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
-    fields = [("rid", "long"), ("delta", "long"), ("tag", "string")]
 
-    def roundtrip(batches):
-        prime_worker()
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "deflated": [], "n_records": [],
-                "rid_sum": [], "delta_sum": [], "tag_len_sum": [],
-            }
-            for d in pdf["doc_id"]:
-                d = int(d)
-                recs = [
-                    {
-                        "rid": d * 1000 + r,
-                        "delta": (d + r) % 7 - 3,
-                        "tag": f"t{(d + r) % 5}",
-                    }
-                    for r in range(1 + d % 4)
-                ]
-                codec = "deflate" if d % 2 else "null"
-                _, back = parse_avro(write_avro(recs, fields, codec=codec))
-                rows["doc_id"].append(d)
-                rows["deflated"].append(d % 2)
-                rows["n_records"].append(len(back))
-                rows["rid_sum"].append(sum(x["rid"] for x in back))
-                rows["delta_sum"].append(sum(x["delta"] for x in back))
-                rows["tag_len_sum"].append(sum(len(x["tag"]) for x in back))
-            yield pd.DataFrame(rows)
+    def roundtrip(d):
+        yield (d, d % 2, *_doc_roundtrip(d, "deflate" if d % 2 else "null"))
 
-    return docs.mapInPandas(
+    return row_stage(
+        docs,
+        "doc_id long, deflated long, n_records long, rid_sum long,"
+        " delta_sum long, tag_len_sum long",
         roundtrip,
-        schema=(
-            "doc_id long, deflated long, n_records long, rid_sum long,"
-            " delta_sum long, tag_len_sum long"
-        ),
     )
 
 
@@ -274,48 +263,19 @@ def avro_snappy_ingest(spark, sf_dir: str):
     CRC32 trailer check on the ingest path. Same record-formula oracle —
     a tag-stream, varint-preamble, offset, or checksum bug flips the
     hash. Row-local Arrow kernels, shards parallelize by file."""
-    import pandas as pd
-
     from tinymapreduce_spark.sources.loaders import documents_for_cpu
 
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
-    fields = [("rid", "long"), ("delta", "long"), ("tag", "string")]
     codecs = ("null", "deflate", "snappy")
 
-    def roundtrip(batches):
-        prime_worker()
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "codec_id": [], "n_records": [],
-                "rid_sum": [], "delta_sum": [], "tag_len_sum": [],
-            }
-            for d in pdf["doc_id"]:
-                d = int(d)
-                recs = [
-                    {
-                        "rid": d * 1000 + r,
-                        "delta": (d + r) % 7 - 3,
-                        "tag": f"t{(d + r) % 5}",
-                    }
-                    for r in range(1 + d % 4)
-                ]
-                _, back = parse_avro(
-                    write_avro(recs, fields, codec=codecs[d % 3])
-                )
-                rows["doc_id"].append(d)
-                rows["codec_id"].append(d % 3)
-                rows["n_records"].append(len(back))
-                rows["rid_sum"].append(sum(x["rid"] for x in back))
-                rows["delta_sum"].append(sum(x["delta"] for x in back))
-                rows["tag_len_sum"].append(sum(len(x["tag"]) for x in back))
-            yield pd.DataFrame(rows)
+    def roundtrip(d):
+        yield (d, d % 3, *_doc_roundtrip(d, codecs[d % 3]))
 
-    return docs.mapInPandas(
+    return row_stage(
+        docs,
+        "doc_id long, codec_id long, n_records long, rid_sum long,"
+        " delta_sum long, tag_len_sum long",
         roundtrip,
-        schema=(
-            "doc_id long, codec_id long, n_records long, rid_sum long,"
-            " delta_sum long, tag_len_sum long"
-        ),
     )
 
 

@@ -37,7 +37,7 @@ import sys
 from pyspark import cloudpickle
 
 from tinymapreduce_spark.functions.inflate import gunzip, gzip_compress
-from tinymapreduce_spark.pyworker import prime_worker
+from tinymapreduce_spark.pyworker import PAYLOAD, row_stage
 
 cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
@@ -207,53 +207,30 @@ def tar_shard_ingest(spark, sf_dir: str):
     through two Arrow-batched kernels, row-local, no shuffle. At 100 TB
     this is the WebDataset front door: shards parse independently, one
     task per shard batch, samples never cross shard boundaries."""
-    import pandas as pd
-
     from tinymapreduce_spark.sources.loaders import documents_for_cpu
 
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
-    def encode(batches):
-        prime_worker()
-        for pdf in batches:
-            payloads = [
-                write_tar(_doc_members(int(d)), gzipped=bool(int(d) % 2))
-                for d in pdf["doc_id"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def encode(d):
+        yield d, write_tar(_doc_members(d), gzipped=bool(d % 2))
 
-    def parse(batches):
-        prime_worker()
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "gzipped": [], "n_samples": [], "n_members": [],
-                "txt_bytes": [], "max_txt_bytes": [], "cls_sum": [],
-                "bin_byte_sum": [],
-            }
-            for d, p in zip(pdf["doc_id"], pdf["payload"]):
-                members = parse_tar(bytes(p))
-                samples = group_samples(members)
-                txt = [s[1]["txt"] for s in samples]
-                rows["doc_id"].append(d)
-                rows["gzipped"].append(int(d) % 2)
-                rows["n_samples"].append(len(samples))
-                rows["n_members"].append(len(members))
-                rows["txt_bytes"].append(sum(len(t) for t in txt))
-                rows["max_txt_bytes"].append(max(len(t) for t in txt))
-                rows["cls_sum"].append(sum(int(s[1]["cls"]) for s in samples))
-                rows["bin_byte_sum"].append(
-                    sum(sum(s[1]["bin"]) for s in samples)
-                )
-            yield pd.DataFrame(rows)
+    def parse(d, p):
+        members = parse_tar(bytes(p))
+        samples = group_samples(members)
+        txt = [s[1]["txt"] for s in samples]
+        yield (
+            d, d % 2, len(samples), len(members),
+            sum(len(t) for t in txt), max(len(t) for t in txt),
+            sum(int(s[1]["cls"]) for s in samples),
+            sum(sum(s[1]["bin"]) for s in samples),
+        )
 
-    blobs = docs.mapInPandas(encode, schema="doc_id long, payload binary")
-    return blobs.mapInPandas(
+    blobs = row_stage(docs, PAYLOAD, encode)
+    return row_stage(
+        blobs,
+        "doc_id long, gzipped long, n_samples long, n_members long,"
+        " txt_bytes long, max_txt_bytes long, cls_sum long, bin_byte_sum long",
         parse,
-        schema=(
-            "doc_id long, gzipped long, n_samples long, n_members long,"
-            " txt_bytes long, max_txt_bytes long, cls_sum long,"
-            " bin_byte_sum long"
-        ),
     )
 
 
@@ -317,7 +294,6 @@ def stream_tar_ingest(spark, sf_dir: str):
     oracle aggregates the member formulas over doc_id < TAR_DOC_CAP."""
     import os
 
-    import pandas as pd
     from pyspark.sql import functions as F
 
     from tinymapreduce_spark.sources.textfiles import SCRATCH
@@ -326,20 +302,13 @@ def stream_tar_ingest(spark, sf_dir: str):
     src = _ensure_tar_files(spark, sf_dir)
     blobs = binary_file_stream(spark, src, "*.tar.gz").select("content")
 
-    def parse(batches):
-        prime_worker()
-        for pdf in batches:
-            rows: dict[str, list] = {"doc_id": [], "tlen": [], "bsum": []}
-            for p in pdf["content"]:
-                for key, files in group_samples(parse_tar(bytes(p))):
-                    rows["doc_id"].append(int(key[:8]))
-                    rows["tlen"].append(len(files["txt"]))
-                    rows["bsum"].append(sum(files["bin"]))
-            yield pd.DataFrame(rows)
+    def parse(p):
+        for key, files in group_samples(parse_tar(bytes(p))):
+            yield int(key[:8]), len(files["txt"]), sum(files["bin"])
 
     out = "doc_id long, tlen long, bsum long"
     back = run_available_now(
-        blobs.mapInPandas(parse, schema=out),
+        row_stage(blobs, out, parse),
         os.path.join(SCRATCH, f"stream_{os.path.basename(src)}"),
         out,
     )
@@ -419,7 +388,6 @@ def wds_image_pipeline(spark, sf_dir: str):
     pixels never shuffle; per-class partial aggregation happens
     map-side. Exactly how a 100 TB labeled-image corpus computes class
     balance and per-class intensity stats."""
-    import pandas as pd
     from pyspark.sql import functions as F
 
     from tinymapreduce_spark.operators.multimodal import decode_image, encode_bmp
@@ -427,26 +395,14 @@ def wds_image_pipeline(spark, sf_dir: str):
 
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
-    def kernel(batches):
-        prime_worker()
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "label": [], "pixel_sum": [], "n_pixels": [], "width": [],
-            }
-            for d in pdf["doc_id"]:
-                d = int(d)
-                payload = write_tar(_wds_members(d, encode_bmp), gzipped=bool(d % 2))
-                for key, files in group_samples(parse_tar(payload)):
-                    w, h, px = decode_image(files["bmp"])
-                    flat = [v for row in px for t in row for v in t]
-                    rows["label"].append(int(files["cls"]))
-                    rows["pixel_sum"].append(sum(flat))
-                    rows["n_pixels"].append(w * h)
-                    rows["width"].append(w)
-            yield pd.DataFrame(rows)
+    def walk_and_decode(d):
+        payload = write_tar(_wds_members(d, encode_bmp), gzipped=bool(d % 2))
+        for key, files in group_samples(parse_tar(payload)):
+            w, h, px = decode_image(files["bmp"])
+            yield int(files["cls"]), sum(v for row in px for t in row for v in t), w * h, w
 
-    samples = docs.mapInPandas(
-        kernel, schema="label long, pixel_sum long, n_pixels long, width long"
+    samples = row_stage(
+        docs, "label long, pixel_sum long, n_pixels long, width long", walk_and_decode
     )
     return samples.groupBy("label").agg(
         F.count(F.lit(1)).alias("n_samples"),

@@ -31,7 +31,7 @@ import zlib
 
 from pyspark import cloudpickle
 
-from tinymapreduce_spark.pyworker import prime_worker
+from tinymapreduce_spark.pyworker import PAYLOAD, row_stage
 
 cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
@@ -165,47 +165,27 @@ def warc_ingest_stats(spark, sf_dir: str):
     Scale shape: identical to the codec rungs — (doc_id, payload)
     through two Arrow-batched kernels; at 100 TB this is the Common
     Crawl ingest front door (each .warc.gz shard parses row-locally)."""
-    import pandas as pd
-
     from tinymapreduce_spark.sources.loaders import documents_for_cpu
 
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
-    def encode(batches):
-        prime_worker()
-        for pdf in batches:
-            payloads = [
-                write_warc(_doc_records(int(d)), gzip_members=bool(int(d) % 2))
-                for d in pdf["doc_id"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def encode(d):
+        yield d, write_warc(_doc_records(d), gzip_members=bool(d % 2))
 
-    def parse(batches):
-        prime_worker()
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "gzipped": [], "n_records": [],
-                "n_responses": [], "response_bytes": [],
-                "max_response_bytes": [],
-            }
-            for d, p in zip(pdf["doc_id"], pdf["payload"]):
-                recs = parse_warc(bytes(p))
-                resp = [body for t, _, body in recs if t == "response"]
-                rows["doc_id"].append(d)
-                rows["gzipped"].append(int(d) % 2)
-                rows["n_records"].append(len(recs))
-                rows["n_responses"].append(len(resp))
-                rows["response_bytes"].append(sum(len(b) for b in resp))
-                rows["max_response_bytes"].append(max(len(b) for b in resp))
-            yield pd.DataFrame(rows)
+    def parse(d, p):
+        recs = parse_warc(bytes(p))
+        resp = [body for t, _, body in recs if t == "response"]
+        yield (
+            d, d % 2, len(recs), len(resp),
+            sum(len(b) for b in resp), max(len(b) for b in resp),
+        )
 
-    blobs = docs.mapInPandas(encode, schema="doc_id long, payload binary")
-    return blobs.mapInPandas(
+    blobs = row_stage(docs, PAYLOAD, encode)
+    return row_stage(
+        blobs,
+        "doc_id long, gzipped long, n_records long, n_responses long,"
+        " response_bytes long, max_response_bytes long",
         parse,
-        schema=(
-            "doc_id long, gzipped long, n_records long, n_responses long,"
-            " response_bytes long, max_response_bytes long"
-        ),
     )
 
 
@@ -264,7 +244,6 @@ def stream_warc_ingest(spark, sf_dir: str):
     doc_id < WARC_DOC_CAP."""
     import os
 
-    import pandas as pd
     from pyspark.sql import functions as F
 
     from tinymapreduce_spark.sources.textfiles import SCRATCH
@@ -273,23 +252,15 @@ def stream_warc_ingest(spark, sf_dir: str):
     src = _ensure_warc_files(spark, sf_dir)
     blobs = binary_file_stream(spark, src, "*.warc.gz").select("content")
 
-    def parse(batches):
-        prime_worker()
-        for pdf in batches:
-            rows: dict[str, list] = {"doc_id": [], "plen": []}
-            for p in pdf["content"]:
-                for wtype, headers, body in parse_warc(bytes(p)):
-                    if wtype != "response":
-                        continue
-                    # <urn:uuid:{doc:08d}-{r}> — doc embedded by the writer
-                    rid = headers["WARC-Record-ID"]
-                    rows["doc_id"].append(int(rid[10:18]))
-                    rows["plen"].append(len(body))
-            yield pd.DataFrame(rows)
+    def parse(p):
+        for wtype, headers, body in parse_warc(bytes(p)):
+            if wtype == "response":
+                # <urn:uuid:{doc:08d}-{r}> — doc embedded by the writer
+                yield int(headers["WARC-Record-ID"][10:18]), len(body)
 
     out = "doc_id long, plen long"
     back = run_available_now(
-        blobs.mapInPandas(parse, schema=out),
+        row_stage(blobs, out, parse),
         os.path.join(SCRATCH, f"stream_{os.path.basename(src)}"),
         out,
     )

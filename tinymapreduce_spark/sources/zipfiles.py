@@ -28,7 +28,7 @@ import sys
 from pyspark import cloudpickle
 
 from tinymapreduce_spark.functions.inflate import crc32, deflate_fixed, inflate
-from tinymapreduce_spark.pyworker import prime_worker
+from tinymapreduce_spark.pyworker import row_stage
 
 cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
@@ -139,44 +139,26 @@ def zip_shard_ingest(spark, sf_dir: str):
     EOCD scan, central/local cross-check, method-dispatch, inflate or
     CRC bug flips the hash. Row-local Arrow kernels — the codec-tier
     scale shape."""
-    import pandas as pd
-
     from tinymapreduce_spark.sources.loaders import documents_for_cpu
     from tinymapreduce_spark.sources.tarfiles import _doc_members, group_samples
 
     docs = documents_for_cpu(spark, sf_dir).select("doc_id")
 
-    def roundtrip(batches):
-        prime_worker()
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "n_samples": [], "n_members": [],
-                "n_deflated": [], "txt_bytes": [], "cls_sum": [],
-                "bin_byte_sum": [],
-            }
-            for d in pdf["doc_id"]:
-                d = int(d)
-                members = parse_zip(write_zip(_doc_members(d)))
-                samples = group_samples(members)
-                rows["doc_id"].append(d)
-                rows["n_samples"].append(len(samples))
-                rows["n_members"].append(len(members))
-                rows["n_deflated"].append(len(members) // 2)
-                rows["txt_bytes"].append(
-                    sum(len(s[1]["txt"]) for s in samples)
-                )
-                rows["cls_sum"].append(sum(int(s[1]["cls"]) for s in samples))
-                rows["bin_byte_sum"].append(
-                    sum(sum(s[1]["bin"]) for s in samples)
-                )
-            yield pd.DataFrame(rows)
+    def roundtrip(d):
+        members = parse_zip(write_zip(_doc_members(d)))
+        samples = group_samples(members)
+        yield (
+            d, len(samples), len(members), len(members) // 2,
+            sum(len(s[1]["txt"]) for s in samples),
+            sum(int(s[1]["cls"]) for s in samples),
+            sum(sum(s[1]["bin"]) for s in samples),
+        )
 
-    return docs.mapInPandas(
+    return row_stage(
+        docs,
+        "doc_id long, n_samples long, n_members long, n_deflated long,"
+        " txt_bytes long, cls_sum long, bin_byte_sum long",
         roundtrip,
-        schema=(
-            "doc_id long, n_samples long, n_members long, n_deflated long,"
-            " txt_bytes long, cls_sum long, bin_byte_sum long"
-        ),
     )
 
 

@@ -63,7 +63,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tinymapreduce_spark.operators.multimodal import BINFILE_CAP as _BINFILE_CAP
-from tinymapreduce_spark.pyworker import prime_worker
+from tinymapreduce_spark.pyworker import row_stage
 from tinymapreduce_spark.session import materialize
 from tinymapreduce_spark.sources.loaders import (
     documents_for_cpu,
@@ -375,7 +375,7 @@ def stream_binary_files_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental MULTIMODAL ingest — the autoloader shape every image
     pipeline schedules: a streaming ``binaryFile`` read over the .bmp
     corpus directory, the real BMP decode running INSIDE the stream as
-    an Arrow-batched mapInPandas, and an append-only parquet sink under
+    an Arrow-batched per-row stage, and an append-only parquet sink under
     Trigger.AvailableNow (``run_available_now``; idempotent on re-run).
     The checkpoint is named by the .bmp dir's own name, which
     ``_ensure_bmp_files`` keys by corpus identity, so the file index
@@ -392,24 +392,13 @@ def stream_binary_files_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         "content",
     )
 
-    def decode(batches):
-        prime_worker()
-        import pandas as pd
-
-        for pdf in batches:
-            rows: dict[str, list] = {"doc_id": [], "pixel_sum": [], "n_px": []}
-            for d, p in zip(pdf["doc_id"], pdf["content"]):
-                w, h, px = decode_image(bytes(p))
-                rows["doc_id"].append(d)
-                rows["pixel_sum"].append(
-                    sum(v for row in px for bgr in row for v in bgr)
-                )
-                rows["n_px"].append(w * h)
-            yield pd.DataFrame(rows)
+    def decode(d, p):
+        w, h, px = decode_image(bytes(p))
+        yield d, sum(v for row in px for bgr in row for v in bgr), w * h
 
     out = "doc_id long, pixel_sum long, n_px long"
     back = run_available_now(
-        blobs.mapInPandas(decode, schema=out),
+        row_stage(blobs, out, decode),
         os.path.join(SCRATCH, f"stream_{os.path.basename(src)}"),
         out,
     )

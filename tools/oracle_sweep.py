@@ -1,14 +1,16 @@
 """Full-registry DuckDB-oracle sweep (the verify-skill recipe, scripted).
 
-Run from a FOREIGN cwd: cd /tmp && python /root/repo/tools/oracle_sweep.py [sf_dir] [key ...]
-Prints one line per key: <name> MATCH|MISMATCH|ERROR <rows>.
+Run from a FOREIGN cwd: cd /tmp && python <repo>/tools/oracle_sweep.py [sf_dir] [key ...]
+Sweeps the checkout this file lives in. Prints one line per key:
+<name> MATCH|MISMATCH|ERROR <rows>.
 """
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
 

@@ -470,6 +470,7 @@ def _skew_probe_join(spark, sf_dir: str, salted: bool):
     from pyspark.sql import functions as F
 
     from tinymapreduce_spark.plans.layout import SALT_BUCKETS
+    from tinymapreduce_spark.session import materialize
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     # materialize the (51-row) dim: in the registered query the agg is
@@ -478,11 +479,7 @@ def _skew_probe_join(spark, sf_dir: str, salted: bool):
     # the dim's exchange and the join defeats it, so the AQE leg would
     # silently measure nothing. A checkpointed dim is also the realistic
     # shape (dims are tables, not inline subqueries, in a real pipeline).
-    dim = (
-        ev.groupBy("event_type")
-        .agg(F.avg("value").alias("type_avg"))
-        .localCheckpoint(eager=True)
-    )
+    dim = materialize(ev.groupBy("event_type").agg(F.avg("value").alias("type_avg")))
     if salted:
         big = ev.withColumn(
             "salt",
